@@ -12,19 +12,17 @@ import org.apache.spark.sql.functions._
   * attributed against.
   *
   * Protocol (identical to the suite's serving lane, PLANS.md): one OLS
-  * fit on the 9-feature PredictRequest fixture, 200 warm-up calls
-  * (C2-steady: 20 calls left the predict path mid-compilation and read
-  * 28 ms where steady state is ~17-20 — r15 A/B), then `windows`
-  * independent 100-call timed windows. Reporting p50/p95 per window
+  * fit on the 9-feature PredictRequest fixture, [[WarmupCalls]] warm-up
+  * calls, then `windows` independent [[TimedCalls]]-call timed windows.
+  * `predict` on the compiled OLS is µs-scale, so a window takes
+  * thousands of calls for a stable p95. Reporting p50/p95 per window
   * plus the cross-window median-of-p50s as the quotable number.
   */
 object ServingBench {
 
-  /** Build the fixture, fit, and return `timed` single-call latencies
-    * (ms) after `warmup` unmeasured calls. Shared by [[Bench]]'s
-    * serving lane and this dedicated main so the two artifacts measure
-    * the same code path by construction.
-    */
+  val WarmupCalls = 2000
+  val TimedCalls = 2000
+
   /** Shared fixture: OLS fit on the 9-feature PredictRequest shape. */
   def fixture(spark: SparkSession): (pipelines.ServingPipeline.Registry,
       pipelines.ServingPipeline.PredictRequest) = {
@@ -42,6 +40,11 @@ object ServingBench {
         0.5, 0.87, 0.78, 0.62, 0.1, 0.99, 100.0, 110.0, 95.0))
   }
 
+  /** Build the fixture, fit, and return `timed` single-call latencies
+    * (ms) after `warmup` unmeasured calls. Shared by [[Bench]]'s
+    * serving lane and this dedicated main so the two artifacts measure
+    * the same code path by construction.
+    */
   def measure(spark: SparkSession, warmup: Int, timed: Int): Seq[Double] = {
     val (reg, req) = fixture(spark)
     def call(): Double =
@@ -55,21 +58,16 @@ object ServingBench {
     }
   }
 
-  /** The local-vector fast path ([[pipelines.ServingPipeline.predictLocal]])
-    * under the same per-call protocol — no DataFrame, no job; expected
-    * µs-scale, reported in ms for artifact parity.
+  /** The order statistic both serving artifacts report: index
+    * p·n/100 − 1 when p·n divides evenly, else p·n/100. [[Bench]] and
+    * [[main]] must report the SAME statistic or a phantom one-index gap
+    * reads as drift between them.
     */
-  def measureLocal(spark: SparkSession, warmup: Int, timed: Int): Seq[Double] = {
-    val (reg, req) = fixture(spark)
-    def call(): Double =
-      pipelines.ServingPipeline.predictLocal(reg, "ols", req,
-        expm1Inverse = false)
-    (1 to warmup).foreach(_ => call())
-    (1 to timed).map { _ =>
-      val t0 = System.nanoTime()
-      call()
-      (System.nanoTime() - t0) / 1e6
-    }
+  def percentile(xs: Seq[Double], p: Int): Double = {
+    val s = xs.sorted
+    val scaled = p * s.length
+    val idx = if (scaled % 100 == 0) scaled / 100 - 1 else scaled / 100
+    s(math.max(0, math.min(s.length - 1, idx)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -83,38 +81,19 @@ object ServingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Same order statistic as Bench's serving lane (lats(49)/lats(94)
-    // on 100 samples): index p·n/100 − 1 when p·n divides evenly —
-    // the two artifacts must report the SAME statistic or a phantom
-    // one-index gap reads as drift between them.
-    def pct(xs: Seq[Double], p: Int, scale: Double = 100): Double = {
-      val s = xs.sorted
-      val scaled = p * s.length
-      val idx = if (scaled % 100 == 0) scaled / 100 - 1 else scaled / 100
-      math.rint(s(math.max(0, math.min(s.length - 1, idx))) * scale) / scale
-    }
+    // µs-scale calls: 4 decimal places (0.1 µs)
+    def ms(x: Double) = math.rint(x * 1e4) / 1e4
     val perWindow = (1 to windows).map { _ =>
-      val lats = measure(spark, warmup = 200, timed = 100)
-      (pct(lats, 50), pct(lats, 95))
+      val lats = measure(spark, warmup = WarmupCalls, timed = TimedCalls)
+      (ms(percentile(lats, 50)), ms(percentile(lats, 95)))
     }
     val p50s = perWindow.map(_._1).sorted
     val med = p50s((p50s.length - 1) / 2)
-    // local-vector fast path: µs-scale, so 4 decimal places and 2000
-    // timed calls per window; same order statistic, finer rounding
-    val perWindowLocal = (1 to windows).map { _ =>
-      val lats = measureLocal(spark, warmup = 2000, timed = 2000)
-      (pct(lats, 50, scale = 1e4), pct(lats, 95, scale = 1e4))
-    }
-    val lp50s = perWindowLocal.map(_._1).sorted
-    val lmed = lp50s((lp50s.length - 1) / 2)
     val line =
       s"""{"metric":"serving_p50_ms","value":$med,"unit":"ms","windows":${
         perWindow.map { case (a, b) => s"""{"p50":$a,"p95":$b}""" }
           .mkString("[", ",", "]")
-      },"local_p50_ms":$lmed,"local_windows":${
-        perWindowLocal.map { case (a, b) => s"""{"p50":$a,"p95":$b}""" }
-          .mkString("[", ",", "]")
-      },"warmup_calls":200,"timed_calls":100,"local_warmup_calls":2000,"local_timed_calls":2000,"heap_max_mb":${
+      },"warmup_calls":$WarmupCalls,"timed_calls":$TimedCalls,"heap_max_mb":${
         Runtime.getRuntime.maxMemory() / (1024 * 1024)}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes("UTF-8"))

@@ -8,11 +8,27 @@ import org.apache.spark.sql.functions._
 
 /** E2 — the reference's `/predict` serving path (main.py:278-310,
   * SURVEY.md §3 E2): a fixed 9-field request row → model registry
-  * dispatch → single-row transform → expm1 inverse.
+  * dispatch → prediction → expm1 inverse.
   *
-  * The registry is an eagerly-loaded name→Transformer map (the
-  * reference's lazy double-checked GCS hydration collapses to a startup
-  * load — same capability, SURVEY.md §4).
+  * The registry is an eagerly-loaded name→model map (the reference's
+  * lazy double-checked GCS hydration collapses to a startup load — same
+  * capability, SURVEY.md §4). Registration compiles each model once:
+  *
+  *  - A `PipelineModel` whose stages are exactly one `VectorAssembler`
+  *    over PredictRequest fields feeding one `PredictionModel` (the
+  *    [[graft.ml.Models]] factories) compiles to an in-process scorer.
+  *    It replays the assembler — field order, the vector it builds and
+  *    its `handleInvalid` — and calls the fitted model's public
+  *    `predict(Vector)`, the same call `transform` makes per row. A
+  *    request then builds no DataFrame, runs no Catalyst analysis,
+  *    optimisation or planning, and launches no Spark job (SURVEY §3
+  *    E2's "`predict` on a local vector for latency"); for a 1-row request
+  *    that planning is nearly the whole cost.
+  *  - Any other model (a scaler or other stage between assembler and
+  *    predictor, chained assemblers, a bare predictor) keeps the 1-row
+  *    DataFrame path: request → `transform` → first prediction.
+  *
+  * The choice is made at registration from the model's stages alone.
   */
 object ServingPipeline {
 
@@ -22,103 +38,103 @@ object ServingPipeline {
     month_sin: Double, month_cos: Double,
     vol_lag_1: Double, vol_roll_3: Double, vol_roll_24: Double)
 
-  /** name → fitted model registry (M7). */
-  final class Registry(models: Map[String, Transformer]) {
-    def apply(name: String): Transformer =
-      models.getOrElse(name,
+  /** PredictRequest field accessors by column name. */
+  private val RequestFields: Map[String, PredictRequest => Double] = Map(
+    "hour_sin" -> (_.hour_sin), "hour_cos" -> (_.hour_cos),
+    "wd_sin" -> (_.wd_sin), "wd_cos" -> (_.wd_cos),
+    "month_sin" -> (_.month_sin), "month_cos" -> (_.month_cos),
+    "vol_lag_1" -> (_.vol_lag_1), "vol_roll_3" -> (_.vol_roll_3),
+    "vol_roll_24" -> (_.vol_roll_24))
+
+  /** A registered model as [[predict]] serves it. */
+  private sealed trait Scorer { def model: Transformer }
+
+  /** A VectorAssembler → PredictionModel pipeline replayed in process:
+    * the assembler's input fields resolved once, in its order.
+    */
+  private final class Compiled(name: String, val model: PipelineModel,
+      assembler: VectorAssembler, predictor: PredictionModel[Vector, _]) extends Scorer {
+    private val fields = assembler.getInputCols
+    private val getters = fields.map(RequestFields)
+    private val keepInvalid = assembler.getHandleInvalid == "keep"
+
+    /** The assembler's own vector for `req` — NaN handled per its
+      * `handleInvalid`, -0.0 held as 0.0, dense or sparse as `compressed`
+      * picks — scored by the fitted model. A plain loop: a server may
+      * call this only a few hundred times before the JIT compiles it,
+      * and generic collection calls cost far more while interpreted.
+      */
+    def score(req: PredictRequest): Double = {
+      val values = new Array[Double](getters.length)
+      var i = 0
+      while (i < values.length) {
+        val v = getters(i)(req)
+        if (v.isNaN && !keepInvalid) throw new IllegalArgumentException(
+          s"model '$name': request field '${fields(i)}' is NaN and the model's " +
+            s"assembler (handleInvalid = ${assembler.getHandleInvalid}) does not score it")
+        values(i) = if (v == 0.0) 0.0 else v
+        i += 1
+      }
+      predictor.predict(Vectors.dense(values).compressed)
+    }
+  }
+
+  /** A model the in-process scorer cannot replay: served by `transform`. */
+  private final case class ViaTransform(model: Transformer) extends Scorer
+
+  private def compile(name: String, model: Transformer): Scorer = model match {
+    case p: PipelineModel => p.stages match {
+      case Array(va: VectorAssembler, pm: PredictionModel[Vector @unchecked, _])
+          if va.getOutputCol == pm.getFeaturesCol &&
+            va.getInputCols.forall(RequestFields.contains) =>
+        new Compiled(name, p, va, pm)
+      case _ => ViaTransform(model)
+    }
+    case _ => ViaTransform(model)
+  }
+
+  /** name → fitted model registry (M7), each model compiled once. */
+  final class Registry private[ServingPipeline] (scorers: Map[String, Scorer]) {
+    private[ServingPipeline] def scorer(name: String): Scorer =
+      scorers.getOrElse(name,
         throw new NoSuchElementException(s"unknown model '$name'"))
-    def names: Set[String] = models.keySet
+    def apply(name: String): Transformer = scorer(name).model
+    def names: Set[String] = scorers.keySet
   }
 
   def registry(models: (String, Transformer)*): Registry =
-    new Registry(models.toMap)
+    new Registry(models.map { case (n, m) => n -> compile(n, m) }.toMap)
 
-  /** One prediction: request → 1-row DataFrame → transform → first
-    * prediction, expm1-inverted when the model was trained on log1p
-    * (main.py:305-309). The 1-row DataFrame path keeps serving identical
-    * to batch semantics; latency-critical callers can reuse the same
-    * Transformer on micro-batched request groups.
+  /** One prediction, expm1-inverted when the model was trained on log1p
+    * (main.py:305-309): the compiled scorer, or for a model it cannot
+    * replay, a 1-row DataFrame through `transform`. A request the
+    * model's assembler would drop (a NaN feature under `skip`) is
+    * rejected with an IllegalArgumentException on either path.
     */
   def predict(spark: SparkSession, reg: Registry, modelName: String,
       req: PredictRequest, expm1Inverse: Boolean = false): Double = {
-    import spark.implicits._
-    val df = Seq(req).toDF()
-    val scored = reg(modelName).transform(df)
-    val raw = scored.select(col("prediction")).head().getDouble(0)
+    val raw = reg.scorer(modelName) match {
+      case c: Compiled => c.score(req)
+      case ViaTransform(model) =>
+        import spark.implicits._
+        model.transform(Seq(req).toDF()).select(col("prediction")).take(1)
+          .headOption.map(_.getDouble(0)).getOrElse(throw new IllegalArgumentException(
+            s"model '$modelName' dropped the request row: $req"))
+    }
     if (expm1Inverse) math.expm1(raw) else raw
   }
 
-  /** PredictRequest fields in declaration order — the assembly order
-    * [[predict]]'s 1-row DataFrame presents to a VectorAssembler that
-    * lists the canonical nine names.
-    */
-  private val RequestFields = Seq("hour_sin", "hour_cos", "wd_sin",
-    "wd_cos", "month_sin", "month_cos", "vol_lag_1", "vol_roll_3",
-    "vol_roll_24")
-
-  private def requestValue(req: PredictRequest, field: String): Double =
-    field match {
-      case "hour_sin" => req.hour_sin
-      case "hour_cos" => req.hour_cos
-      case "wd_sin" => req.wd_sin
-      case "wd_cos" => req.wd_cos
-      case "month_sin" => req.month_sin
-      case "month_cos" => req.month_cos
-      case "vol_lag_1" => req.vol_lag_1
-      case "vol_roll_3" => req.vol_roll_3
-      case "vol_roll_24" => req.vol_roll_24
-      case other => throw new IllegalArgumentException(
-        s"model expects feature column '$other' not present on PredictRequest")
-    }
-
-  /** Sub-millisecond serving fast path (SURVEY §3 E2's "`predict` on a
-    * local vector for latency"): assemble the nine request doubles
-    * driver-side into an `ml.linalg.Vector` and call the fitted model's
-    * public `predict(Vector)` directly — no DataFrame, no Catalyst
-    * planning, no Spark job. Identical prediction to [[predict]] by
-    * construction (pinned in PipelinesSpec): the assembly replays the
-    * model's own VectorAssembler input order, and the scalar `predict`
-    * is the same code `transform` applies per row.
-    *
-    * Supported registry shapes: a bare `PredictionModel[Vector, _]`, or
-    * a `PipelineModel` whose stages are VectorAssemblers plus exactly
-    * one PredictionModel (the [[graft.ml.Models]] factories). Anything
-    * else (custom transform stages whose semantics the driver-side
-    * assembly cannot replay) is refused — use [[predict]].
+  /** [[predict]] without a session, for compiled models only; a model
+    * served through `transform` is refused — use [[predict]].
     */
   def predictLocal(reg: Registry, modelName: String, req: PredictRequest,
       expm1Inverse: Boolean = false): Double = {
-    val raw = reg(modelName) match {
-      case pm: PredictionModel[Vector @unchecked, _] =>
-        pm.predict(Vectors.dense(RequestFields.map(requestValue(req, _)).toArray))
-      case p: PipelineModel =>
-        val predictor = p.stages.reverse.collectFirst {
-          case m: PredictionModel[Vector @unchecked, _] => m
-        }.getOrElse(throw new IllegalArgumentException(
-          s"model '$modelName' has no PredictionModel stage — use predict()"))
-        require(p.stages.forall(s =>
-            (s eq predictor) || s.isInstanceOf[VectorAssembler]),
-          s"predictLocal supports VectorAssembler+PredictionModel pipelines " +
-            s"only; model '$modelName' has other stages — use predict()")
-        // Exactly ONE assembler, and it must feed the predictor: with
-        // chained assemblers (VA1(a,b→v1), VA2(v1,c→features)) the
-        // first stage's inputCols would silently build a wrong-order/
-        // wrong-dimension vector — refuse those shapes instead.
-        val assemblers = p.stages.collect { case va: VectorAssembler => va }
-        require(assemblers.size <= 1,
-          s"predictLocal cannot replay chained VectorAssemblers; " +
-            s"model '$modelName' has ${assemblers.size} — use predict()")
-        require(assemblers.headOption.forall(
-            _.getOutputCol == predictor.getFeaturesCol),
-          s"model '$modelName': assembler output '" +
-            assemblers.head.getOutputCol + "' does not feed the " +
-            s"predictor's featuresCol '${predictor.getFeaturesCol}' — use predict()")
-        val order = assemblers.headOption.map(_.getInputCols.toSeq)
-          .getOrElse(RequestFields)
-        predictor.predict(Vectors.dense(order.map(requestValue(req, _)).toArray))
-      case other => throw new IllegalArgumentException(
-        s"model '$modelName' (${other.getClass.getSimpleName}) has no " +
-          "local predict path — use predict()")
+    val raw = reg.scorer(modelName) match {
+      case c: Compiled => c.score(req)
+      case ViaTransform(model) => throw new IllegalArgumentException(
+        s"model '$modelName' (${model.getClass.getSimpleName}) is not one " +
+          "VectorAssembler feeding one PredictionModel, so it has no local " +
+          "scorer — use predict()")
     }
     if (expm1Inverse) math.expm1(raw) else raw
   }

@@ -1,6 +1,16 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ml.{Pipeline, PipelineModel, Transformer}
+import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.regression.LinearRegression
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.Models
@@ -133,56 +143,175 @@ class PipelinesSpec extends AnyFunSuite {
     assert(res.mae > 0)
   }
 
-  test("E2 serving: registry dispatch + single-row predict") {
-    val df = (0 until 500).map { i =>
-      val r = ServingPipeline.PredictRequest(
-        math.sin(i), math.cos(i), math.sin(i / 7.0), math.cos(i / 7.0),
-        math.sin(i / 12.0), math.cos(i / 12.0),
-        (i % 50).toDouble, (i % 30).toDouble, (i % 20).toDouble)
-      (r, math.log1p(2.0 * (i % 50) + (i % 30) + 1.0))
-    }.toDF("req", "label").select(col("req.*"), col("label"))
-    val cols = Seq("hour_sin", "hour_cos", "wd_sin", "wd_cos", "month_sin",
-      "month_cos", "vol_lag_1", "vol_roll_3", "vol_roll_24")
-    val model = Models.ols(cols, "label").fit(df)
-    val reg = ServingPipeline.registry("linear" -> model)
+  /** 500 request rows with a log1p label — the E2 training fixture. */
+  private lazy val serveTrain = (0 until 500).map { i =>
+    val r = ServingPipeline.PredictRequest(
+      math.sin(i), math.cos(i), math.sin(i / 7.0), math.cos(i / 7.0),
+      math.sin(i / 12.0), math.cos(i / 12.0),
+      (i % 50).toDouble, (i % 30).toDouble, (i % 20).toDouble)
+    (r, math.log1p(2.0 * (i % 50) + (i % 30) + 1.0))
+  }.toDF("req", "label").select(col("req.*"), col("label"))
+  private val serveCols = Seq("hour_sin", "hour_cos", "wd_sin", "wd_cos", "month_sin",
+    "month_cos", "vol_lag_1", "vol_roll_3", "vol_roll_24")
+  private lazy val serveOls = Models.ols(serveCols, "label").fit(serveTrain)
 
+  /** The batch reference: `transform` on a 1-row DataFrame of the request. */
+  private def viaTransform(model: Transformer, req: ServingPipeline.PredictRequest,
+      expm1Inverse: Boolean): Double = {
+    val raw = model.transform(Seq(req).toDF()).select("prediction").head().getDouble(0)
+    if (expm1Inverse) math.expm1(raw) else raw
+  }
+
+  /** Bit pattern: equality that tells -0.0 from 0.0 and matches NaN. */
+  private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+
+  /** Copy of `model` with its assembler's `handleInvalid` set to `mode`. */
+  private def withHandleInvalid(model: PipelineModel, mode: String): PipelineModel = {
+    val m = model.copy(ParamMap.empty)
+    m.stages.head.asInstanceOf[VectorAssembler].setHandleInvalid(mode)
+    m
+  }
+
+  /** A pipeline the in-process scorer cannot replay: a StandardScaler
+    * between the assembler and the predictor.
+    */
+  private lazy val serveScaled = new Pipeline().setStages(Array(
+    new VectorAssembler().setInputCols(serveCols.toArray).setOutputCol("raw")
+      .setHandleInvalid("skip"),
+    new StandardScaler().setInputCol("raw").setOutputCol("features"),
+    new LinearRegression().setLabelCol("label").setSolver("normal"))).fit(serveTrain)
+
+  test("E2 serving: registry dispatch + single-row predict") {
+    val reg = ServingPipeline.registry("linear" -> serveOls)
     val pred = ServingPipeline.predict(spark, reg, "linear",
       ServingPipeline.PredictRequest(0.5, 0.5, 0.1, 0.9, 0.2, 0.8, 25.0, 15.0, 10.0),
       expm1Inverse = true)
     assert(pred > 0 && !pred.isNaN)
-    assertThrows[NoSuchElementException] {
-      ServingPipeline.predict(spark, reg, "nope",
-        ServingPipeline.PredictRequest(0, 0, 0, 0, 0, 0, 0, 0, 0))
-    }
+    assert(reg.names == Set("linear") && (reg("linear") eq serveOls))
+    val req = ServingPipeline.PredictRequest(0, 0, 0, 0, 0, 0, 0, 0, 0)
+    assertThrows[NoSuchElementException](ServingPipeline.predict(spark, reg, "nope", req))
+    assertThrows[NoSuchElementException](ServingPipeline.predictLocal(reg, "nope", req))
   }
 
   test("E2 serving: local-vector fast path matches the DataFrame path exactly") {
-    val df = (0 until 500).map { i =>
-      val r = ServingPipeline.PredictRequest(
-        math.sin(i), math.cos(i), math.sin(i / 7.0), math.cos(i / 7.0),
-        math.sin(i / 12.0), math.cos(i / 12.0),
-        (i % 50).toDouble, (i % 30).toDouble, (i % 20).toDouble)
-      (r, math.log1p(2.0 * (i % 50) + (i % 30) + 1.0))
-    }.toDF("req", "label").select(col("req.*"), col("label"))
-    val cols = Seq("hour_sin", "hour_cos", "wd_sin", "wd_cos", "month_sin",
-      "month_cos", "vol_lag_1", "vol_roll_3", "vol_roll_24")
-    // linear AND a tree ensemble — the two model families the registry
-    // actually serves; both must agree bit-for-bit with transform()
-    val ols = Models.ols(cols, "label").fit(df)
-    val gbt = Models.gbt(cols, "label", maxIter = 5, maxDepth = 3).fit(df)
-    val reg = ServingPipeline.registry("linear" -> ols, "gbt" -> gbt)
+    // the three reference regressors; both entry points must agree
+    // bit-for-bit with a batch transform of the same row
+    val gbt = Models.gbt(serveCols, "label", maxIter = 5, maxDepth = 3).fit(serveTrain)
+    val rf = Models.randomForest(serveCols, "label", numTrees = 10, maxDepth = 5)
+      .fit(serveTrain)
+    val models = Seq("linear" -> serveOls, "gbt" -> gbt, "rf" -> rf)
+    val reg = ServingPipeline.registry(models: _*)
     val reqs = Seq(
       ServingPipeline.PredictRequest(0.5, 0.5, 0.1, 0.9, 0.2, 0.8, 25.0, 15.0, 10.0),
       ServingPipeline.PredictRequest(-0.7, 0.3, 0.99, -0.1, 0.0, 1.0, 49.0, 29.0, 19.0),
+      // mostly zeros: the assembler emits a sparse vector
+      ServingPipeline.PredictRequest(0.3, 0, 0.7, -0.0, 0, 0, 49.0, 29.0, 0),
+      ServingPipeline.PredictRequest(0, 1.0, 0, 0, -0.0, 0, 25.0, 0, 0),
       ServingPipeline.PredictRequest(0, 0, 0, 0, 0, 0, 0, 0, 0))
-    for (name <- Seq("linear", "gbt"); req <- reqs; inv <- Seq(false, true)) {
-      val viaDf = ServingPipeline.predict(spark, reg, name, req, inv)
+    for ((name, model) <- models; req <- reqs; inv <- Seq(false, true)) {
+      val ref = viaTransform(model, req, inv)
+      val served = ServingPipeline.predict(spark, reg, name, req, inv)
       val local = ServingPipeline.predictLocal(reg, name, req, inv)
-      assert(local == viaDf,
-        s"$name local=$local df=$viaDf for $req expm1=$inv")
+      assert(bits(served) == bits(ref) && bits(local) == bits(ref),
+        s"$name predict=$served predictLocal=$local transform=$ref for $req expm1=$inv")
     }
-    assertThrows[NoSuchElementException] {
-      ServingPipeline.predictLocal(reg, "nope", reqs.head)
+  }
+
+  test("E2 serving: a NaN feature gets the same answer from both entry points") {
+    val req = ServingPipeline.PredictRequest(0.5, 0.5, Double.NaN, 0.9, 0.2, 0.8, 25.0, 15.0, 10.0)
+    // skip (the Models default) drops the row in transform, error throws
+    // there: both entry points reject the request, naming the field
+    for (mode <- Seq("skip", "error")) {
+      val reg = ServingPipeline.registry("m" -> withHandleInvalid(serveOls, mode))
+      for (call <- Seq(() => ServingPipeline.predict(spark, reg, "m", req),
+          () => ServingPipeline.predictLocal(reg, "m", req))) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("'wd_sin'") && e.getMessage.contains(mode), e.getMessage)
+      }
+    }
+    // keep scores it, as transform does
+    val keep = withHandleInvalid(serveOls, "keep")
+    val reg = ServingPipeline.registry("m" -> keep)
+    val ref = viaTransform(keep, req, expm1Inverse = false)
+    for (v <- Seq(ServingPipeline.predict(spark, reg, "m", req),
+        ServingPipeline.predictLocal(reg, "m", req)))
+      assert(bits(v) == bits(ref), s"keep: served $v, transform $ref")
+    // a model served through transform rejects the dropped row the same way
+    val scaled = ServingPipeline.registry("scaled" -> serveScaled)
+    intercept[IllegalArgumentException](ServingPipeline.predict(spark, scaled, "scaled", req))
+  }
+
+  test("E2 serving: a pipeline the scorer cannot replay is served through transform") {
+    val reg = ServingPipeline.registry("scaled" -> serveScaled)
+    val req = ServingPipeline.PredictRequest(-0.7, 0.3, 0.99, -0.1, 0.0, 1.0, 49.0, 29.0, 19.0)
+    for (inv <- Seq(false, true))
+      assert(bits(ServingPipeline.predict(spark, reg, "scaled", req, inv)) ==
+        bits(viaTransform(serveScaled, req, inv)))
+    val e = intercept[IllegalArgumentException](ServingPipeline.predictLocal(reg, "scaled", req))
+    assert(e.getMessage.contains("use predict()"))
+  }
+
+  test("E2 serving: a compiled predict plans no query and launches no job") {
+    // Counts, not timings: a later edit that puts Catalyst back on the
+    // request path shows up here as query executions. Queries are those
+    // of a private session; jobs those submitted under this thread's tag.
+    val session = spark.newSession()
+    val sc = spark.sparkContext
+    val Key = "graft.test.serving"
+    val queries = new AtomicInteger
+    val jobs = new AtomicInteger
+    val markers = new LinkedBlockingQueue[String]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Key))).foreach { tag =>
+          if (tag.startsWith("marker_")) markers.put(s"job $tag") else jobs.incrementAndGet()
+        }
+    }
+    val queryListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.output.map(_.name).find(_.startsWith("marker_")) match {
+          case Some(m) => markers.put(s"query $m")
+          case None => queries.incrementAndGet()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        queries.incrementAndGet()
+    }
+    /** (query executions, jobs) of 100 calls of `f`. A marker query and
+      * job follow them; listener events arrive in order, so once both
+      * markers are in, every event of the calls is counted.
+      */
+    def counted(tag: String)(f: => Double): (Int, Int) = {
+      queries.set(0)
+      jobs.set(0)
+      try {
+        sc.setLocalProperty(Key, tag)
+        (1 to 100).foreach(_ => f)
+        val marker = s"marker_$tag"
+        sc.setLocalProperty(Key, marker)
+        session.range(1).selectExpr(s"id AS $marker").collect()
+        val want = Set(s"job $marker", s"query $marker")
+        val got = Iterator.continually(markers.poll(60, TimeUnit.SECONDS))
+          .take(2).toSet
+        assert(got == want, s"listener markers $got, expected $want")
+      } finally sc.setLocalProperty(Key, null)
+      (queries.get, jobs.get)
+    }
+    sc.addSparkListener(jobListener)
+    session.listenerManager.register(queryListener)
+    try {
+      val reg = ServingPipeline.registry("linear" -> serveOls, "scaled" -> serveScaled)
+      val req = ServingPipeline.PredictRequest(0.5, 0.5, 0.1, 0.9, 0.2, 0.8, 25.0, 15.0, 10.0)
+      assert(counted("compiled")(ServingPipeline.predict(session, reg, "linear", req)) == ((0, 0)))
+      val (fallbackQueries, _) =
+        counted("fallback")(ServingPipeline.predict(session, reg, "scaled", req))
+      // The 1-row fallback plans a query per request but launches no
+      // job either: the optimizer folds a transform over a local relation
+      // into a local relation, so planning is its whole cost. The job
+      // listener's positive control is the marker job each count awaits.
+      assert(fallbackQueries >= 100, s"fallback: $fallbackQueries query executions")
+    } finally {
+      session.listenerManager.unregister(queryListener)
+      sc.removeSparkListener(jobListener)
     }
   }
 
