@@ -248,16 +248,6 @@ object Bench {
       .filter(p => p.getType == java.lang.management.MemoryType.HEAP && p.isValid)
   }
 
-  /** Median wall seconds over the SUCCESSFUL executions of `run` (first
-    * successful result kept). A rep that throws contributes no timing —
-    * otherwise a regression that makes a query fail fast would report a
-    * plausible-looking (fast) median with no error signal. If every rep
-    * fails the median is -1 and the first error message is returned so
-    * main() can surface it in the emitted JSON.
-    */
-  private def timeMedian[A](reps: Int)(run: => A): Timed[A] =
-    timeAdaptive(reps, reps)(run)
-
   /** Session-wide floor of the chase mini-probe (memory latency, the
     * probe that historically moves in degraded windows). The floor is
     * the machine's healthy reading; a pre-rep reading ≫ floor means the
@@ -369,8 +359,15 @@ object Bench {
     timeAdaptive(reps, reps, gateOnChase = true, trimMax = true,
       preRep = preRep)(run)
 
-  /** Like [[timeMedian]], but a query whose FIRST successful rep comes
-    * in under `cheapCutoffSec` stops after `cheapReps` total reps.
+  /** Median wall seconds over the SUCCESSFUL executions of `run` (first
+    * successful result kept). A rep that throws contributes no timing —
+    * otherwise a regression that makes a query fail fast would report a
+    * plausible-looking (fast) median with no error signal. If every rep
+    * fails the median is -1 and the first error message is returned so
+    * main() can surface it in the emitted JSON.
+    *
+    * A query whose FIRST successful rep comes in under `cheapCutoffSec`
+    * stops after `cheapReps` total reps.
     * Sub-second queries don't need a 3-rep middle median — their
     * round-over-round signal is binary (still sub-second or not) — and
     * the reps they skip are exactly the suite wall-time that pushed the
@@ -554,28 +551,13 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // 3 reps so the flagship reports a true middle median — with 2 the
     // "median" is just the faster run, and round-over-round flagship
     // numbers swung ±35% on identical code (r3: 14.4 s, r4 pre-fix:
     // 19.3 s).
     val e1Reps = sys.env.getOrElse("SPARK_GRAFT_E1_REPS", "5").toInt
-    // SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v Spark confs for
-    // config A/B experiments (e.g. "spark.sql.adaptive.enabled=false").
-    // Unset → the production defaults below; the driver never sets it.
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.SortThroughProject.install(spark)
+    val spark = GraftSession.local()
 
     // Isolation between measurements: a few operators eagerly
     // localCheckpoint compact intermediates (lineage discipline); each
@@ -673,18 +655,8 @@ object Bench {
         chunkSpanHours: Option[Long] = None, hours: Int = nHours): Long = {
       val traffic = pipelines.DomainFixtures.traffic(spark, hours, rowsPerHour)
       val weather = pipelines.DomainFixtures.weather(spark, hours)
-      // A/B switch for the chunked lane's context materialization
-      // (VERDICT r18 #3): narrow (default, DISK_ONLY narrow projection),
-      // narrow_ser (MEMORY_AND_DISK_SER narrow), wide (legacy full-frame
-      // DISK_ONLY checkpoint scanned three times).
-      val chunkNarrow = sys.env.getOrElse("SPARK_GRAFT_CHUNKED_MODE", "narrow") match {
-        case "wide" => None
-        case "narrow_ser" =>
-          Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        case _ => Some(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      }
       val feat = pipelines.TrainingPipeline.featureTable(traffic, weather,
-        windowKeyCols, chunkSpanHours, chunkNarrow)
+        windowKeyCols, chunkSpanHours)
       // ONE execution: the aggregate's counts also give the row total
       feat.groupBy("borough", "is_event")
         .agg(count(lit(1)).as("n"), avg("Vol").as("avg_vol"),
@@ -734,7 +706,7 @@ object Bench {
     // window semantics, evaluated per daily chunk with bounded-history
     // replication — window parallelism = #chunks instead of 5. The
     // measured time includes the chunk-census validation pass and the
-    // joined-frame materialization the chunked shape requires.
+    // second lazy execution of the join that the chunked shape requires.
     val e1Chunk = if (!wantE1("chunked")) skipped
       else { gateLane("chk"); timeFlagship(e1Reps, settle) { runE1(Seq("borough"), Some(24L)) } }
     releasePersisted()

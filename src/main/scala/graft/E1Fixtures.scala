@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump the E1 flagship's synthetic inputs (DomainFixtures traffic +
   * weather, plus the holiday dimension) to parquet, so an external
   * engine can run the SAME feature pipeline on the SAME bytes — the
@@ -20,14 +18,7 @@ object E1Fixtures {
     val outDir = args(0)
     val nHours = if (args.length > 1) args(1).toInt else 42500
     val rowsPerHour = if (args.length > 2) args(2).toInt else 40
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     pipelines.DomainFixtures.traffic(spark, nHours, rowsPerHour)
       .write.mode("overwrite").parquet(s"$outDir/traffic.parquet")
     pipelines.DomainFixtures.weather(spark, nHours)

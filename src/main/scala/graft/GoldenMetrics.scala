@@ -106,14 +106,7 @@ object GoldenMetrics {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "METRICS_r12.json"
     val nHours = sys.env.getOrElse("SPARK_GRAFT_GOLDEN_HOURS", "8760").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val t0 = System.nanoTime()
     val (rfR2, gbtR2, nTrees) = fit(spark, nHours)
     val sec = (System.nanoTime() - t0) / 1e9

@@ -73,14 +73,7 @@ object ServingBench {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("SERVING_r17.json")
     val windows = sys.env.getOrElse("SPARK_GRAFT_SERVING_WINDOWS", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // µs-scale calls: 4 decimal places (0.1 µs)
     def ms(x: Double) = math.rint(x * 1e4) / 1e4
     val perWindow = (1 to windows).map { _ =>

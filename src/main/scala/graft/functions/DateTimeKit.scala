@@ -23,19 +23,6 @@ object DateTimeKit {
     */
   def isWeekend(ts: Column): Column = (weekdayMon0(ts) >= 5).cast("int")
 
-  /** F7: timestamp from Yr/M/D/HH integer components (reference
-    * scripts/engineer_features.py:8 `pd.to_datetime(df[['Yr','M','D','HH']])`).
-    */
-  def timestampFromParts(yr: Column, m: Column, d: Column, hh: Column): Column =
-    make_timestamp(yr, m, d, hh, lit(0), lit(0))
-
-  /** F6: the Yr/M/D/HH component split the reference derives per chunk
-    * (SegmentedModeling.py:206-209). Returns (name, column) pairs to
-    * `withColumns`.
-    */
-  def componentCols(ts: Column): Seq[(String, Column)] = Seq(
-    "Yr" -> year(ts), "M" -> month(ts), "D" -> dayofmonth(ts), "HH" -> hour(ts))
-
   /** F9: cyclical encodings sin/cos(2π·x/period) (reference
     * SegmentedModeling.py:227-233). Periods: hour 24, weekday 7, month 12.
     */
@@ -61,12 +48,6 @@ object DateTimeKit {
     */
   def rushHour(h: Column): Column =
     ((h >= 7 && h <= 9) || (h >= 16 && h <= 18)).cast("int")
-
-  /** F13: season membership flags (reference backend/features.py:18-21). */
-  def seasonFlags(m: Column): Seq[(String, Column)] = Seq(
-    "is_winter" -> m.isin(12, 1, 2), "is_spring" -> m.isin(3, 4, 5),
-    "is_summer" -> m.isin(6, 7, 8), "is_fall" -> m.isin(9, 10, 11)
-  ).map { case (n, c) => n -> c.cast("int") }
 
   /** F18: threshold bucket classification (reference main.py:215-225
     * volume→color). Generic descending-threshold `when` chain.

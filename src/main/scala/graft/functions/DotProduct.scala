@@ -62,7 +62,7 @@ case class DotProduct(left: Expression, right: Expression)
 /** SparkSessionExtensions entry point: enables graft's custom
   * expressions in ANY session via
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * (or `SparkSession.builder.withExtensions(new GraftExtensions)`), so
+  * (or a session builder's `withExtensions(new GraftExtensions)`), so
   * `SELECT graft_dot(a, b)` works from plain SQL with no code change.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {

@@ -41,14 +41,6 @@ object Metrics {
   def mapeNonzero(y: Column, p: Column): Column =
     avg(when(y > 0, abs((y - p) / y)))
 
-  /** All four regression metrics in one aggregate pass. */
-  def regressionReport(df: DataFrame, yCol: String, pCol: String): DataFrame = {
-    val (y, p) = (col(yCol), col(pCol))
-    df.agg(
-      r2(y, p).as("r2"), mse(y, p).as("mse"), mae(y, p).as("mae"),
-      rmse(y, p).as("rmse"), mapeNonzero(y, p).as("mape_nonzero"))
-  }
-
   /** One-pass single-feature OLS from sufficient statistics:
     * slope = cov(x,y)/var(x), intercept = ȳ − slope·x̄, R² = corr(x,y)²
     * (exact for simple linear regression). Four aggregate expressions in

@@ -431,15 +431,6 @@ object TextOps {
         col("right"), col("pair_count"))
   }
 
-  /** Convenience: [[bpeTrainLocal]] collected to the (left, right) merge
-    * list [[bpeSegment]] consumes — train-then-encode without a second
-    * corpus pass through the merge table.
-    */
-  def bpeTrainLocalMerges(df: DataFrame, textCol: Column,
-      rounds: Int): Seq[(String, String)] =
-    bpeTrainLocal(df, textCol, rounds).orderBy("round").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-
   /** BPE tokenizer APPLICATION: segment the corpus VOCABULARY under an
     * already-learned merge list (the inference side of [[bpeTrain]] —
     * at encode time a tokenizer applies merges in learned order, and

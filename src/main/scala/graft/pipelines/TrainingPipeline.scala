@@ -45,18 +45,12 @@ object TrainingPipeline {
     *    ([[TrailingFeatures.withTrailingChunked]]): each h-hour chunk
     *    computes independently after receiving the previous chunk's
     *    last-24-row context, so window parallelism = #chunks, not 5.
-    *    The joined frame is localCheckpoint'ed first — the chunked shape
-    *    scans its input three times (chunk census, context extraction,
-    *    main pass), and re-executing the fan-out join per scan would
-    *    cost more than the materialization (at warehouse scale the
-    *    joined table is written once and read by every model run
-    *    anyway).
+    *    The joined frame stays lazy and executes twice: once under the
+    *    narrow tail/census projection, once through the main window.
     */
   def featureTable(traffic: DataFrame, weather: DataFrame,
       windowKeyCols: Seq[String] = Seq("borough"),
-      chunkSpanHours: Option[Long] = None,
-      chunkNarrowLevel: Option[org.apache.spark.storage.StorageLevel] =
-        Some(org.apache.spark.storage.StorageLevel.DISK_ONLY)): DataFrame = {
+      chunkSpanHours: Option[Long] = None): DataFrame = {
     // weather side: derive the join key components (reference
     // SegmentedModeling.py:206-209)
     val w = weather.select(
@@ -79,38 +73,18 @@ object TrainingPipeline {
     val ordered = Seq("date", "RequestID") // deterministic tie-break (O1 fix)
     val windowed = chunkSpanHours match {
       case Some(h) =>
-        // chunkNarrowLevel = Some(_): route the chunk tail/census pass
-        // through the NARROW window-input projection (borough, date,
-        // RequestID, Vol, chunk ≈ 4 of ~14 columns) and stream the
-        // full joined frame through the main window exactly once —
-        // nothing is persisted (the single-pass fold in
-        // withTrailingChunked left the projection with one consumer).
-        // The legacy shape (None) checkpointed the FULL-width joined
-        // frame DISK_ONLY and scanned it three times — that full-width
-        // disk round-trip is what made the lane's wall time track
-        // machine IO latency (11.6 → 26 s across windows, VERDICT r18
-        // #3), and at MEMORY_AND_DISK its blocks starved the upstream
-        // dropDuplicates aggregate of unified memory at sf1 on a 16 GB
-        // JVM (AGGREGATE_OUT_OF_MEMORY every rep,
-        // BENCH_e1_sf1_16g_fail.json). Narrow trades one extra lazy
-        // execution of the join (cheap: broadcast weather over the
-        // dedup'd traffic shuffle) for zero persisted IO.
-        chunkNarrowLevel match {
-          case Some(level) =>
-            TrailingFeatures.withTrailingChunked(
-              joined,
-              "Vol", partitionCols = windowKeyCols, orderCols = ordered,
-              chunkCol = floor(unix_micros(col("date")) / (h * 3600L * 1000000L)),
-              lags = Seq(1), rolls = Seq(3, 24),
-              narrowContext = Some(level))
-          case None =>
-            TrailingFeatures.withTrailingChunked(
-              graft.Lineage.materialize(joined,
-                org.apache.spark.storage.StorageLevel.DISK_ONLY),
-              "Vol", partitionCols = windowKeyCols, orderCols = ordered,
-              chunkCol = floor(unix_micros(col("date")) / (h * 3600L * 1000000L)),
-              lags = Seq(1), rolls = Seq(3, 24))
-        }
+        // No checkpoint of the joined frame: a full-width DISK_ONLY
+        // round-trip made the lane's wall time track machine IO latency
+        // (11.6 → 26 s across windows, VERDICT r18 #3), and at
+        // MEMORY_AND_DISK its blocks starved the upstream dropDuplicates
+        // aggregate of unified memory at sf1 on a 16 GB JVM
+        // (BENCH_e1_sf1_16g_fail.json). The second lazy execution of the
+        // join (broadcast weather over the dedup'd traffic shuffle) is
+        // cheaper.
+        TrailingFeatures.withTrailingChunked(joined,
+          "Vol", partitionCols = windowKeyCols, orderCols = ordered,
+          chunkCol = floor(unix_micros(col("date")) / (h * 3600L * 1000000L)),
+          lags = Seq(1), rolls = Seq(3, 24))
       case None =>
         TrailingFeatures.withTrailing(joined, "Vol",
           partitionCols = windowKeyCols, orderCols = ordered,

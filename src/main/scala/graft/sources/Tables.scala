@@ -216,13 +216,6 @@ object Tables {
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** S1 variant with schema inference for parity with pandas'
-    * dynamic-typed read (only for ad-hoc exploration; engine paths use
-    * fixed schemas).
-    */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
   /** S9: whole-document (multiLine) JSON scan — e.g. a GeoJSON
     * FeatureCollection — exploded to one row per feature (reference
     * main.py:175-181 `json.load` + feature loop).

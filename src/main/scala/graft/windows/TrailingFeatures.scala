@@ -3,7 +3,6 @@ package graft.windows
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.Lineage.LineageOps
 
 /** Grouped time-series features: lags and trailing-exclusive rolling means
@@ -99,49 +98,31 @@ object TrailingFeatures {
     * per key. Parallelism = #chunks instead of #partitions. Parity with
     * [[withTrailing]] is spec-pinned (PipelinesSpec).
     *
-    * `narrowContext = Some(_)` routes the tail/census pass through a
-    * narrow projection of just the window inputs (context rows are
-    * null-padded back to full width via unionByName) — the right call
-    * when `df` is a wide lazy plan the caller does not want
-    * materialized. Since the r19 single-pass fold the projection is
-    * consumed exactly once, so nothing is persisted and the
-    * StorageLevel inside the Option is no longer read (kept for API
-    * stability; the A/B history of the persisted variants lives in
-    * BENCH_chunked_ab_*_r19.json).
+    * The tail/census pass reads a narrow projection of just the window
+    * inputs (context rows are null-padded back to full width via
+    * unionByName), so `df` can stay a wide lazy plan: nothing is
+    * persisted and the upstream plan executes exactly twice.
     */
   def withTrailingChunked(df: DataFrame, valueCol: String,
       partitionCols: Seq[String], orderCols: Seq[String], chunkCol: Column,
       lags: Seq[Int] = Seq(1, 24, 168), rolls: Seq[Int] = Seq(3, 24),
-      validate: Boolean = true,
-      narrowContext: Option[StorageLevel] = None): DataFrame = {
+      validate: Boolean = true): DataFrame = {
     val k = (lags ++ rolls).max
     val part = partitionCols.map(col)
     val base = df.withColumn("__ck", chunkCol.cast("long"))
 
     // What the census + context-extraction pass reads. The window logic
     // only ever touches (partition, order, value, chunk) — the other
-    // columns ride along solely so the MAIN pass can emit full rows.
-    // With `narrowContext = Some(_)` that pass runs over a LAZY
-    // projection of just the window inputs (a few narrow columns
-    // instead of the full feature row — at E1 scale ~4 of ~14 columns)
-    // and `df` itself also stays lazy: the main pass executes it
-    // exactly once, streaming straight into the window's own
-    // (partition, chunk) exchange. With `None` the caller owns
-    // materialization of `df` (legacy shape) — the pass below reads the
-    // caller's checkpoint. Either way the upstream plan executes
-    // exactly twice (tail/census pass + main pass); nothing full-width
-    // or data-sized is persisted here. (The r18 shape persisted the
-    // projection and scanned it twice — census aggregate + context
-    // window; folding the census INTO the context window below removed
-    // the second scan, and with one consumer the persist itself, whose
-    // DISK_ONLY round-trip made the lane track machine IO latency.)
-    val censusBase = narrowContext match {
-      case Some(_) =>
-        val narrowCols =
-          (partitionCols ++ orderCols :+ valueCol).distinct.map(col) :+ col("__ck")
-        base.select(narrowCols: _*)
-      case None => base
-    }
+    // columns ride along solely so the MAIN pass can emit full rows —
+    // so that pass runs over a LAZY projection of just the window
+    // inputs (at E1 scale ~4 of ~14 columns). `df` itself also stays
+    // lazy: the main pass executes it once, streaming straight into the
+    // window's own (partition, chunk) exchange. Nothing full-width or
+    // data-sized is persisted here: with the census folded INTO the
+    // context window below, the projection has one consumer, and a
+    // DISK_ONLY persist of it made the lane track machine IO latency.
+    val censusBase = base.select(
+      (partitionCols ++ orderCols :+ valueCol).distinct.map(col) :+ col("__ck"): _*)
 
     // ONE (partition, chunk)-keyed pass extracts the tail-K context
     // rows; only they survive — K × #chunks rows, tiny at any scale —
@@ -199,12 +180,12 @@ object TrailingFeatures {
       .drop("__next_ck")
       .withColumn("__ctx", lit(1))
 
-    // Narrow-context rows lack the ride-along columns; null-pad them
+    // Context rows lack the ride-along columns; null-pad them
     // (allowMissingColumns). Sound because context rows exist only to
     // be READ through lag/avg over `valueCol` — their own (padded)
     // outputs are dropped by the __ctx filter below.
     val aug = base.withColumn("__ctx", lit(0))
-      .unionByName(ctx, allowMissingColumns = narrowContext.isDefined)
+      .unionByName(ctx, allowMissingColumns = true)
     val w = Window.partitionBy(part :+ col("__ck"): _*)
       .orderBy(orderCols.map(col): _*)
     val v = col(valueCol)

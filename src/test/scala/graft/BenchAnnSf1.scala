@@ -68,13 +68,7 @@ object BenchAnnSf1 {
       .head().getDouble(0)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val reps = 2
     val (dim, blobs, subBlobs, nQ) = (64, 32, 25, 2000L)

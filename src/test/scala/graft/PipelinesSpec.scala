@@ -79,14 +79,6 @@ class PipelinesSpec extends AnyFunSuite {
       .select(cols.map(col): _*)
     assert(a.count() == b.count())
     assert(a.except(b).count() == 0 && b.except(a).count() == 0)
-    // and the legacy full-frame-checkpoint shape (chunkNarrowLevel=None)
-    // is value-identical to the narrow-context default — the r19 IO
-    // optimization may not move a single feature value
-    val c = TrainingPipeline.featureTable(traffic, weather,
-        chunkSpanHours = Some(24L), chunkNarrowLevel = None)
-      .select(cols.map(col): _*)
-    assert(b.count() == c.count())
-    assert(b.except(c).count() == 0 && c.except(b).count() == 0)
   }
 
   test("chunked trailing: empty calendar gaps don't strand context; thin interior chunk rejected") {
@@ -103,21 +95,15 @@ class PipelinesSpec extends AnyFunSuite {
     val chunk = floor(unix_micros(col("ts")) / (24L * 3600L * 1000000L))
     val plain = TrailingFeatures.withTrailing(df, "v", Seq("g"), Seq("ts"),
       lags = Seq(1), rolls = Seq(3, 24))
-    val chunked = TrailingFeatures.withTrailingChunked(df, "v", Seq("g"), Seq("ts"),
-      chunk, lags = Seq(1), rolls = Seq(3, 24))
-    assert(plain.except(chunked).count() == 0 && chunked.except(plain).count() == 0)
-    // narrow-context mode (census/ctx over a persisted narrow projection,
-    // main pass lazy) must be bit-identical too — including across the
-    // empty-calendar gap, and with a ride-along column the narrow
-    // projection drops (null-padded on ctx rows, never on own rows)
-    val narrow = TrailingFeatures.withTrailingChunked(
+    // a ride-along column the narrow tail/census projection drops is
+    // null-padded on context rows only, never on the rows returned
+    val chunked = TrailingFeatures.withTrailingChunked(
       df.withColumn("extra", col("minute") * 2), "v", Seq("g"), Seq("ts"),
-      chunk, lags = Seq(1), rolls = Seq(3, 24),
-      narrowContext = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    assert(narrow.filter(col("extra").isNull).count() == 0)
-    val narrowCore = narrow.drop("extra")
-    assert(plain.except(narrowCore).count() == 0 &&
-      narrowCore.except(plain).count() == 0)
+      chunk, lags = Seq(1), rolls = Seq(3, 24))
+    assert(chunked.filter(col("extra").isNull).count() == 0)
+    val chunkedCore = chunked.drop("extra")
+    assert(plain.except(chunkedCore).count() == 0 &&
+      chunkedCore.except(plain).count() == 0)
     // a 10-row interior chunk can't carry 24 rows of history: validator throws
     val thin = ((0 until 60).map(i => (1L, i.toLong)) ++
       (0 until 10).map(i => (1L, 1440L + i)) ++

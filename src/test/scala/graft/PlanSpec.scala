@@ -419,6 +419,12 @@ class PlanSpec extends AnyFunSuite {
       "unkeyed join in simhash pairs:\n" + p.take(800))
   }
 
+  test("GraftSession: the test session runs the production optimizer config") {
+    assert(spark.experimental.extraOptimizations.contains(plans.SortThroughProject))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
   test("SortThroughProject: global sort samples the scan, not the computed projection") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}

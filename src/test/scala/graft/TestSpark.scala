@@ -4,16 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.SortThroughProject.install(s)
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(cpus = 4)
 }

@@ -11,6 +11,9 @@
 #   reps   default 3 (flagships and expensive queries; sub-second suite
 #          queries self-cap at 2 via timeAdaptive)
 #
+# Cores: SPARK_GRAFT_CPUS when the caller exports it, else nproc
+# (graft.GraftSession.defaultCpus).
+#
 # The DuckDB side times the SAME oracle SQL the correctness gate runs,
 # with full materialization (fetchall ≈ Spark's noop sink). The ratio is
 # computed over the per-query JOIN of the two "queries" maps — never
@@ -21,18 +24,16 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.1}"
 TAG="${2:-local_$(date +%m%d_%H%M)}"
 REPS="${3:-3}"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
 
 BENCH_OUT="BENCH_${TAG}.json"
 DUCK_OUT="DUCK_${TAG}.json"
 RATIO_OUT="RATIO_${TAG}.json"
 
 echo "[suite] 1/4 oracle dump (fast single-query Verify run)"
-SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
-  "runMain graft.Verify $SF_DIR /tmp/suite_oracle q_topk" >/dev/null
+sbt -batch "runMain graft.Verify $SF_DIR /tmp/suite_oracle q_topk" >/dev/null
 
 echo "[suite] 2/4 Spark bench -> $BENCH_OUT (flagships first)"
-SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="$CPUS" \
+SPARK_GRAFT_SF_DIR="$SF_DIR" \
   SPARK_GRAFT_BENCH_REPS="$REPS" SPARK_GRAFT_BENCH_OUT="$BENCH_OUT" \
   sbt -batch "runMain graft.Bench" | grep '"metric"' || true
 
