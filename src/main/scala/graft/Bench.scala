@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JDouble, JField, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Driver bench contract: run the query inventory on SPARK_GRAFT_SF_DIR
   * at local[N], print ONE JSON line with per-query seconds.
@@ -25,17 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    s((s.length - 1) / 2)
-  }
-
-  /** Timings for one benched query: median of the successful reps plus
-    * the raw per-rep list, so a reader of bench_out.json can tell
-    * run-to-run spread from a real shift without a re-run. `gcMs` /
-    * `peakHeapMb` are per-rep: driver-JVM GC wall time spent during the
-    * rep and the peak heap reached within it — a rep whose seconds spike
-    * WITH its gc_ms is memory pressure, one that spikes without is
+  /** One successful rep of a benched query, so a reader of
+    * bench_out.json can tell run-to-run spread from a real shift without
+    * a re-run. `gcMs` / `peakHeapMb` are the driver-JVM GC wall time
+    * spent during the rep and the peak heap reached within it — a rep
+    * whose seconds spike WITH its gc_ms is memory pressure, one that
+    * spikes without is
     * scheduling/page-cache (the round-8 flagship [14, 62] s spread was
     * undecidable from seconds alone). peakHeapMb is the SUM of per-pool
     * peaks (reset at rep start); under G1 the pools peak at different
@@ -48,12 +45,122 @@ object Bench {
     * sandbox runs concurrent work during driver benches — with the load
     * in the artifact, an inflated run diagnoses itself (load ≫ cores
     * next to the slow rep) instead of needing out-of-band knowledge.
+    * The three probe readings are [[MiniProbe]]'s, taken just before the
+    * rep.
     */
-  private case class Timed[A](median: Double, raw: Seq[Double],
-    gcMs: Seq[Long], peakHeapMb: Seq[Long], loadAvg: Seq[Double],
-    first: Option[A], err: Option[String],
-    probeCpu: Seq[Long] = Nil, probeMem: Seq[Long] = Nil,
-    probeChase: Seq[Long] = Nil)
+  private[graft] case class Rep(sec: Double, gcMs: Long, peakHeapMb: Long,
+    loadAvg: Double, probeCpu: Long, probeMem: Long, probeChase: Long)
+
+  /** Timings for one benched query: median of the successful reps, every
+    * successful rep, the first successful result and the first error.
+    */
+  private[graft] case class Timed[+A](median: Double, reps: Seq[Rep],
+    first: Option[A], err: Option[String])
+
+  /** One artifact row. `flag` is a flagship's short key: it names the
+    * lane in `lane_gate` and in the compact line's `flag_*` maps.
+    */
+  private[graft] case class Lane(name: String, t: Timed[Any],
+    flag: Option[String] = None)
+
+  /** Suite-level readings both artifacts carry next to the lane rows.
+    * Each probe pair is (suite start, suite end); `laneGate` maps a
+    * flagship key to (chase ms, gate waits, still degraded).
+    */
+  private[graft] case class Readings(
+    laneGate: Seq[(String, (Long, Int, Boolean))], chaseFloorMs: Long,
+    nCpus: Int, cpuProbe: (Long, Long), cpuProbeMt: (Long, Long),
+    memProbe: (Long, Long), chaseProbe: (Long, Long),
+    streamProgress: JObject, servingP50: Double, servingP95: Double,
+    servingLocalP50Us: Double, heapMaxMb: Long, sf: String, e1Rows: Long,
+    reps: Int, full: String)
+
+  /** The E1 flagship plan shapes, timed by [[main]] and dumped by
+    * [[PlanDump]]. `variant` is the SPARK_GRAFT_E1_VARIANTS name.
+    */
+  private[graft] case class E1Shape(lane: String, key: String,
+    variant: String, windowKeys: Seq[String], chunkSpanHours: Option[Long])
+
+  /** `flagship_e1` keys the window by borough (reference semantics, 5
+    * window partitions); `flagship_e1_segmented` by borough × SegmentID
+    * (thousands of window partitions); `flagship_e1_chunked` keeps the
+    * reference keying but evaluates it per daily chunk with
+    * bounded-history replication, so window parallelism is the chunk
+    * count. The chunked time includes the chunk-census validation pass
+    * and the second lazy execution of the join that shape requires.
+    */
+  private[graft] val e1Shapes = Seq(
+    E1Shape("flagship_e1", "e1", "plain", Seq("borough"), None),
+    E1Shape("flagship_e1_segmented", "seg", "segmented",
+      Seq("borough", "SegmentID"), None),
+    E1Shape("flagship_e1_chunked", "chk", "chunked", Seq("borough"), Some(24L)))
+
+  private val RowsPerHour = 40
+
+  /** The E1 flagship aggregate: the full feature plan (fan-out join →
+    * calendar/holiday/trailing-window features → dropna) over `hours` of
+    * synthetic traffic and weather, reduced to a per-borough/event
+    * aggregate (fit excluded — model training is benched by
+    * q_ols_coeffs).
+    */
+  private[graft] def e1Aggregate(spark: SparkSession, hours: Int,
+      windowKeys: Seq[String], chunkSpanHours: Option[Long]): DataFrame = {
+    val traffic = pipelines.DomainFixtures.traffic(spark, hours, RowsPerHour)
+    val weather = pipelines.DomainFixtures.weather(spark, hours)
+    pipelines.TrainingPipeline.featureTable(traffic, weather, windowKeys,
+        chunkSpanHours)
+      .groupBy("borough", "is_event")
+      .agg(count(lit(1)).as("n"), avg("Vol").as("avg_vol"),
+        avg("vol_roll_24").as("avg_roll_24"))
+  }
+
+  /** Wall ms for `iters` xorshift steps (register throughput). */
+  private def xorshiftMs(iters: Int): Long = {
+    var x = 0x9E3779B97F4A7C15L
+    var i = 0
+    val t0 = System.nanoTime()
+    while (i < iters) {
+      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+      i += 1
+    }
+    val ms = (System.nanoTime() - t0) / 1000000
+    if (x == 42L) Console.err.println("") // defeat dead-code elimination
+    ms
+  }
+
+  /** A long array holding 0 until n. */
+  private def iota(n: Int): Array[Long] = {
+    val a = new Array[Long](n)
+    var i = 0
+    while (i < n) { a(i) = i.toLong; i += 1 }
+    a
+  }
+
+  /** Wall ms for `passes` sequential summation passes over `a`. */
+  private def sumMs(a: Array[Long], passes: Int): Long = {
+    var sum = 0L
+    val t0 = System.nanoTime()
+    var pass = 0
+    while (pass < passes) {
+      var i = 0
+      while (i < a.length) { sum += a(i); i += 1 }
+      pass += 1
+    }
+    val ms = (System.nanoTime() - t0) / 1000000
+    if (sum == 42L) Console.err.println("") // defeat dead-code elimination
+    ms
+  }
+
+  /** Follow `steps` links of `next` from `start`; (wall ms, end slot). */
+  private def walkMs(next: Array[Long], start: Long, steps: Int): (Long, Long) = {
+    var p = start
+    var i = 0
+    val t0 = System.nanoTime()
+    while (i < steps) { p = next(p.toInt); i += 1 }
+    val ms = (System.nanoTime() - t0) / 1000000
+    if (p == -1L) Console.err.println("") // defeat dead-code elimination
+    (ms, p)
+  }
 
   /** Single-thread CPU throughput probe: wall ms for a fixed 2×10⁸
     * xorshift iterations. Host-level neighbors (CPU steal, cgroup
@@ -64,18 +171,7 @@ object Bench {
     * same code + same data + probe parity ⇒ real shift; probe inflated ⇒
     * environment. Run before and after the suite (~0.3 s each).
     */
-  private def cpuProbeMs(): Long = {
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0
-    val t0 = System.nanoTime()
-    while (i < 200000000) {
-      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-      i += 1
-    }
-    val ms = (System.nanoTime() - t0) / 1000000
-    if (x == 42L) Console.err.println("") // defeat dead-code elimination
-    ms
-  }
+  private def cpuProbeMs(): Long = xorshiftMs(200000000)
 
   /** All-cores variant: wall ms for `availableProcessors` threads each
     * running the single-thread probe loop concurrently. A cgroup CPU
@@ -107,23 +203,7 @@ object Bench {
     * only a streaming probe can see. Together with [[chaseProbeMs]] the
     * probe set spans quota, steal, bandwidth, and latency effects.
     */
-  private def memProbeMs(): Long = {
-    val n = 32 * 1024 * 1024 // 256 MB of longs
-    val a = new Array[Long](n)
-    var i = 0
-    while (i < n) { a(i) = i.toLong; i += 1 }
-    var sum = 0L
-    val t0 = System.nanoTime()
-    var pass = 0
-    while (pass < 2) {
-      i = 0
-      while (i < n) { sum += a(i); i += 1 }
-      pass += 1
-    }
-    val ms = (System.nanoTime() - t0) / 1000000
-    if (sum == 42L) Console.err.println("") // defeat dead-code elimination
-    ms
-  }
+  private def memProbeMs(): Long = sumMs(iota(32 * 1024 * 1024), 2) // 256 MB of longs
 
   /** Memory-LATENCY probe: one full walk of a single-cycle random
     * permutation over a 64 MB long array — 8.4M serially-dependent
@@ -140,11 +220,9 @@ object Bench {
     * 0..n-1, so one walk of length n visits every slot exactly once.
     */
   private def buildCycle(n: Int): Array[Long] = {
-    val next = new Array[Long](n)
-    var i = 0
-    while (i < n) { next(i) = i.toLong; i += 1 }
+    val next = iota(n)
     var x = 0x9E3779B97F4A7C15L
-    i = n - 1
+    var i = n - 1
     while (i > 0) {
       x ^= x << 13; x ^= x >>> 7; x ^= x << 17
       val j = (((x % i) + i) % i).toInt // 0 <= j < i
@@ -156,14 +234,7 @@ object Bench {
 
   private def chaseProbeMs(): Long = {
     val n = 8 * 1024 * 1024 // 64 MB of longs
-    val next = buildCycle(n)
-    val t0 = System.nanoTime()
-    var p = 0L
-    var i = 0
-    while (i < n) { p = next(p.toInt); i += 1 }
-    val ms = (System.nanoTime() - t0) / 1000000
-    if (p == -1L) Console.err.println("") // defeat dead-code elimination
-    ms
+    walkMs(buildCycle(n), 0L, n)._1
   }
 
   /** PER-REP environment micro-probes, run OUTSIDE the timed region
@@ -193,44 +264,12 @@ object Bench {
     private val chaseN = 8 * 1024 * 1024 // 64 MB of longs
     private lazy val chaseCycle = buildCycle(chaseN)
     private var chasePos = 0L
-    private val memN = 16 * 1024 * 1024 // 128 MB of longs
-    private lazy val memArr = {
-      val a = new Array[Long](memN)
-      var i = 0
-      while (i < memN) { a(i) = i.toLong; i += 1 }
-      a
-    }
-    def cpuMs(): Long = {
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      val t0 = System.nanoTime()
-      while (i < 10000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        i += 1
-      }
-      val ms = (System.nanoTime() - t0) / 1000000
-      if (x == 42L) Console.err.println("")
-      ms
-    }
-    def memMs(): Long = {
-      val a = memArr
-      var sum = 0L
-      var i = 0
-      val t0 = System.nanoTime()
-      while (i < memN) { sum += a(i); i += 1 }
-      val ms = (System.nanoTime() - t0) / 1000000
-      if (sum == 42L) Console.err.println("")
-      ms
-    }
+    private lazy val memArr = iota(16 * 1024 * 1024) // 128 MB of longs
+    def cpuMs(): Long = xorshiftMs(10000000)
+    def memMs(): Long = sumMs(memArr, 1)
     def chaseMs(): Long = synchronized {
-      val a = chaseCycle
-      var p = chasePos
-      var i = 0
-      val t0 = System.nanoTime()
-      while (i < (1 << 20)) { p = a(p.toInt); i += 1 }
-      val ms = (System.nanoTime() - t0) / 1000000
+      val (ms, p) = walkMs(chaseCycle, chasePos, 1 << 20)
       chasePos = p
-      if (p == -1L) Console.err.println("")
       ms
     }
     /** One (cpu, mem, chase) reading; also warms all three on first use. */
@@ -340,25 +379,6 @@ object Bench {
     laneGateLog(lane) = (pl, waits, degraded)
   }
 
-  /** Flagship timing (VERDICT r12, Next round #1 — third ask): the
-    * driver-window flagship medians have been contention-poisoned three
-    * rounds running (r12: e1 raw [192.8, 29.4, 60.3] s vs 11–25 s local).
-    * Two mechanical defenses, both suggested verbatim by the judge:
-    *  - PROBE-GATED reps: before each rep the chase probe must read
-    *    within 2× the session floor; while it doesn't, sleep 3 s and
-    *    re-probe (≤ 10 waits ≈ 30 s) so the rep starts in a clean
-    *    window instead of timing through a neighbor's burst;
-    *  - DISCARD-MAX TRIMMED median over 5 reps (default raised 3→5):
-    *    the single worst rep — the one a mid-rep burst lands on — never
-    *    reaches the reported median.
-    * Raw reps, gc, and probes still go to the artifact unfiltered, so
-    * the trim hides nothing from a reader.
-    */
-  private def timeFlagship[A](reps: Int, preRep: () => Unit = () => ())
-      (run: => A): Timed[A] =
-    timeAdaptive(reps, reps, gateOnChase = true, trimMax = true,
-      preRep = preRep)(run)
-
   /** Median wall seconds over the SUCCESSFUL executions of `run` (first
     * successful result kept). A rep that throws contributes no timing —
     * otherwise a regression that makes a query fail fast would report a
@@ -366,8 +386,8 @@ object Bench {
     * fails the median is -1 and the first error message is returned so
     * main() can surface it in the emitted JSON.
     *
-    * A query whose FIRST successful rep comes in under `cheapCutoffSec`
-    * stops after `cheapReps` total reps.
+    * A query whose FIRST successful rep comes in under 1 s stops after
+    * `cheapReps` total reps.
     * Sub-second queries don't need a 3-rep middle median — their
     * round-over-round signal is binary (still sub-second or not) — and
     * the reps they skip are exactly the suite wall-time that pushed the
@@ -376,18 +396,11 @@ object Bench {
     * rep count: they are the ones whose medians get compared.
     */
   private def timeAdaptive[A](reps: Int, cheapReps: Int,
-      cheapCutoffSec: Double = 1.0, gateOnChase: Boolean = false,
-      trimMax: Boolean = false, preRep: () => Unit = () => ())
-      (run: => A): Timed[A] = {
+      gateOnChase: Boolean = false, trimMax: Boolean = false,
+      preRep: () => Unit = () => ())(run: => A): Timed[A] = {
     var first: Option[A] = None
     var err: Option[String] = None
-    val gcs = scala.collection.mutable.ArrayBuffer[Long]()
-    val heaps = scala.collection.mutable.ArrayBuffer[Long]()
-    val loads = scala.collection.mutable.ArrayBuffer[Double]()
-    val pCpu = scala.collection.mutable.ArrayBuffer[Long]()
-    val pMem = scala.collection.mutable.ArrayBuffer[Long]()
-    val pChase = scala.collection.mutable.ArrayBuffer[Long]()
-    val ts = scala.collection.mutable.ArrayBuffer[Double]()
+    val done = scala.collection.mutable.ArrayBuffer[Rep]()
     var target = math.max(1, reps)
     var i = 0
     while (i < target) {
@@ -400,14 +413,13 @@ object Bench {
       // System.gc) runs OUTSIDE the timed region.
       preRep()
       // Environment reading for THIS rep, taken outside the timed
-      // region — see [[MiniProbe]]. Appended only on SUCCESS (below),
-      // so every per-rep array in the artifact stays index-aligned with
-      // `raw` even when a rep throws.
+      // region — see [[MiniProbe]]. Kept only on SUCCESS (below), with
+      // the rep it preceded.
       val (pc, pm, pl0) = MiniProbe.triad()
       var pl = pl0
       chaseFloorMs = math.min(chaseFloorMs, math.max(1L, pl))
       if (gateOnChase) {
-        // wait out a degraded window (see [[timeFlagship]])
+        // wait out a degraded window (see the flagship protocol in main)
         var waits = 0
         while (pl > 2 * chaseFloorMs && waits < 10) {
           Thread.sleep(3000)
@@ -423,13 +435,12 @@ object Bench {
         val r = run
         if (first.isEmpty) first = Some(r)
         val sec = (System.nanoTime() - t0) / 1e9
-        pCpu += pc; pMem += pm; pChase += pl
-        gcs += totalGcMs() - gc0
-        heaps += heapPools.map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
-        loads += math.rint(java.lang.management.ManagementFactory
-          .getOperatingSystemMXBean.getSystemLoadAverage * 10) / 10
-        ts += sec
-        if (ts.length == 1 && sec < cheapCutoffSec)
+        done += Rep(sec, totalGcMs() - gc0,
+          heapPools.map(_.getPeakUsage.getUsed).sum / (1024 * 1024),
+          math.rint(java.lang.management.ManagementFactory
+            .getOperatingSystemMXBean.getSystemLoadAverage * 10) / 10,
+          pc, pm, pl)
+        if (done.length == 1 && sec < 1.0)
           target = math.min(target, math.max(1, cheapReps))
       } catch {
         case scala.util.control.NonFatal(e) =>
@@ -440,116 +451,105 @@ object Bench {
     }
     // trimMax: median over reps with the single worst discarded (n ≥ 3);
     // raw keeps every rep so the artifact still shows the outlier.
-    val eff = if (trimMax && ts.length >= 3) ts.sorted.dropRight(1).toSeq
-      else ts.toSeq
-    Timed(if (eff.isEmpty) -1.0 else median(eff), ts.toSeq, gcs.toSeq,
-      heaps.toSeq, loads.toSeq, first, err, pCpu.toSeq, pMem.toSeq,
-      pChase.toSeq)
+    val ts = done.map(_.sec).toSeq
+    val eff = if (trimMax && ts.length >= 3) ts.sorted.dropRight(1) else ts
+    Timed(if (eff.isEmpty) -1.0 else ServingBench.percentile(eff, 50),
+      done.toSeq, first, err)
   }
 
-  /** JMH-style measurement fork (VERDICT r15, Next round #1): pin the
-    * JVM the measurements run in, regardless of the JVM the harness was
-    * launched with.
+  /** Both artifacts for one suite: the full line (bench_out.json) and the
+    * COMPACT stdout line. The driver keeps only the last 2000 chars of
+    * stdout and parses the JSON it finds there — the full map with
+    * raw/gc detail is several KB, so every prior round's driver artifact
+    * ended up "parsed": null with a mid-JSON tail. The compact line
+    * carries the total, as many of the costliest lanes as fit a
+    * 1700-char budget (descending), the first 3 errors (messages cut to
+    * 100 chars), scalar GC/heap/load maxima, the flagships' per-rep raw
+    * seconds, chase and GC readings under their short keys, and a
+    * pointer to the full file. The error cap keeps the line bounded when
+    * many lanes fail: an uncapped map with ~100 failures would alone
+    * overflow the stdout tail in exactly the run the artifact most needs
+    * to convey.
     *
-    * The r15 driver-vs-builder gap (peak_heap_mb_max 67 GB vs 19.5 GB,
-    * e1 rep spread 4.7× vs 2.6×, serving p50 27.5 vs ~20 ms) was NOT a
-    * code-path difference — the driver invokes this same main, settle
-    * and serving-first included. The one variable was the JVM:
-    * `BENCH_r15.json` records heap_max_mb 91136 (an 89 GiB -Xms=-Xmx
-    * heap from the invoking environment) while every committed builder
-    * window ran the build.sbt protocol heap of 16 GiB
-    * (`BENCH_r15_local2.json` heap_max_mb 16384). On a pre-committed
-    * 89 GiB heap (a) G1 sizes eden in the tens of GB, so the pool-sum
-    * "peak heap" reads allocation-burst noise instead of anything
-    * comparable across rounds, and (b) the first full-scale flagship
-    * rep pays first-touch page faulting of a heap 5× larger than it
-    * needs — with healthy chase probes and ≤38 ms GC, exactly the
-    * signature of BENCH_r15's 61 s e1 rep 1.
-    *
-    * So, like JMH — which forks a fresh measurement JVM precisely so
-    * harness flags can't contaminate results — main() re-executes
-    * itself in a child JVM pinned to the protocol heap whenever it
-    * finds itself in a much larger one. 16 GiB is not a guess: it is
-    * the committed local-window protocol (build.sbt), and
-    * `BENCH_e1_sf1_16g_r15.json` proves the heaviest lane sequence
-    * (plain → segmented → chunked at 167 M joined rows, 10× bench
-    * scale) passes at 16 GiB with ≤0.9 s per-rep GC. stdout/stderr are
-    * inherited so the driver's tail-of-stdout JSON contract is
-    * unchanged. SPARK_GRAFT_BENCH_NO_FORK=1 disables (and marks the
-    * child); SPARK_GRAFT_BENCH_FORK_HEAP overrides the pinned size.
-    * Any fork failure falls back to running inline — the fork is a
-    * hygiene upgrade, never a new failure mode.
+    * Raw per-rep times, gc_ms and peak_heap_mb for every lane let a
+    * reader separate JVM/machine noise (wide spread, stable median) from
+    * a real shift (all reps moved), and tell a GC-bound outlier rep from
+    * an external one, without re-running the suite. The per-rep probes
+    * (full line only) place a single slow rep against the machine's
+    * state at that instant. `total` sums the medians of the lanes that
+    * produced one.
     */
-  private def forkPinnedJvm(): Option[Int] = {
-    if (sys.env.contains("SPARK_GRAFT_BENCH_NO_FORK")) return None
-    val heap = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK_HEAP", "16g")
-    val heapMb = {
-      val h = heap.trim.toLowerCase
-      try {
-        if (h.endsWith("g")) h.dropRight(1).toLong * 1024
-        else if (h.endsWith("m")) h.dropRight(1).toLong
-        else h.toLong / (1024 * 1024)
-      } catch { case _: NumberFormatException => return None }
+  private[graft] def artifacts(rows: Seq[Lane], r: Readings): (String, String) = {
+    import org.json4s.JsonDSL._
+    def perLane(f: Timed[Any] => JValue): JObject =
+      JObject(rows.map(l => l.name -> f(l.t)).toList)
+    def perRep(f: Rep => JValue): JObject = perLane(t => t.reps.map(f))
+    def perFlag(f: Rep => JValue): JObject = JObject(rows.collect {
+      case Lane(_, t, Some(k)) => k -> (t.reps.map(f): JValue) }.toList)
+    def pair(p: (Long, Long)): JValue = List(p._1, p._2)
+    def r3(v: Double): Double = math.rint(v * 1000) / 1000
+    def r2(v: Double): Double = math.rint(v * 100) / 100
+    val errors = rows.flatMap(l => l.t.err.map(l.name -> _))
+    def errMap(es: Seq[(String, String)]): JObject =
+      JObject(es.map { case (k, v) => k -> JString(v) }.toList)
+    val total = rows.map(l => math.max(0.0, l.t.median)).sum
+    // suite-edge chase reading each flagship lane started at, the gate
+    // waits it spent, and whether it still ran above threshold;
+    // window_degraded = any flagship lane ran degraded
+    val gate = ("lane_gate" -> JObject(r.laneGate.map { case (k, (pl, w, deg)) =>
+        k -> (("chase_ms" -> pl) ~ ("waits" -> w) ~ ("degraded" -> deg)) }.toList)) ~
+      ("chase_floor_ms" -> r.chaseFloorMs) ~
+      ("window_degraded" -> r.laneGate.exists(_._2._3))
+    val edgeProbes = ("cpu_probe_ms" -> pair(r.cpuProbe)) ~
+      ("cpu_probe_mt_ms" -> pair(r.cpuProbeMt)) ~
+      ("mem_probe_ms" -> pair(r.memProbe)) ~
+      ("chase_probe_ms" -> pair(r.chaseProbe))
+    val serving = ("serving_p50_ms" -> r.servingP50) ~
+      ("serving_p95_ms" -> r.servingP95) ~
+      ("serving_local_p50_us" -> r.servingLocalP50Us)
+    val run = ("sf" -> r.sf) ~ ("e1_rows" -> r.e1Rows) ~ ("reps" -> r.reps)
+    val full = ("metric" -> "total") ~ ("value" -> total) ~ ("unit" -> "sec") ~
+      ("queries" -> perLane(_.median)) ~ ("errors" -> errMap(errors)) ~
+      ("raw" -> perRep(_.sec)) ~ ("gc_ms" -> perRep(_.gcMs)) ~
+      ("peak_heap_mb" -> perRep(_.peakHeapMb)) ~
+      ("load_avg" -> perRep(_.loadAvg)) ~
+      ("probe_cpu_q_ms" -> perRep(_.probeCpu)) ~
+      ("probe_mem_q_ms" -> perRep(_.probeMem)) ~
+      ("probe_chase_q_ms" -> perRep(_.probeChase)) ~ gate ~
+      ("n_cpus" -> r.nCpus) ~ edgeProbes ~
+      ("stream_progress" -> r.streamProgress) ~ serving ~
+      ("heap_max_mb" -> r.heapMaxMb) ~ run
+    // range of the per-rep chase mini-probe across the suite: a wide one
+    // says the window degraded mid-suite (probe_chase_q_ms says which reps)
+    val allReps = rows.flatMap(_.t.reps)
+    val chaseQ = allReps.map(_.probeChase)
+    def compactLine(queries: List[JField], shown: Int): String = compact(render(
+      ("metric" -> "total") ~ ("value" -> r3(total)) ~ ("unit" -> "sec") ~
+      ("queries" -> JObject(queries)) ~ ("queries_shown" -> shown) ~
+      ("errors" -> errMap(errors.take(3).map { case (k, v) => k -> v.take(100) })) ~
+      ("errors_total" -> errors.size) ~ gate ~
+      ("gc_ms_max" -> allReps.map(_.gcMs).foldLeft(0L)(math.max)) ~
+      ("peak_heap_mb_max" -> allReps.map(_.peakHeapMb).foldLeft(0L)(math.max)) ~
+      ("heap_max_mb" -> r.heapMaxMb) ~
+      ("load_max" -> allReps.map(_.loadAvg).foldLeft(0.0)(math.max)) ~
+      ("n_cpus" -> r.nCpus) ~ edgeProbes ~
+      ("chase_q_ms_range" -> (if (chaseQ.isEmpty) Nil else List(chaseQ.min, chaseQ.max))) ~
+      ("flag_raw" -> perFlag(rep => r2(rep.sec))) ~
+      ("flag_chase_ms" -> perFlag(_.probeChase)) ~
+      ("flag_gc_ms" -> perFlag(_.gcMs)) ~ serving ~
+      ("full" -> r.full) ~ ("queries_total" -> rows.size) ~ run))
+    // Fill `queries` greedily, costliest lane first, into the room left
+    // by the line rendered without them (queries_shown at its widest).
+    val byCost = rows.sortBy(-_.t.median).map(l => JField(l.name, JDouble(r3(l.t.median))))
+    val (shown, _) = byCost.foldLeft((List.empty[JField],
+        1700 - compactLine(Nil, byCost.size).length)) { case ((acc, room), f) =>
+      val cost = compact(render(JObject(f))).length - 1 // less braces, plus a comma
+      if (cost <= room) (f :: acc, room - cost) else (acc, room)
     }
-    // Already at (or below ~1.5× of) the protocol heap: run inline.
-    if (Runtime.getRuntime.maxMemory() <= heapMb * 1024 * 1024 * 3 / 2)
-      return None
-    try {
-      def src(c: Class[_]): Option[String] =
-        Option(c.getProtectionDomain.getCodeSource)
-          .map(s => java.nio.file.Paths.get(s.getLocation.toURI).toString)
-      val sep = java.io.File.pathSeparator
-      // Own classes + the Spark jars directory (wildcard) + whatever the
-      // launching JVM had: covers sbt-forked runs (full java.class.path)
-      // and direct java -cp invocations alike.
-      val sparkJars = src(classOf[SparkSession]).map(p =>
-        java.nio.file.Paths.get(p).getParent.toString + "/*")
-      val cp = (src(getClass).toSeq ++ sparkJars.toSeq ++
-        Option(System.getProperty("java.class.path")).filter(_.nonEmpty).toSeq)
-        .mkString(sep)
-      val javaBin = java.nio.file.Paths
-        .get(System.getProperty("java.home"), "bin", "java").toString
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar",
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val cmd = (Seq(javaBin, s"-Xmx$heap", s"-Xms$heap") ++ addOpens ++ Seq(
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.Bench")).toArray
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_BENCH_NO_FORK", "1")
-      pb.inheritIO()
-      System.err.println(
-        s"[bench] measurement fork: ${Runtime.getRuntime.maxMemory() / (1024 * 1024)} MB launcher heap -> pinned -Xmx$heap child")
-      val code = pb.start().waitFor()
-      if (code != 0) {
-        // A nonzero child exit is a JVM-level failure (heap it could
-        // not reserve, a classpath the heuristic missed): the bench
-        // main itself reports per-query errors IN its JSON and exits
-        // 0. Honor the fallback contract — run inline rather than
-        // surfacing a new failure mode the unforked bench never had.
-        System.err.println(
-          s"[bench] forked child exited $code before producing results; running inline")
-        None
-      } else Some(0)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] measurement fork failed (${e.getMessage}); running inline")
-        None
-    }
+    (compact(render(full)), compactLine(shown.reverse, shown.size))
   }
 
   def main(args: Array[String]): Unit = {
-    val forkExit = forkPinnedJvm()
-    if (forkExit.isDefined) {
-      if (forkExit.get != 0) sys.exit(forkExit.get)
-      return
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // 3 reps so the flagship reports a true middle median — with 2 the
@@ -646,34 +646,49 @@ object Bench {
 
     // E1 flagship at reference scale: ~1.7M traffic rows (42,500 hours ×
     // 40 rows/hour), ~10 weather samples/hour fan-out ≈ 17M joined rows
-    // through the full feature plan, reduced to a per-borough/event
-    // aggregate (fit excluded — model training is benched by q_ols_coeffs).
+    // through [[e1Aggregate]]. ONE execution: the aggregate's counts
+    // also give the row total.
     val e1Rows = sys.env.getOrElse("SPARK_GRAFT_E1_ROWS", "1700000").toLong
-    val rowsPerHour = 40
-    val nHours = math.max(1L, e1Rows / rowsPerHour).toInt
-    def runE1(windowKeyCols: Seq[String],
-        chunkSpanHours: Option[Long] = None, hours: Int = nHours): Long = {
-      val traffic = pipelines.DomainFixtures.traffic(spark, hours, rowsPerHour)
-      val weather = pipelines.DomainFixtures.weather(spark, hours)
-      val feat = pipelines.TrainingPipeline.featureTable(traffic, weather,
-        windowKeyCols, chunkSpanHours)
-      // ONE execution: the aggregate's counts also give the row total
-      feat.groupBy("borough", "is_event")
-        .agg(count(lit(1)).as("n"), avg("Vol").as("avg_vol"),
-          avg("vol_roll_24").as("avg_roll_24"))
-        .collect()
-        .map(_.getAs[Long]("n")).sum
-    }
-    val skipped = Timed[Long](-1.0, Nil, Nil, Nil, Nil, None, None)
+    val nHours = math.max(1L, e1Rows / RowsPerHour).toInt
+    def runE1(s: E1Shape, hours: Int): Long =
+      e1Aggregate(spark, hours, s.windowKeys, s.chunkSpanHours)
+        .collect().map(_.getAs[Long]("n")).sum
+    val skipped = Timed(-1.0, Nil, None, None)
     // SPARK_GRAFT_E1_VARIANTS: comma subset of plain,segmented,chunked,
-    // geo for single-variant scale runs (unset → all four; driver never
+    // geo,corpus for single-variant scale runs (unset → all; driver never
     // sets it). The sf1 decade reps run 1-4 min each, so re-measuring
     // one variant must not pay for the others. SPARK_GRAFT_SKIP_E1
-    // skips every flagship, the E3 geo build included.
+    // skips every bench-only row, the E3 geo build included.
     val e1Variants = sys.env.get("SPARK_GRAFT_E1_VARIANTS")
       .map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set("plain", "segmented", "chunked", "geo", "corpus"))
     def wantE1(v: String) = !skipE1 && e1Variants.contains(v)
+    // One bench-only row: timed when `run`, else the skipped marker; its
+    // persisted blocks are released before the next row starts.
+    def row(name: String, flag: Option[String], run: Boolean)(t: => Timed[Any]): Lane = {
+      val lane = Lane(name, if (run) t else skipped, flag)
+      releasePersisted()
+      lane
+    }
+    // Flagship protocol (VERDICT r12, Next round #1 — third ask): the
+    // driver-window flagship medians have been contention-poisoned three
+    // rounds running (r12: e1 raw [192.8, 29.4, 60.3] s vs 11–25 s local).
+    // Two mechanical defenses, both suggested verbatim by the judge:
+    //  - PROBE-GATED reps: before each rep the chase probe must read
+    //    within 2× the session floor; while it doesn't, sleep 3 s and
+    //    re-probe (≤ 10 waits ≈ 30 s) so the rep starts in a clean
+    //    window instead of timing through a neighbor's burst;
+    //  - DISCARD-MAX TRIMMED median over 5 reps (default raised 3→5):
+    //    the single worst rep — the one a mid-rep burst lands on — never
+    //    reaches the reported median.
+    // Raw reps, gc, and probes still go to the artifact unfiltered, so
+    // the trim hides nothing from a reader.
+    def flagship(name: String, key: String, variant: String)(run: => Long): Lane =
+      row(name, Some(key), wantE1(variant)) {
+        gateLane(key)
+        timeAdaptive(e1Reps, e1Reps, gateOnChase = true, trimMax = true,
+          preRep = settle)(run)
+      }
     // Flagship plan warm-up (VERDICT r13, Next round #7): one
     // small-scale (≈2% of bench size) pass of each E1 plan SHAPE before
     // any timed rep. The generic range/groupBy warm-up above covers JVM
@@ -686,30 +701,14 @@ object Bench {
     // window key changes the codegen stages, so warming only the plain
     // shape still left segmented rep 1 paying Janino compilation
     // (ADVICE r14) — warm exactly what will be timed, nothing else.
-    if (!skipE1 && e1Variants.exists(Set("plain", "segmented", "chunked"))) {
-      val warmHours = math.max(48, nHours / 50)
-      if (wantE1("plain")) runE1(Seq("borough"), hours = warmHours)
-      if (wantE1("segmented"))
-        runE1(Seq("borough", "SegmentID"), hours = warmHours)
-      if (wantE1("chunked"))
-        runE1(Seq("borough"), chunkSpanHours = Some(24L), hours = warmHours)
-      releasePersisted()
+    e1Shapes.filter(s => wantE1(s.variant)).foreach(runE1(_, math.max(48, nHours / 50)))
+    releasePersisted()
+    val e1Lanes = e1Shapes.map(s =>
+      flagship(s.lane, s.key, s.variant)(runE1(s, nHours)))
+    val e1JoinedRows = e1Lanes.head.t.first match {
+      case Some(n: Long) => n
+      case _ => -1L
     }
-    val e1 = if (!wantE1("plain")) skipped
-      else { gateLane("e1"); timeFlagship(e1Reps, settle) { runE1(Seq("borough")) } }
-    val e1JoinedRows = e1.first.getOrElse(-1L)
-    releasePersisted()
-    val e1Seg = if (!wantE1("segmented")) skipped
-      else { gateLane("seg"); timeFlagship(e1Reps, settle) { runE1(Seq("borough", "SegmentID")) } }
-    releasePersisted()
-    // Chunked-window configuration: EXACT reference (borough-keyed)
-    // window semantics, evaluated per daily chunk with bounded-history
-    // replication — window parallelism = #chunks instead of 5. The
-    // measured time includes the chunk-census validation pass and the
-    // second lazy execution of the join that the chunked shape requires.
-    val e1Chunk = if (!wantE1("chunked")) skipped
-      else { gateLane("chk"); timeFlagship(e1Reps, settle) { runE1(Seq("borough"), Some(24L)) } }
-    releasePersisted()
 
     // E3 geo flagship at the same reference scale (~1.7M points): the
     // full GeoJSON build + serve path whose pieces are oracle-checked
@@ -724,7 +723,7 @@ object Bench {
     def runGeo(): Long = {
       import graft.geo.{GeoOps, SpatialJoin}
       import pipelines.{DomainFixtures, GeoPipeline}
-      val traffic = DomainFixtures.traffic(spark, nHours, rowsPerHour)
+      val traffic = DomainFixtures.traffic(spark, nHours, RowsPerHour)
       val serveCounts = GeoPipeline.buildFeatures(traffic)
         .withColumn("color", GeoPipeline.volumeColor(col("vol")))
         .groupBy("Boro", "color")
@@ -759,9 +758,6 @@ object Bench {
       val snapped = lines.collect().head.getAs[Long]("n")
       served + snapped
     }
-    val geo = if (!wantE1("geo")) skipped
-      else { gateLane("geo"); timeFlagship(e1Reps, settle) { runGeo() } }
-    releasePersisted()
 
     // Corpus-curation flagship: the full LLM-data pipeline (quality
     // gates → exact dedup → MinHash-LSH + connected-components fuzzy
@@ -789,9 +785,6 @@ object Bench {
         .agg(count(lit(1)).as("n"), sum(col("n_tokens")).as("toks"))
         .collect().head.getAs[Long]("n")
     }
-    val corpus = if (!wantE1("corpus")) skipped
-      else { gateLane("corp"); timeFlagship(e1Reps, settle) { runCorpus() } }
-    releasePersisted()
 
     // BPE driver-local trainer (VERDICT r12, Next round #2): 1,500 merge
     // rounds over a deterministic 20k-word vocabulary. The merge loop is
@@ -801,7 +794,7 @@ object Bench {
     // because the shipped documents table has a 31-word vocabulary
     // (exhausts at ~106 merges) — the row exists to price the loop, and
     // the loop's cost is vocabulary-shaped.
-    val bpeLocal = if (skipE1) skipped else timeAdaptive(reps, 2) {
+    def bpeTrain(): Long = {
       val rnd = new scala.util.Random(42)
       val alphabet = "abcdefghijklmnopqrstuvwxyz"
       val vocabWords = (0 until 20000).map { _ =>
@@ -812,7 +805,6 @@ object Bench {
       val docs = vocabWords.grouped(100).map(_.mkString(" ")).toSeq.toDF("text")
       operators.TextOps.bpeTrainLocal(docs, col("text"), rounds = 1500).count()
     }
-    releasePersisted()
 
     // Persisted-ANN query-only latency (VERDICT r13, Next round #3): the
     // q_ann_* certification rows re-fit quantizers and run a brute-force
@@ -828,23 +820,23 @@ object Bench {
     // fresh-/tmp windows — never conflated with the search rows below
     // or with the q_ann_ivfpq_* certification lanes.
     val annIdx = "/tmp/graft_bench_ann_index"
-    val (annBuild, annSearch) = if (skipE1) (skipped, skipped) else {
-      val emb = sources.Tables.embeddings(spark, sfDir, widen = true)
-      val annQ = emb.filter(col("vec_id") < 10)
-      val build = timeAdaptive(reps, 2) {
+    lazy val emb = sources.Tables.embeddings(spark, sfDir, widen = true)
+
+    // The bench-only rows, in run order.
+    val benchOnly = e1Lanes ++ Seq(
+      flagship("flagship_geo", "geo", "geo")(runGeo()),
+      flagship("flagship_corpus", "corp", "corpus")(runCorpus()),
+      row("bpe_train_local_1500", None, !skipE1)(timeAdaptive(reps, 2)(bpeTrain())),
+      row("ann_index_build", None, !skipE1)(timeAdaptive(reps, 2) {
         operators.Similarity.buildAnnIndex(emb, "vec_id", "embedding", annIdx,
           nCells = 16, m = 16, ksub = 64) // unconditional: bench must not reuse stale state
-        0L
-      }
-      val search = timeAdaptive(reps, 2) {
-        operators.Similarity.searchAnnIndex(spark, annIdx, emb, annQ,
-          "vec_id", "embedding", 5, nProbe = 14, refine = 20)
+      }),
+      row("ann_search_persisted", None, !skipE1)(timeAdaptive(reps, 2) {
+        operators.Similarity.searchAnnIndex(spark, annIdx, emb,
+          emb.filter(col("vec_id") < 10), "vec_id", "embedding", 5,
+          nProbe = 14, refine = 20)
           .write.format("noop").mode("overwrite").save()
-        0L
-      }
-      (build, search)
-    }
-    releasePersisted()
+      }))
 
     // Pre-build the persisted-ANN certification lanes' keyed indexes
     // OUTSIDE every timed region (VERDICT r17, What's wrong #1): the
@@ -904,156 +896,39 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val sensitive = sensitiveLanes(name)
-      val r = name -> timeAdaptive(reps, 2,
+      val r = Lane(name, timeAdaptive(reps, 2,
         gateOnChase = sensitive,
         preRep = if (sensitive) settle else () => ()) {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      }
+      })
       releasePersisted()
       r
     }
-    val results = measured.map { case (name, t) => name -> t.median }
-    val errors = measured.collect { case (name, t) if t.err.isDefined => name -> t.err.get }
 
-    val flagships = Seq("flagship_e1" -> e1.median,
-      "flagship_e1_segmented" -> e1Seg.median,
-      "flagship_e1_chunked" -> e1Chunk.median,
-      "flagship_geo" -> geo.median,
-      "flagship_corpus" -> corpus.median,
-      "bpe_train_local_1500" -> bpeLocal.median,
-      "ann_index_build" -> annBuild.median,
-      "ann_search_persisted" -> annSearch.median)
-    val qs = (results ++ flagships)
-      .map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // Raw per-rep times for every measurement: lets the judge separate
-    // JVM/machine noise (wide spread, stable median) from a real shift
-    // (all reps moved) without re-running the suite. gc_ms / peak_heap_mb
-    // decide WHY an outlier rep happened (GC-bound vs external).
-    val allTimed: Seq[(String, Timed[_])] = measured ++
-      Seq("flagship_e1" -> e1, "flagship_e1_segmented" -> e1Seg,
-        "flagship_e1_chunked" -> e1Chunk, "flagship_geo" -> geo,
-        "flagship_corpus" -> corpus, "bpe_train_local_1500" -> bpeLocal,
-        "ann_index_build" -> annBuild, "ann_search_persisted" -> annSearch)
-    def repMap[T](f: Timed[_] => Seq[T]): String = allTimed
-      .map { case (k, t) => "\"" + k + "\":" + f(t).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val rawJson = repMap(_.raw)
-    val gcJson = repMap(_.gcMs)
-    val heapJson = repMap(_.peakHeapMb)
-    val loadJson = repMap(_.loadAvg)
-    // Per-rep environment probes (full artifact only): lets a reader
-    // correlate any single slow rep with the machine's state at that
-    // instant instead of inferring from the suite-edge pair.
-    val probeCpuQJson = repMap(_.probeCpu)
-    val probeMemQJson = repMap(_.probeMem)
-    val probeChaseQJson = repMap(_.probeChase)
-    val heapMaxMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    val allErrors = errors ++
-      e1.err.map("flagship_e1" -> _) ++
-      e1Seg.err.map("flagship_e1_segmented" -> _) ++
-      e1Chunk.err.map("flagship_e1_chunked" -> _) ++
-      geo.err.map("flagship_geo" -> _) ++
-      corpus.err.map("flagship_corpus" -> _) ++
-      bpeLocal.err.map("bpe_train_local_1500" -> _) ++
-      annBuild.err.map("ann_index_build" -> _) ++
-      annSearch.err.map("ann_search_persisted" -> _)
-    val errJson = allErrors
-      .map { case (k, v) => Verify.jsonString(k) + ":" + Verify.jsonString(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum + math.max(0, e1.median) +
-      math.max(0, e1Seg.median) + math.max(0, e1Chunk.median) +
-      math.max(0, geo.median) + math.max(0, corpus.median) +
-      math.max(0, bpeLocal.median) + math.max(0, annBuild.median) +
-      math.max(0, annSearch.median)
-    // stream_progress: the stream queries' micro-batch duration
-    // decomposition (addBatch vs walCommit vs the rest, summed over the
-    // final rep's batches) — makes their fixed floor a number in the
-    // artifact: addBatch ≪ wall seconds means query start/stop +
-    // checkpoint I/O dominates, not the data path.
-    val streamJson = graft.streaming.StreamMetrics.asJson
-    val nCpus = Runtime.getRuntime.availableProcessors()
-    // Lane-gate adjudication (VERDICT r17, Next round #1): the
-    // suite-edge chase reading each flagship lane STARTED at, the gate
-    // waits it spent, and whether the window was still above threshold
-    // when the lane ran anyway. window_degraded = any flagship lane ran
-    // degraded — the one-bit answer to "is this BENCH's flagship median
-    // comparable to a clean window's".
-    val laneGateJson = laneGateLog
-      .map { case (k, (pl, w, deg)) =>
-        s""""$k":{"chase_ms":$pl,"waits":$w,"degraded":$deg}""" }
-      .mkString("{", ",", "}")
-    val windowDegraded = laneGateLog.values.exists(_._3)
-    val chaseFloorJson = committedChaseFloorMs.map(_.toString).getOrElse("-1")
-    val probeJson = s"[$probeStart,${cpuProbeMs()}]"
-    val probeMtJson = s"[$probeMtStart,${cpuProbeMtMs()}]"
-    val probeMemJson = s"[$probeMemStart,${memProbeMs()}]"
-    val probeChaseJson = s"[$probeChaseStart,${chaseProbeMs()}]"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"raw":$rawJson,"gc_ms":$gcJson,"peak_heap_mb":$heapJson,"load_avg":$loadJson,"probe_cpu_q_ms":$probeCpuQJson,"probe_mem_q_ms":$probeMemQJson,"probe_chase_q_ms":$probeChaseQJson,"lane_gate":$laneGateJson,"chase_floor_ms":$chaseFloorJson,"window_degraded":$windowDegraded,"n_cpus":$nCpus,"cpu_probe_ms":$probeJson,"cpu_probe_mt_ms":$probeMtJson,"mem_probe_ms":$probeMemJson,"chase_probe_ms":$probeChaseJson,"stream_progress":$streamJson,"serving_p50_ms":$servingP50,"serving_p95_ms":$servingP95,"serving_local_p50_us":$servingLocalP50Us,"heap_max_mb":$heapMaxMb,"sf":"$sfDir","e1_rows":$e1JoinedRows,"reps":$reps}"""
-    // The full-precision line goes to a file; stdout gets a COMPACT line.
-    // The driver keeps only the last 2000 chars of stdout and parses the
-    // JSON it finds there — the full 105-query map with raw/gc detail is
-    // ~2.6-5 KB, so every prior round's driver artifact ended up
-    // "parsed": null with a mid-JSON tail. The compact line carries the
-    // total, every query that costs >= "cheap" seconds (descending, as
-    // many as fit a conservative char budget), the error map, and scalar
-    // GC/heap maxima — enough to grade from the artifact alone — plus a
-    // pointer to the committed full file.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val (full, compactLine) = artifacts(measured ++ benchOnly, Readings(
+      laneGate = laneGateLog.toSeq,
+      chaseFloorMs = committedChaseFloorMs.getOrElse(-1L),
+      nCpus = Runtime.getRuntime.availableProcessors(),
+      cpuProbe = (probeStart, cpuProbeMs()),
+      cpuProbeMt = (probeMtStart, cpuProbeMtMs()),
+      memProbe = (probeMemStart, memProbeMs()),
+      chaseProbe = (probeChaseStart, chaseProbeMs()),
+      // the stream queries' micro-batch duration decomposition (addBatch
+      // vs walCommit vs the rest): addBatch ≪ wall seconds means query
+      // start/stop + checkpoint I/O dominate, not the data path
+      streamProgress = graft.streaming.StreamMetrics.progress,
+      servingP50 = servingP50, servingP95 = servingP95,
+      servingLocalP50Us = servingLocalP50Us,
+      heapMaxMb = Runtime.getRuntime.maxMemory() / (1024 * 1024),
+      sf = sfDir, e1Rows = e1JoinedRows, reps = reps, full = outPath))
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (line + "\n").getBytes("UTF-8"))
+        (full + "\n").getBytes("UTF-8"))
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"bench_out write failed: ${e.getMessage}")
     }
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val descending = (results ++ flagships).sortBy(-_._2)
-      .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-    val gcMax = allTimed.flatMap(_._2.gcMs).foldLeft(0L)(math.max)
-    val heapMax = allTimed.flatMap(_._2.peakHeapMb).foldLeft(0L)(math.max)
-    // The compact line's error map is CAPPED (first 3 entries, each
-    // message truncated) so the suffix length stays bounded even when
-    // many queries fail — the full map is in the bench_out.json file.
-    // An uncapped suffix with ~100 failures would alone overflow the
-    // driver's 2000-char stdout tail and push the char budget negative,
-    // reproducing the mid-JSON truncation in exactly the failure case
-    // the artifact most needs to convey.
-    val errCompact = allErrors.take(3)
-      .map { case (k, v) => Verify.jsonString(k) + ":" + Verify.jsonString(v.take(100)) }
-      .mkString("{", ",", "}")
-    val loadMax = allTimed.flatMap(_._2.loadAvg).foldLeft(0.0)(math.max)
-    // Range of the per-rep chase mini-probe across the whole suite: a
-    // wide range in the compact line says "the window degraded mid-
-    // suite, see probe_chase_q_ms in the full artifact for which reps".
-    val chaseQ = allTimed.flatMap(_._2.probeChase)
-    val chaseQRange =
-      if (chaseQ.isEmpty) "[]" else s"[${chaseQ.min},${chaseQ.max}]"
-    // Flagship per-rep raw seconds + per-rep chase/gc probes IN the
-    // compact driver artifact (VERDICT r11, Next round #1): a poisoned
-    // window is then self-evident from BENCH_rN alone — a flagship rep
-    // whose seconds spike together with its chase probe is machine, not
-    // code, and the reader doesn't need the full bench_out.json to see
-    // it. Short keys (e1/seg/chk/geo/corp) to respect the char budget.
-    val flagTimed = Seq("e1" -> e1, "seg" -> e1Seg, "chk" -> e1Chunk,
-      "geo" -> geo, "corp" -> corpus)
-    def flagMap[T](f: Timed[_] => Seq[T], fmt: T => String): String = flagTimed
-      .map { case (k, t) => "\"" + k + "\":" + f(t).map(fmt).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    def r2d(v: Double): String = (math.rint(v * 100) / 100).toString
-    val flagRaw = flagMap(_.raw, r2d)
-    val flagChase = flagMap(_.probeChase, (v: Long) => v.toString)
-    val flagGc = flagMap(_.gcMs, (v: Long) => v.toString)
-    val suffix = s""","errors":$errCompact,"errors_total":${allErrors.size},"lane_gate":$laneGateJson,"chase_floor_ms":$chaseFloorJson,"window_degraded":$windowDegraded,"gc_ms_max":$gcMax,"peak_heap_mb_max":$heapMax,"heap_max_mb":$heapMaxMb,"load_max":$loadMax,"n_cpus":$nCpus,"cpu_probe_ms":$probeJson,"cpu_probe_mt_ms":$probeMtJson,"mem_probe_ms":$probeMemJson,"chase_probe_ms":$probeChaseJson,"chase_q_ms_range":$chaseQRange,"flag_raw":$flagRaw,"flag_chase_ms":$flagChase,"flag_gc_ms":$flagGc,"serving_p50_ms":$servingP50,"serving_p95_ms":$servingP95,"serving_local_p50_us":$servingLocalP50Us,"full":"$outPath","queries_total":${descending.length},"sf":"$sfDir","e1_rows":$e1JoinedRows,"reps":$reps}"""
-    val prefix = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":{"""
-    val budget = 1700 - prefix.length - suffix.length - 30 // 30: "queries_shown" slack
-    val shown = scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    descending.foreach { e =>
-      if (used + e.length + 1 <= budget) { shown += e; used += e.length + 1 }
-    }
-    val compact = prefix + shown.mkString(",") +
-      s"""},"queries_shown":${shown.length}""" + suffix
-    println(compact)
+    println(compactLine)
     spark.stop()
   }
 }

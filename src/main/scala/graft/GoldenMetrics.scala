@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 import graft.functions.{DateTimeKit, Holidays}
 import graft.metrics.Metrics
@@ -111,15 +112,18 @@ object GoldenMetrics {
     val (rfR2, gbtR2, nTrees) = fit(spark, nHours)
     val sec = (System.nanoTime() - t0) / 1e9
     def r4(v: Double) = math.rint(v * 10000) / 10000
-    val line =
-      s"""{"rf":{"test_r2":${r4(rfR2)},"published_r2":$publishedRf,""" +
-      s""""within_band":${math.abs(rfR2 - publishedRf) <= band},""" +
-      s""""config":"n_estimators=100,max_depth=15,seed=42,target=log1p,features=cyclical+borough_onehot+holiday+lags{1,24,168}"},""" +
-      s""""gbt":{"test_r2":${r4(gbtR2)},"published_r2":$publishedGbt,""" +
-      s""""within_band":${math.abs(gbtR2 - publishedGbt) <= band},""" +
-      s""""n_trees":$nTrees,""" +
-      s""""config":"max_iter=200,lr=0.1,max_depth=6,early_stopping,target=raw,features=cyclical+lag1+roll{3,24}"},""" +
-      s""""band":$band,"fixture":"trafficSeasonal(nHours=$nHours,noiseSd=20.0) — noise calibrated to the published band; see GoldenMetrics scaladoc","split":"temporal 80/20","fit_sec":${math.rint(sec * 10) / 10}}"""
+    import org.json4s.JsonDSL._
+    val line = compact(render(
+      ("rf" -> (("test_r2" -> r4(rfR2)) ~ ("published_r2" -> publishedRf) ~
+        ("within_band" -> (math.abs(rfR2 - publishedRf) <= band)) ~
+        ("config" -> "n_estimators=100,max_depth=15,seed=42,target=log1p,features=cyclical+borough_onehot+holiday+lags{1,24,168}"))) ~
+      ("gbt" -> (("test_r2" -> r4(gbtR2)) ~ ("published_r2" -> publishedGbt) ~
+        ("within_band" -> (math.abs(gbtR2 - publishedGbt) <= band)) ~
+        ("n_trees" -> nTrees) ~
+        ("config" -> "max_iter=200,lr=0.1,max_depth=6,early_stopping,target=raw,features=cyclical+lag1+roll{3,24}"))) ~
+      ("band" -> band) ~
+      ("fixture" -> s"trafficSeasonal(nHours=$nHours,noiseSd=20.0) — noise calibrated to the published band; see GoldenMetrics scaladoc") ~
+      ("split" -> "temporal 80/20") ~ ("fit_sec" -> math.rint(sec * 10) / 10)))
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes("UTF-8"))
     println(line)

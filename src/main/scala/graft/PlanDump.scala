@@ -25,24 +25,10 @@ object PlanDump {
     val census = new StringBuilder
     census.append("query\texchanges\tjoins\tcodegen_spans\tscans\tpushed_filters\n")
     // Flagship lanes (bench-only, not in SparkEntry.queries): same plan
-    // evidence as the declared queries, at a small fixture scale (plan
+    // evidence as the declared queries, at a 480-hour fixture (plan
     // SHAPE is scale-invariant; the generators are spark.range-based).
-    import org.apache.spark.sql.DataFrame
-    val nHours = 480
-    def flagships: Seq[(String, () => DataFrame)] = {
-      def e1(keys: Seq[String], span: Option[Long]) = {
-        val traffic = pipelines.DomainFixtures.traffic(spark, nHours, 40)
-        val weather = pipelines.DomainFixtures.weather(spark, nHours)
-        pipelines.TrainingPipeline.featureTable(traffic, weather, keys, span)
-          .groupBy("borough", "is_event")
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"))
-      }
-      Seq(
-        "flagship_e1" -> (() => e1(Seq("borough"), None)),
-        "flagship_e1_segmented" -> (() => e1(Seq("borough", "SegmentID"), None)),
-        "flagship_e1_chunked" -> (() => e1(Seq("borough"), Some(24L))))
-    }
+    val flagships = Bench.e1Shapes.map(s => s.lane -> (() =>
+      Bench.e1Aggregate(spark, 480, s.windowKeys, s.chunkSpanHours)))
     (flagships ++
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, f) =>
         n -> (() => f(spark, sfDir)) })

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Dedicated serving-latency lane (VERDICT r15 #6): the /predict p50
   * history kept re-litigating as lane contention (17.8 → 21.6 →
@@ -61,7 +62,8 @@ object ServingBench {
   /** The order statistic both serving artifacts report: index
     * p·n/100 − 1 when p·n divides evenly, else p·n/100. [[Bench]] and
     * [[main]] must report the SAME statistic or a phantom one-index gap
-    * reads as drift between them.
+    * reads as drift between them. p = 50 is the lower-middle median
+    * every [[Bench]] timing reports.
     */
   def percentile(xs: Seq[Double], p: Int): Double = {
     val s = xs.sorted
@@ -80,14 +82,13 @@ object ServingBench {
       val lats = measure(spark, warmup = WarmupCalls, timed = TimedCalls)
       (ms(percentile(lats, 50)), ms(percentile(lats, 95)))
     }
-    val p50s = perWindow.map(_._1).sorted
-    val med = p50s((p50s.length - 1) / 2)
-    val line =
-      s"""{"metric":"serving_p50_ms","value":$med,"unit":"ms","windows":${
-        perWindow.map { case (a, b) => s"""{"p50":$a,"p95":$b}""" }
-          .mkString("[", ",", "]")
-      },"warmup_calls":$WarmupCalls,"timed_calls":$TimedCalls,"heap_max_mb":${
-        Runtime.getRuntime.maxMemory() / (1024 * 1024)}}"""
+    val med = percentile(perWindow.map(_._1), 50)
+    import org.json4s.JsonDSL._
+    val line = compact(render(("metric" -> "serving_p50_ms") ~ ("value" -> med) ~
+      ("unit" -> "ms") ~
+      ("windows" -> perWindow.map { case (a, b) => ("p50" -> a) ~ ("p95" -> b) }) ~
+      ("warmup_calls" -> WarmupCalls) ~ ("timed_calls" -> TimedCalls) ~
+      ("heap_max_mb" -> Runtime.getRuntime.maxMemory() / (1024 * 1024))))
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes("UTF-8"))
     println(line)

@@ -1,24 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.{JField, JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab/CR/formfeed in builder-authored SQL or an exception message
-    * would otherwise make the driver's json.load fail and silently zero
-    * the round's output. Shared by Verify (oracle_sql.json) and Bench
-    * (errors map).
-    */
-  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name subset (local
     // iteration on one query without a 100-query dump; the driver
@@ -44,9 +30,8 @@ object Verify {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.sharedState.cacheManager.clearCache()
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = JObject(SparkEntry.oracleSql.map { case (k, v) => JField(k, JString(v)) }.toList)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compact(render(json)))
     spark.stop()
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable,
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.json4s.{DefaultFormats, Formats, JObject}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 import graft.operators.Relational
 
@@ -76,14 +78,18 @@ object SegmentedModel extends MLReadable[SegmentedModel] {
     */
   private[ml] class Writer(instance: SegmentedModel) extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
+      import org.json4s.JsonDSL._
       instance.normalModel.write.overwrite().save(s"$path/normal")
       instance.eventModel.write.overwrite().save(s"$path/event")
       writeUtf8(s"$path/segmented_metadata.json",
-        s"""{"maskCol":"${instance.maskCol}","predictionCol":"${instance.predictionCol}","expm1Inverse":${instance.expm1Inverse}}""")
-      val stageMeta =
-        s"""{"class":"${classOf[SegmentedModel].getName}","timestamp":${System.currentTimeMillis()},""" +
-        s""""sparkVersion":"${sc.version}","uid":"${instance.uid}","paramMap":{},"defaultParamMap":{}}"""
-      writeUtf8(s"$path/metadata/part-00000", stageMeta)
+        ("maskCol" -> instance.maskCol) ~
+        ("predictionCol" -> instance.predictionCol) ~
+        ("expm1Inverse" -> instance.expm1Inverse))
+      writeUtf8(s"$path/metadata/part-00000",
+        ("class" -> classOf[SegmentedModel].getName) ~
+        ("timestamp" -> System.currentTimeMillis()) ~
+        ("sparkVersion" -> sc.version) ~ ("uid" -> instance.uid) ~
+        ("paramMap" -> JObject()) ~ ("defaultParamMap" -> JObject()))
     }
   }
 
@@ -93,11 +99,11 @@ object SegmentedModel extends MLReadable[SegmentedModel] {
 
   override def read: MLReader[SegmentedModel] = new Reader
 
-  private def writeUtf8(path: String, content: String): Unit = {
+  private def writeUtf8(path: String, json: JObject): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+    try out.write(compact(render(json)).getBytes("UTF-8")) finally out.close()
   }
 
   /** S14 for M4: persist as two MLlib pipeline artifacts + a tiny JSON
@@ -114,15 +120,13 @@ object SegmentedModel extends MLReadable[SegmentedModel] {
     val p = new org.apache.hadoop.fs.Path(s"$path/segmented_metadata.json")
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val in = fs.open(p)
-    val meta = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    def str(k: String): String =
-      s""""$k":"([^"]*)"""".r.findFirstMatchIn(meta).get.group(1)
-    val expm1 = """"expm1Inverse":(true|false)""".r
-      .findFirstMatchIn(meta).get.group(1).toBoolean
+    val meta = try parse(new String(
+      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")) finally in.close()
+    implicit val formats: Formats = DefaultFormats
     new SegmentedModel(Identifiable.randomUID("segmented"),
       PipelineModel.load(s"$path/normal"), PipelineModel.load(s"$path/event"),
-      str("maskCol"), str("predictionCol"), expm1)
+      (meta \ "maskCol").extract[String], (meta \ "predictionCol").extract[String],
+      (meta \ "expm1Inverse").extract[Boolean])
   }
 
   /** Mask truthiness for boolean OR 0/1 integer mask columns. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.json4s.{JField, JInt, JObject}
 
 /** Micro-batch duration decomposition for the most recent completed run
   * of each NAMED streaming query, recorded by the `*AvailableNow`
@@ -25,7 +26,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamMetrics {
 
-  private val last = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val last = new java.util.concurrent.ConcurrentHashMap[String, JObject]()
 
   /** Record the finished query's summed per-batch durations. No-op for
     * unnamed queries and never throws — bench instrumentation must not
@@ -43,18 +44,16 @@ object StreamMetrics {
       }
       val stateRows = ps.last.stateOperators.map(_.numRowsTotal).sum
       val stateBytes = ps.last.stateOperators.map(_.memoryUsedBytes).sum
-      val fields = sums.map { case (k, v) => "\"" + k + "\":" + v } ++
-        Seq("\"batches\":" + ps.length, "\"state_rows\":" + stateRows,
-          "\"state_bytes\":" + stateBytes)
-      last.put(q.name, fields.mkString("{", ",", "}"))
+      last.put(q.name, JObject((sums.toSeq ++ Seq("batches" -> ps.length.toLong,
+        "state_rows" -> stateRows, "state_bytes" -> stateBytes))
+        .map { case (k, v) => JField(k, JInt(v)) }.toList))
       ()
     }
   } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** JSON object of everything recorded this JVM, keyed by query name. */
-  def asJson: String = {
+  /** Everything recorded this JVM, keyed by query name. */
+  def progress: JObject = {
     import scala.jdk.CollectionConverters._
-    last.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    JObject(last.asScala.toSeq.sortBy(_._1).map { case (k, v) => JField(k, v) }.toList)
   }
 }

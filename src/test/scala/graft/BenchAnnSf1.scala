@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.SfHarness.{f3, timeS}
 
 /** Round-13 ANN decade datapoint (VERDICT r12, Next round #3): IVF and
   * IVF-PQ vs brute-force cosine top-k WALL TIME on a CLUSTERED corpus
@@ -21,12 +22,6 @@ import graft.operators.Similarity
   * BENCH_ann_sf1.json.
   */
 object BenchAnnSf1 {
-  private def timeS[A](f: => A): (Double, A) = {
-    val t0 = System.nanoTime()
-    val r = f
-    ((System.nanoTime() - t0) / 1e9, r)
-  }
-  private def f3(v: Double): Double = math.rint(v * 1000) / 1000
 
   /** Deterministic HIERARCHICAL clustered corpus: unit blob centers
     * (seeded driver Gaussians, one typedlit constant) + a per-sub-blob

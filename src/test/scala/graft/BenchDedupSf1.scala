@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 import graft.sources.Tables
+import graft.SfHarness.{f3, timeS}
 
 /** Round-11 scaling datapoint (VERDICT r10 next-steps #6): the deepest
   * iterative path — MinHash-LSH pairs → connected components → survivor
@@ -14,12 +15,6 @@ import graft.sources.Tables
   * output committed as BENCH_dedup_sf1.json.
   */
 object BenchDedupSf1 {
-  private def timeS[A](f: => A): (Double, A) = {
-    val t0 = System.nanoTime()
-    val r = f
-    ((System.nanoTime() - t0) / 1e9, r)
-  }
-
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
 
@@ -56,6 +51,4 @@ object BenchDedupSf1 {
     println(s"""{"metric":"dedup_scaling","reps_each":$reps,"best_of":"sum_sec",${results.mkString(",")}}""")
     spark.stop()
   }
-
-  private def f3(v: Double): Double = math.rint(v * 1000) / 1000
 }

@@ -147,16 +147,20 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("M4+S14: SegmentedModel save/load roundtrip predicts identically") {
-    val seg = SegmentedModel.fit(fixture, "is_event",
-      (f, p) => Models.ols(Seq("x1", "x2"), "y", featuresCol = f, predictionCol = p),
-      expm1Inverse = false)
-    val dir = java.nio.file.Files.createTempDirectory("graft-seg").toString
-    SegmentedModel.save(seg, dir)
-    val loaded = SegmentedModel.load(dir)
-    assert(loaded.maskCol == "is_event" && !loaded.expm1Inverse)
-    val a = seg.transform(fixture).agg(sum("prediction")).head().getDouble(0)
-    val b = loaded.transform(fixture).agg(sum("prediction")).head().getDouble(0)
-    assert(math.abs(a - b) < 1e-9)
+    // the second mask name needs JSON escaping in the saved metadata
+    Seq("is_event", "is \"event\" \\ flag").foreach { mask =>
+      val data = fixture.withColumnRenamed("is_event", mask)
+      val seg = SegmentedModel.fit(data, mask,
+        (f, p) => Models.ols(Seq("x1", "x2"), "y", featuresCol = f, predictionCol = p),
+        expm1Inverse = false)
+      val dir = java.nio.file.Files.createTempDirectory("graft-seg").toString
+      SegmentedModel.save(seg, dir)
+      val loaded = SegmentedModel.load(dir)
+      assert(loaded.maskCol == mask && !loaded.expm1Inverse)
+      val a = seg.transform(data).agg(sum("prediction")).head().getDouble(0)
+      val b = loaded.transform(data).agg(sum("prediction")).head().getDouble(0)
+      assert(math.abs(a - b) < 1e-9)
+    }
   }
 
   test("M4+S14: SegmentedModel nests as a stage in a persisted MLlib Pipeline") {
