@@ -17,11 +17,6 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  /** Names of the driver-generated TPC-H-ish test tables (TESTDATA.md). */
-  val testTables: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Parquet scan of one test table: `dir/<name>.parquet`. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -37,37 +32,47 @@ object Tables {
     * testdata generations — TIMESTAMP(NANOS) (rejected by Spark's
     * µs TimestampType by default), TIMESTAMP(MICROS, isAdjustedToUTC
     * = false) (read as TIMESTAMP_NTZ under Spark 4's NTZ inference),
-    * and plain UTC micros. Normalize all three to TimestampType: nanos
-    * are read as long (session conf set here so any session, including
-    * the driver's, can call this without special setup) and floored to
-    * µs; NTZ is reinterpreted as UTC wall time — the engine runs with
-    * spark.sql.session.timeZone=UTC, so the cast is value-identical to
-    * what the DuckDB oracle computes from the same naive timestamps.
+    * and plain UTC micros. [[eventsWithTimestamp]] normalizes all three
+    * to TimestampType.
     */
   def events(spark: SparkSession, dir: String, widen: Boolean = false): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The NTZ→TimestampType cast below interprets naive wall time in the
-    // SESSION timezone — only under UTC are its epoch values identical
-    // to the tz-independent nanos path (timestamp_micros). Pin it here,
-    // like nanosAsLong, so a non-UTC caller session gets the same
-    // instants as the engine's own sessions instead of shifted epochs.
-    // Deliberately NOT set-and-restored: the returned plan is LAZY, and
-    // the timezone must still hold when an action finally executes it —
-    // a scoped restore would hand back a plan whose correctness expired
-    // with the scope. Callers needing non-UTC sessions should use a
-    // separate session for events access.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = table(spark, dir, "events")
-    val df = raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+    val df = eventsWithTimestamp(spark)(table(spark, dir, "events"))
     // Same opt-in widening as documents/embeddings below: the test
     // fixture is one row group = one map task, so per-row-expensive
     // consumers (JSON assembly/parse) would run on one core of 32.
     if (widen) withMinMapParallelism(spark, s"$dir/events.parquet", df) else df
   }
+
+  /** Run `scan` (a batch or streaming read of the events table) and
+    * normalize its `ts` column to TimestampType: nanos are read as long
+    * (session conf set here, before `scan`, so any session, including
+    * the driver's, can read events without special setup) and floored
+    * to µs; NTZ is reinterpreted as UTC wall time — the engine runs
+    * with spark.sql.session.timeZone=UTC, so the cast is value-identical
+    * to what the DuckDB oracle computes from the same naive timestamps.
+    *
+    * The timezone is pinned, like nanosAsLong, because the NTZ cast
+    * interprets naive wall time in the SESSION timezone — only under
+    * UTC are its epoch values identical to the tz-independent nanos
+    * path (timestamp_micros), so a non-UTC caller session gets the same
+    * instants as the engine's own sessions instead of shifted epochs.
+    * Deliberately NOT set-and-restored: the returned plan is LAZY, and
+    * the timezone must still hold when an action finally executes it —
+    * a scoped restore would hand back a plan whose correctness expired
+    * with the scope. Callers needing non-UTC sessions should use a
+    * separate session for events access.
+    */
+  private[graft] def eventsWithTimestamp(spark: SparkSession)(scan: => DataFrame): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    val raw = scan
+    raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case _: TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => raw
+    }
+  }
+
   /** Documents and embeddings feed the per-row-EXPENSIVE operators
     * (tokenize → md5 → shingle, dot products): their map parallelism is
     * whatever the scan yields, and a parquet row group is the smallest

@@ -4,9 +4,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.json4s.{JField, JInt, JObject}
 
 /** Micro-batch duration decomposition for the most recent completed run
-  * of each NAMED streaming query, recorded by the `*AvailableNow`
-  * helpers after `awaitTermination` and emitted by the bench into
-  * `bench_out.json` as `stream_progress`.
+  * of each NAMED streaming query, recorded by the one-shot runner of
+  * the `Streams.*AvailableNow` harness runs after `awaitTermination`
+  * and emitted by the bench into `bench_out.json` as `stream_progress`.
   *
   * Why: the `q_stream_*` bench entries carry a per-query fixed floor
   * (query start/stop, temp-checkpoint I/O, state-store commits) that

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Lineage.LineageOps
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -66,38 +66,86 @@ object Streams {
     * every timestamp 1000×, collapsing event-time windows (caught by
     * the oracle as a 3385-row aggregate dropping to 10). Probe the
     * footer with a batch read (one driver-side metadata job at stream
-    * definition) and normalize to TimestampType the same way
+    * definition) and normalize to TimestampType through
+    * [[graft.sources.Tables.eventsWithTimestamp]], as the batch
     * [[graft.sources.Tables.events]] does.
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Same session-timezone pin as [[graft.sources.Tables.events]]: the
-    // NTZ cast is only epoch-identical to the nanos path under UTC.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // Footer probe needs the file to exist; a stream defined over a
-    // directory populated LATER (the production ingest shape) falls back
-    // to a schema instead of throwing at definition time. The fallback
-    // is NTZ — the CURRENT testdata generation — and deliberately NOT
-    // the nanos/long schema: if nanos files later land under an NTZ
-    // schema the read fails LOUDLY (parquet type mismatch), whereas a
-    // long fallback would read µs files as "nanos" and silently shrink
-    // every timestamp 1000× (the exact corruption the probe exists to
-    // prevent; see the scaladoc above).
-    val tsType =
-      try spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-      catch {
-        case scala.util.control.NonFatal(_) => TimestampNTZType
-      }
-    val schema = StructType(eventsNanosSchema.map(f =>
-      if (f.name == "ts") f.copy(dataType = tsType) else f))
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet") // the table is a single file; the stream source needs a directory
-      .parquet(dir)
-    tsType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.eventsWithTimestamp(spark) {
+      // Footer probe needs the file to exist; a stream defined over a
+      // directory populated LATER (the production ingest shape) falls back
+      // to a schema instead of throwing at definition time. The fallback
+      // is NTZ — the CURRENT testdata generation — and deliberately NOT
+      // the nanos/long schema: if nanos files later land under an NTZ
+      // schema the read fails LOUDLY (parquet type mismatch), whereas a
+      // long fallback would read µs files as "nanos" and silently shrink
+      // every timestamp 1000× (the exact corruption the probe exists to
+      // prevent; see the scaladoc above).
+      val tsType =
+        try spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+        catch {
+          case scala.util.control.NonFatal(_) => TimestampNTZType
+        }
+      val schema = StructType(eventsNanosSchema.map(f =>
+        if (f.name == "ts") f.copy(dataType = tsType) else f))
+      spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet") // the table is a single file; the stream source needs a directory
+        .parquet(dir)
     }
+
+  /** State-store instance count of every one-shot harness stream
+    * ([[runAvailableNow]]). A stateful stream's instance count is fixed
+    * from `spark.sql.shuffle.partitions` at FIRST start (and pinned by
+    * the checkpoint thereafter), and every instance pays a
+    * per-micro-batch commit (delta file write + maintenance) that is
+    * pure fixed cost — so state parallelism should track state-row
+    * cardinality, not the session's batch-analytics shuffle width.
+    * Measured at sf0.1 on local[32]: 32→8 instances cut the stateful
+    * trailing stream 5.1→2.1 s and the near-dup ingest 3.7→2.3 s with
+    * row-identical output. On a 4-core session (4 shuffle partitions)
+    * the same constant RAISES the count from 4 to 8; it has not been
+    * re-measured there. At ingest scale the trade-off runs in reverse:
+    * size the count to keep per-instance state within executor memory.
+    */
+  private[graft] val HarnessStatePartitions = 8
+
+  /** Run `data` to completion as the AvailableNow query `queryName` on
+    * [[HarnessStatePartitions]] state-store instances (the session conf
+    * is restored after, also on failure) and record it in
+    * [[StreamMetrics]]. Sink: the memory table `queryName`, or with
+    * `collect` a `foreachBatch` over a temp checkpoint deleted after —
+    * a one-shot run, not a resumable ingest.
+    */
+  private def runAvailableNow[T](data: Dataset[T], queryName: String,
+      mode: OutputMode, collect: Option[Dataset[T] => Unit] = None): Unit = {
+    val spark = data.sparkSession
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    val ckpt = collect.map(_ => java.nio.file.Files.createTempDirectory("graft-stream-ckpt"))
+    spark.conf.set(key, HarnessStatePartitions.toString)
+    try {
+      val w = data.writeStream.queryName(queryName).outputMode(mode)
+      val sink = collect.zip(ckpt).fold(w.format("memory")) { case (f, dir) =>
+        w.option("checkpointLocation", dir.toString)
+          .foreachBatch((batch: Dataset[T], _: Long) => f(batch))
+      }
+      val q = sink.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      StreamMetrics.record(q)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+      ckpt.foreach(deleteRecursively)
+    }
+  }
+
+  /** [[runAvailableNow]] into the memory sink; returns its table. */
+  private def runToMemory(data: Dataset[_], queryName: String,
+      mode: OutputMode): DataFrame = {
+    runAvailableNow(data, queryName, mode)
+    data.sparkSession.table(queryName)
   }
 
   /** T3 (windowed): hourly per-type aggregate over a stream, with a
@@ -105,43 +153,13 @@ object Streams {
     * AvailableNow pass over historical files yields the full result
     * (batch-equivalent semantics — oracle-checked in q_stream_hourly_agg).
     */
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the previous value after. A stateful stream's
-    * state-store instance count is fixed from this conf at FIRST start
-    * (and pinned by the checkpoint thereafter), and every instance pays
-    * a per-micro-batch commit (delta file write + maintenance) that is
-    * pure fixed cost — so state parallelism should track state-row
-    * cardinality, not the session's batch-analytics shuffle width.
-    * Measured at sf0.1 on local[32]: 32→8 instances cut the stateful
-    * trailing stream 5.1→2.1 s and the near-dup ingest 3.7→2.3 s with
-    * row-identical output. At ingest scale the same knob applies in
-    * reverse: size it to keep per-instance state within executor memory.
-    */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   def hourlyAggAvailableNow(spark: SparkSession, dir: String,
-      queryName: String = "stream_hourly",
-      statePartitions: Int = 8): DataFrame = {
+      queryName: String = "stream_hourly"): DataFrame = {
     val agg = eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    }
-    spark.table(queryName)
+    runToMemory(agg, queryName, OutputMode.Complete())
       .select(col("w.start").as("hour"), col("event_type"), col("n"),
         col("sum_value"))
   }
@@ -156,19 +174,11 @@ object Streams {
     * once it can no longer grow.
     */
   def sessionizeAvailableNow(spark: SparkSession, dir: String,
-      queryName: String = "stream_sessions",
-      statePartitions: Int = 8): DataFrame = {
+      queryName: String = "stream_sessions"): DataFrame = {
     val agg = eventsStream(spark, dir)
       .groupBy(session_window(col("ts"), "30 minutes").as("__sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    }
-    spark.table(queryName)
+    runToMemory(agg, queryName, OutputMode.Complete())
       .select(col("user_id"), col("__sw.start").as("session_start"),
         col("n_events"), col("sum_value"))
   }
@@ -196,8 +206,7 @@ object Streams {
   def driftMonitorAvailableNow(spark: SparkSession, dir: String,
       edges: Seq[Double], refProps: Seq[Double],
       windowDur: String = "1 day", eps: Double = 1e-6,
-      queryName: String = "stream_drift",
-      statePartitions: Int = 8): DataFrame = {
+      queryName: String = "stream_drift"): DataFrame = {
     require(refProps.length == edges.length + 1,
       "refProps must have edges.length + 1 bins")
     val nBins = refProps.length
@@ -211,20 +220,14 @@ object Streams {
       sum(when(col("__bin") === i, 1L).otherwise(0L)).as(s"__c$i"))
     val agg = binned.groupBy(window(col("ts"), windowDur).as("w"))
       .agg(aggs.head, aggs.tail: _*)
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    }
+    val counts = runToMemory(agg, queryName, OutputMode.Complete())
     val n = (0 until nBins).map(i => col(s"__c$i")).reduce(_ + _)
     val psi = (0 until nBins).map { i =>
       val p = col(s"__c$i") / col("__n")
       (p - lit(refProps(i))) *
         log(greatest(p, lit(eps)) / lit(math.max(refProps(i), eps)))
     }.reduce(_ + _)
-    spark.table(queryName)
+    counts
       .withColumn("__n", n)
       .select(col("w.start").as("window_start"), col("__n").as("n"),
         psi.as("psi"))
@@ -253,8 +256,7 @@ object Streams {
   def driftMatrixMonitorAvailableNow(spark: SparkSession, dir: String,
       features: Seq[(String, org.apache.spark.sql.Column, Seq[Double], Seq[Double])],
       windowDur: String = "1 day", eps: Double = 1e-6,
-      queryName: String = "stream_drift_matrix",
-      statePartitions: Int = 8): DataFrame = {
+      queryName: String = "stream_drift_matrix"): DataFrame = {
     require(features.nonEmpty, "need >= 1 feature")
     features.foreach { case (n, _, edges, refProps) =>
       require(refProps.length == edges.length + 1,
@@ -273,22 +275,16 @@ object Streams {
     val agg = melted
       .groupBy(window(col("ts"), windowDur).as("w"), col("__f"), col("__bin"))
       .agg(count(lit(1)).as("__c"))
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    }
+    // bins-sized; checkpoint breaks the memory-table self-join lineage
+    // (grid derives from counts) and drops the watermark metadata that
+    // otherwise makes the join's reference dedup fail
+    val counts = runToMemory(agg, queryName, OutputMode.Complete())
+      .graftCheckpoint()
     // batch tail over the bins-sized memory table
     import spark.implicits._
     val dim = features.flatMap { case (n, _, _, rp) =>
       rp.zipWithIndex.map { case (p, i) => (n, i.toLong, p) }
     }.toDF("__f", "__bin", "__p")
-    // bins-sized; checkpoint breaks the memory-table self-join lineage
-    // (grid derives from counts) and drops the watermark metadata that
-    // otherwise makes the join's reference dedup fail
-    val counts = spark.table(queryName).graftCheckpoint()
     val grid = counts.select(col("w")).distinct().crossJoin(broadcast(dim))
     val dense = grid
       .join(counts, Seq("w", "__f", "__bin"), "left")
@@ -323,8 +319,7 @@ object Streams {
   def qualityMonitorAvailableNow(spark: SparkSession, dir: String,
       checks: Seq[(String, org.apache.spark.sql.Column)],
       windowDur: String = "1 day",
-      queryName: String = "stream_quality",
-      statePartitions: Int = 8): DataFrame = {
+      queryName: String = "stream_quality"): DataFrame = {
     require(checks.nonEmpty, "checks must be non-empty")
     val aggs = count(lit(1)).as("__n") +: checks.zipWithIndex.map {
       case ((_, c), i) => coalesce(c.cast("long"), lit(0L)).as(s"__v$i") }
@@ -332,16 +327,9 @@ object Streams {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), windowDur).as("w"))
       .agg(aggs.head, aggs.tail: _*)
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    }
     val stackArgs = lit(checks.length) +: checks.zipWithIndex.flatMap {
       case ((n, _), i) => Seq(lit(n), col(s"__v$i")) }
-    spark.table(queryName)
+    runToMemory(agg, queryName, OutputMode.Complete())
       .select(col("w.start").as("window_start"), col("__n").as("n_rows"),
         stack(stackArgs: _*).as(Seq("check", "violations")))
       .withColumn("passed", col("violations") === 0)
@@ -360,8 +348,7 @@ object Streams {
     */
   def enrichedAggAvailableNow(spark: SparkSession, dir: String,
       tiers: Seq[(String, String)],
-      queryName: String = "stream_enriched",
-      statePartitions: Int = 8): DataFrame = {
+      queryName: String = "stream_enriched"): DataFrame = {
     import spark.implicits._
     val dim = tiers.toDF("event_type", "tier")
     val agg = eventsStream(spark, dir)
@@ -369,14 +356,7 @@ object Streams {
       .withColumn("tier", coalesce(col("tier"), lit("other")))
       .groupBy(window(col("ts"), "1 day").as("w"), col("tier"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream.format("memory").queryName(queryName)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    }
-    spark.table(queryName)
+    runToMemory(agg, queryName, OutputMode.Complete())
       .select(col("tier"), col("w.start").as("day"), col("n"),
         col("sum_value"))
   }
@@ -492,25 +472,20 @@ object Streams {
     * row-identical to the batch window functions (the oracle).
     */
   def statefulTrailingAvailableNow(spark: SparkSession, dir: String,
-      queryName: String = "stream_stateful",
-      statePartitions: Int = 8): org.apache.spark.sql.DataFrame = {
+      queryName: String = "stream_stateful"): DataFrame = {
     import spark.implicits._
     val ev = eventsStream(spark, dir)
       .select(col("user_id").cast("string").as("k"),
         unix_micros(col("ts")).as("t"), col("value").as("v"),
         col("event_id").as("id"))
       .as[Ev]
-    withStatePartitions(spark, statePartitions) {
-      val q = trailingOnline(ev).writeStream.format("memory")
-        .queryName(queryName).outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    }
-    spark.table(queryName)
+    runToMemory(trailingOnline(ev), queryName, OutputMode.Append())
   }
 
   // -- Streaming near-duplicate dedup at ingest (MinHash-LSH band state) ---
+
+  /** A row that [[firstClaimFlags]] folds: `ts` is its event time. */
+  sealed trait EventTimed { def ts: java.sql.Timestamp }
 
   /** One LSH band bucket touched by one document. `ts` is the document's
     * event time (ingest time in production; a constant for historical
@@ -518,12 +493,13 @@ object Streams {
     * bucket state in [[nearDupFlags]].
     */
   case class BandRow(doc_id: Long, band: Int, band_hash: Long, n_bands: Int,
-    ts: java.sql.Timestamp)
-  /** Per-bucket state: event-time of the bucket's most recent claimant.
-    * A bucket whose `lastTouchMs + horizon` has fallen behind the
+    ts: java.sql.Timestamp) extends EventTimed
+  /** Per-key state of [[firstClaimFlags]] (an LSH bucket, a span
+    * hash): event-time of the key's most recent claimant.
+    * A key whose `lastTouchMs + horizon` has fallen behind the
     * watermark is EXPIRED — logically absent even if the physical
     * timeout has not fired yet (timeouts only fire for groups with no
-    * data in the batch, so a re-touched stale bucket must be expired
+    * data in the batch, so a re-touched stale key must be expired
     * in-function).
     */
   case class BucketState(lastTouchMs: Long)
@@ -532,6 +508,15 @@ object Streams {
     * this batch).
     */
   case class BandFlag(doc_id: Long, fresh: Boolean, n_bands: Int)
+
+  /** Event time of the dedup-at-ingest rows: `tsCol` when given (ingest
+    * time in a live deployment). `None` — for historical corpora with
+    * no time column — stamps every row with one constant timestamp, so
+    * the watermark never advances and no state is ever evicted (the
+    * pre-eviction behavior, appropriate for a bounded backfill).
+    */
+  private def eventTime(tsCol: Option[String]): Column =
+    tsCol.map(col).getOrElse(to_timestamp(lit("2020-01-01 00:00:00")))
 
   /** (doc, band, band_hash) rows for streaming (or batch) near-dup
     * dedup: MinHash signatures → LSH band buckets — all stateless
@@ -546,18 +531,13 @@ object Streams {
     * branch, and checkpointing it away is a batch-only tool.
     *
     * `tsCol`: the event-time column carried into [[BandRow.ts]] (ingest
-    * time in a live deployment). `None` — for historical corpora with no
-    * time column — stamps every row with one constant timestamp, so the
-    * watermark never advances and no bucket is ever evicted (the
-    * pre-eviction behavior, appropriate for a bounded backfill).
+    * time in a live deployment); see [[eventTime]] for `None`.
     */
   def lshBandRows(docs: DataFrame, textCol: String, idCol: String,
       n: Int = 3, k: Int = 12, rowsPerBand: Int = 2,
       tsCol: Option[String] = None): Dataset[BandRow] = {
     import docs.sparkSession.implicits._
     require(k % rowsPerBand == 0, "k must be divisible by rowsPerBand")
-    val tsExpr = tsCol.map(col)
-      .getOrElse(to_timestamp(lit("2020-01-01 00:00:00")))
     val sig = graft.operators.Dedup.withMinhash(
       docs.select(Seq(col(idCol), col(textCol)) ++
         tsCol.map(c => col(c)): _*), textCol, idCol, n, k)
@@ -568,7 +548,7 @@ object Streams {
         graft.functions.Hashing.h60(concat_ws("_", parts: _*)).as("band_hash"))
     }
     sig
-      .select(col(idCol).as("doc_id"), tsExpr.as("ts"),
+      .select(col(idCol).as("doc_id"), eventTime(tsCol).as("ts"),
         explode(when(col("mh_0").isNull, // null iff the shingle set is empty
           array(struct(lit(-1).as("band"),
             col(idCol).cast("long").as("band_hash"))))
@@ -630,27 +610,39 @@ object Streams {
       horizonMs: Long = 30L * 24 * 3600 * 1000,
       latenessMs: Long = 3600L * 1000): Dataset[BandFlag] = {
     import bands.sparkSession.implicits._
-    bands
+    firstClaimFlags(bands, horizonMs, latenessMs)(
+      b => (b.band, b.band_hash), Ordering.by[BandRow, Long](_.doc_id))(
+      (r, first) => BandFlag(r.doc_id, fresh = first, r.n_bands))
+  }
+
+  /** The state function of [[nearDupFlags]] and [[duplicateSpanFlags]]
+    * (state and eviction contract: [[nearDupFlags]]). `verdict(row,
+    * first)` is the output row; `first` holds for the first row in
+    * `order` of a key no earlier batch claimed within the horizon.
+    */
+  private def firstClaimFlags[R <: EventTimed, K: Encoder, F: Encoder](
+      rows: Dataset[R], horizonMs: Long, latenessMs: Long)(
+      key: R => K, order: Ordering[R])(verdict: (R, Boolean) => F): Dataset[F] = {
+    import rows.sparkSession.implicits._
+    rows
       .withWatermark("ts", s"$latenessMs milliseconds")
-      .groupByKey(b => (b.band, b.band_hash))
+      .groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (_: (Int, Long), rows: Iterator[BandRow], state: GroupState[BucketState]) => {
+        (_: K, group: Iterator[R], state: GroupState[BucketState]) => {
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
             val wm = state.getCurrentWatermarkMs()
             val seen = state.getOption.exists(_.lastTouchMs + horizonMs >= wm)
-            val rs = rows.toArray.sortBy(_.doc_id)
+            val rs = group.toVector.sorted(order)
             val maxTs = rs.iterator.map(_.ts.getTime).max
             val touch = if (seen) math.max(state.get.lastTouchMs, maxTs) else maxTs
             state.update(BucketState(touch))
             // input rows are never below the watermark, so touch+horizon
             // is a valid (future) timeout timestamp
             state.setTimeoutTimestamp(touch + horizonMs)
-            rs.iterator.zipWithIndex.map { case (r, i) =>
-              BandFlag(r.doc_id, fresh = !seen && i == 0, r.n_bands)
-            }
+            rs.iterator.zipWithIndex.map { case (r, i) => verdict(r, !seen && i == 0) }
           }
         })
   }
@@ -661,7 +653,7 @@ object Streams {
     * BATCH-LOCAL — cross-batch memory lives only in [[nearDupFlags]]'s
     * bucket state.
     */
-  private def keptIds(batch: Dataset[BandFlag]): DataFrame =
+  private[graft] def keptIds(batch: Dataset[BandFlag]): DataFrame =
     batch.groupBy(col("doc_id"), col("n_bands"))
       .agg(sum(when(col("fresh"), 1L).otherwise(0L)).as("n_fresh"))
       .filter(col("n_fresh") === col("n_bands"))
@@ -686,26 +678,16 @@ object Streams {
     * resumable ingest.
     */
   def nearDupDedupAvailableNow(spark: SparkSession, dir: String,
-      n: Int = 3, k: Int = 12, rowsPerBand: Int = 2,
-      statePartitions: Int = 8): DataFrame = {
+      n: Int = 3, k: Int = 12, rowsPerBand: Int = 2): DataFrame = {
     import spark.implicits._
     val kept = scala.collection.mutable.ArrayBuffer[Long]()
     val flags = nearDupFlags(
       lshBandRows(documentsStream(spark, dir), "text", "doc_id", n, k, rowsPerBand))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-neardup-ckpt")
-    try withStatePartitions(spark, statePartitions) {
-      val q = flags.writeStream.outputMode(OutputMode.Append())
-        .queryName("q_stream_neardup_run")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: Dataset[BandFlag], _: Long) =>
-          val ids = keptIds(batch).as[Long].collect()
-          kept.synchronized { val _ = kept ++= ids }
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    } finally deleteRecursively(ckpt)
+    runAvailableNow(flags, "q_stream_neardup_run", OutputMode.Append(),
+      Some { (batch: Dataset[BandFlag]) =>
+        val ids = keptIds(batch).as[Long].collect()
+        kept.synchronized { val _ = kept ++= ids }
+      })
     kept.toSeq.toDF("doc_id")
   }
 
@@ -746,12 +728,7 @@ object Streams {
     * see [[spanHashRows]]).
     */
   case class SpanRow(doc_id: Long, pos: Int, h: Long, ts: java.sql.Timestamp)
-
-  /** Per-span-hash state: when this content hash last claimed a first
-    * occurrence (or was re-touched) — 8-byte key + one timestamp, the
-    * [[BucketState]] shape at span granularity.
-    */
-  case class SpanHashState(lastTouchMs: Long)
+    extends EventTimed
 
   /** Verdict per span occurrence: `dup` = this occurrence repeats
     * content already seen (earlier batch within the horizon, or an
@@ -763,16 +740,12 @@ object Streams {
     * of the batch form's shingle step ([[graft.operators.TextOps]]
     * spanCoveredPositions): tokenize, hash tokens, roll minLen-grams.
     * Stateless, so it runs unchanged on a streaming DataFrame. `tsCol`
-    * as in [[lshBandRows]]: `None` stamps one constant timestamp
-    * (watermark never advances — bounded-backfill semantics, nothing
-    * evicted).
+    * as in [[lshBandRows]] ([[eventTime]]).
     */
   def spanHashRows(docs: DataFrame, textCol: String, idCol: String,
       minLen: Int, tsCol: Option[String] = None): Dataset[SpanRow] = {
     import docs.sparkSession.implicits._
     require(minLen > 0, "minLen must be positive")
-    val tsExpr = tsCol.map(col)
-      .getOrElse(to_timestamp(lit("2020-01-01 00:00:00")))
     docs
       .withColumn("__hts", transform(
         graft.operators.TextOps.tokens(col(textCol)),
@@ -781,7 +754,7 @@ object Streams {
         posexplode(graft.operators.TextOps
           .shingleHashesFromTokenHashes(col("__hts"), minLen))
           .as(Seq("pos", "h")),
-        tsExpr.as("ts"))
+        eventTime(tsCol).as("ts"))
       .as[SpanRow]
   }
 
@@ -800,11 +773,8 @@ object Streams {
     * dedup-at-ingest contract, same divergence mode as
     * [[nearDupFlags]].
     *
-    * State: one [[SpanHashState]] per distinct span hash touched within
-    * the horizon — BOUNDED by the watermark exactly like
-    * [[nearDupFlags]] (EventTimeTimeout physically drops hashes
-    * untouched for `horizonMs` of event time; a stale-but-retouched
-    * hash expires in-function against `getCurrentWatermarkMs`). Span
+    * State: one [[BucketState]] per distinct span hash touched within
+    * the horizon, evicted exactly like [[nearDupFlags]]' buckets. Span
     * hashes are a heavier key population than LSH buckets (one per
     * token position, not per doc-band), so at ingest scale the horizon
     * is the knob that keeps the store sized to the dedup window —
@@ -815,27 +785,9 @@ object Streams {
       horizonMs: Long = 30L * 24 * 3600 * 1000,
       latenessMs: Long = 3600L * 1000): Dataset[SpanFlag] = {
     import spans.sparkSession.implicits._
-    spans
-      .withWatermark("ts", s"$latenessMs milliseconds")
-      .groupByKey(_.h)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (_: Long, rows: Iterator[SpanRow], state: GroupState[SpanHashState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val wm = state.getCurrentWatermarkMs()
-            val seen = state.getOption.exists(_.lastTouchMs + horizonMs >= wm)
-            val rs = rows.toArray.sortBy(r => (r.doc_id, r.pos))
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val touch = if (seen) math.max(state.get.lastTouchMs, maxTs) else maxTs
-            state.update(SpanHashState(touch))
-            state.setTimeoutTimestamp(touch + horizonMs)
-            rs.iterator.zipWithIndex.map { case (r, i) =>
-              SpanFlag(r.doc_id, r.pos, dup = seen || i > 0)
-            }
-          }
-        })
+    firstClaimFlags(spans, horizonMs, latenessMs)(
+      _.h, Ordering.by[SpanRow, (Long, Int)](r => (r.doc_id, r.pos)))(
+      (r, first) => SpanFlag(r.doc_id, r.pos, dup = !first))
   }
 
   /** Batch-local island merge shared by the harness and sink variants:
@@ -875,25 +827,16 @@ object Streams {
     * path StreamingSpec covers).
     */
   def duplicateSpansAvailableNow(spark: SparkSession, dir: String,
-      minLen: Int = 8, statePartitions: Int = 8): DataFrame = {
+      minLen: Int = 8): DataFrame = {
     val spans = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
     val flags = duplicateSpanFlags(
       spanHashRows(documentsStream(spark, dir), "text", "doc_id", minLen))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-spans-ckpt")
-    try withStatePartitions(spark, statePartitions) {
-      val q = flags.writeStream.outputMode(OutputMode.Append())
-        .queryName("q_stream_dedup_spans_variable_run")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: Dataset[SpanFlag], _: Long) =>
-          val rows = spanIslands(batch, minLen).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          spans.synchronized { val _ = spans ++= rows }
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      StreamMetrics.record(q)
-    } finally deleteRecursively(ckpt)
+    runAvailableNow(flags, "q_stream_dedup_spans_variable_run",
+      OutputMode.Append(), Some { (batch: Dataset[SpanFlag]) =>
+        val rows = spanIslands(batch, minLen).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        spans.synchronized { val _ = spans ++= rows }
+      })
     import spark.implicits._
     spans.toSeq.toDF("doc_id", "span_start", "span_len")
   }
@@ -910,8 +853,8 @@ object Streams {
     *    alive, their event time is above every watermark in play);
     *  - batch 2 — every older row (the stragglers).
     *
-    * `maxFilesPerTrigger=1` with explicit file modification times pins
-    * the batch boundaries. The three-batch shape matters because Spark
+    * [[pinnedBatchStream]] (one file per micro-batch, ascending mtimes)
+    * pins the batch boundaries. The three-batch shape matters because Spark
     * filters late events with the watermark LAGGED ONE BATCH behind the
     * eviction watermark (SPARK-40925 watermark propagation: batch N's
     * late filter uses the value persisted for batch N−1, i.e. computed
@@ -935,7 +878,7 @@ object Streams {
     */
   def lateAdmissionAvailableNow(spark: SparkSession, dir: String,
       recentDays: Int = 2, lateness: String = "72 hours",
-      nRedelivered: Int = 10, statePartitions: Int = 8,
+      nRedelivered: Int = 10,
       queryName: String = "stream_late"): DataFrame = {
     val ev = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("ts"), col("value"))
@@ -949,23 +892,6 @@ object Streams {
     val stragglers = ev.filter(col("ts") < lit(cutoff))
     val root = java.nio.file.Files.createTempDirectory("graft_stream_late")
     try {
-      val srcDir = root.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      def writeBatchFile(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = root.resolve(s"tmp_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no parquet part written for $name"))
-        val dest = srcDir.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dest)
-        dest.toFile.setLastModified(mtime): Unit
-      }
-      val t0 = System.currentTimeMillis() - 300000L
-      writeBatchFile(recent, "b0", t0)
-      writeBatchFile(redelivered, "b1", t0 + 60000L)
-      writeBatchFile(stragglers, "b2", t0 + 120000L)
       // dropDuplicates WITH the event-time column in the key set: that is
       // the form whose late-data contract is defined (rows below the
       // watermark are dropped before touching state). The horizon-bounded
@@ -974,19 +900,11 @@ object Streams {
       // admits them as new — which is exactly the wrong operator to
       // certify admission semantics on. Re-deliveries carry the original
       // (event_id, ts), so dedup still drops them.
-      val admitted = spark.readStream.schema(recent.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir.toString)
+      val admitted = pinnedBatchStream(spark, root.resolve("src"),
+          Seq(recent, redelivered, stragglers))
         .withWatermark("ts", lateness)
         .dropDuplicates("event_id", "ts")
-      withStatePartitions(spark, statePartitions) {
-        val q = admitted.writeStream.format("memory").queryName(queryName)
-          .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamMetrics.record(q)
-      }
-      spark.table(queryName)
+      runToMemory(admitted, queryName, OutputMode.Append())
         .select(col("event_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("value"))
         // the memory table dies with the session but the files don't —
@@ -1008,9 +926,8 @@ object Streams {
     * matchWindow), with `ackModSeconds ≤ matchWindow` so every
     * co-admitted pair matches.
     *
-    * Three pinned micro-batches per side (same mtime trick as
-    * [[lateAdmissionAvailableNow]]; two source directories, each under
-    * `maxFilesPerTrigger=1`, advance in lockstep):
+    * Three pinned micro-batches per side (two [[pinnedBatchStream]]
+    * sources advance in lockstep):
     *
     *  - batch 0 — left: the recent slice (carries the global max event
     *    time); right: recent acks EXCEPT the held-back subset
@@ -1043,7 +960,7 @@ object Streams {
   def streamStreamJoinAvailableNow(spark: SparkSession, dir: String,
       recentDays: Int = 2, lateness: String = "72 hours",
       ackModSeconds: Int = 600, matchWindowSeconds: Int = 600,
-      holdbackMod: Int = 20, statePartitions: Int = 8,
+      holdbackMod: Int = 20,
       queryName: String = "stream_stream_join"): DataFrame = {
     require(ackModSeconds <= matchWindowSeconds,
       "every ack must fall inside the join window")
@@ -1062,61 +979,53 @@ object Streams {
     val stragglers = withAck.filter(col("ts") < lit(cutoff))
     val root = java.nio.file.Files.createTempDirectory("graft_stream_ssj")
     try {
-      val srcL = root.resolve("left"); val srcR = root.resolve("right")
-      java.nio.file.Files.createDirectories(srcL)
-      java.nio.file.Files.createDirectories(srcR)
-      def writeBatchFile(df: DataFrame, dest: java.nio.file.Path,
-          name: String, mtime: Long): Unit = {
-        val tmp = root.resolve(s"tmp_${dest.getFileName}_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no parquet part written for $name"))
-        val out = dest.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, out)
-        out.toFile.setLastModified(mtime): Unit
-      }
-      val t0 = System.currentTimeMillis() - 300000L
       val holdback = col("ack_id") % holdbackMod === 0
-      writeBatchFile(recent.select(leftCols: _*), srcL, "b0", t0)
-      writeBatchFile(recent.select(leftCols: _*).limit(0), srcL, "b1",
-        t0 + 60000L)
-      writeBatchFile(stragglers.select(leftCols: _*), srcL, "b2",
-        t0 + 120000L)
-      writeBatchFile(recent.select(rightCols: _*).filter(!holdback),
-        srcR, "b0", t0)
-      writeBatchFile(recent.select(rightCols: _*).filter(holdback),
-        srcR, "b1", t0 + 60000L)
-      writeBatchFile(stragglers.select(rightCols: _*), srcR, "b2",
-        t0 + 120000L)
-      val leftSchema = recent.select(leftCols: _*).schema
-      val rightSchema = recent.select(rightCols: _*).schema
-      val left = spark.readStream.schema(leftSchema)
-        .option("maxFilesPerTrigger", 1).parquet(srcL.toString)
+      val recentL = recent.select(leftCols: _*)
+      val recentR = recent.select(rightCols: _*)
+      val left = pinnedBatchStream(spark, root.resolve("left"),
+          Seq(recentL, recentL.limit(0), stragglers.select(leftCols: _*)))
         .withWatermark("ts", lateness)
-      val right = spark.readStream.schema(rightSchema)
-        .option("maxFilesPerTrigger", 1).parquet(srcR.toString)
+      val right = pinnedBatchStream(spark, root.resolve("right"),
+          Seq(recentR.filter(!holdback), recentR.filter(holdback),
+            stragglers.select(rightCols: _*)))
         .withWatermark("ack_ts", lateness)
       val joined = left.join(right,
         col("event_id") === col("ack_id") &&
           col("ack_ts") >= col("ts") &&
           col("ack_ts") < col("ts") +
             expr(s"INTERVAL $matchWindowSeconds SECONDS"))
-      withStatePartitions(spark, statePartitions) {
-        val q = joined.writeStream.format("memory").queryName(queryName)
-          .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamMetrics.record(q)
-      }
-      spark.table(queryName)
+      runToMemory(joined, queryName, OutputMode.Append())
         .select(col("event_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"),
           unix_micros(col("ack_ts")).as("ack_us"), col("value"))
         // materialize before the finally-block deletes the source dirs
         .graftCheckpoint()
     } finally deleteRecursively(root)
+  }
+
+  /** A file stream that delivers `batches` in order, one per
+    * micro-batch: batch i is written as the ONE parquet file
+    * `dest/b<i>.parquet` with ascending modification time, and a file
+    * source under `maxFilesPerTrigger=1` takes one file per micro-batch
+    * in mtime order — pinning the fixture's batch boundaries.
+    */
+  private def pinnedBatchStream(spark: SparkSession, dest: java.nio.file.Path,
+      batches: Seq[DataFrame]): DataFrame = {
+    java.nio.file.Files.createDirectories(dest)
+    val t0 = System.currentTimeMillis() - 300000L
+    batches.zipWithIndex.foreach { case (df, i) =>
+      val tmp = dest.resolveSibling(s"tmp_${dest.getFileName}_b$i")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles()
+        .find(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no parquet part written for batch $i"))
+      val out = dest.resolve(s"b$i.parquet")
+      java.nio.file.Files.move(part.toPath, out)
+      out.toFile.setLastModified(t0 + 60000L * i): Unit
+    }
+    spark.readStream.schema(batches.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dest.toString)
   }
 
   /** Best-effort recursive delete for harness-scoped temp dirs. */

@@ -356,10 +356,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch {
         (b: org.apache.spark.sql.Dataset[Streams.BandFlag], _: Long) =>
-          val ids = b.groupBy(col("doc_id"), col("n_bands"))
-            .agg(sum(when(col("fresh"), 1L).otherwise(0L)).as("n_fresh"))
-            .filter(col("n_fresh") === col("n_bands"))
-            .select(col("doc_id")).as[Long].collect()
+          val ids = Streams.keptIds(b).as[Long].collect()
           kept.synchronized { val _ = kept ++= ids }
           ()
       }.start()
@@ -406,10 +403,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch {
         (b: org.apache.spark.sql.Dataset[Streams.BandFlag], _: Long) =>
-          val ids = b.groupBy(col("doc_id"), col("n_bands"))
-            .agg(sum(when(col("fresh"), 1L).otherwise(0L)).as("n_fresh"))
-            .filter(col("n_fresh") === col("n_bands"))
-            .select(col("doc_id")).as[Long].collect()
+          val ids = Streams.keptIds(b).as[Long].collect()
           kept.synchronized { val _ = kept ++= ids }
           ()
       }.start()
@@ -480,10 +474,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch {
         (b: org.apache.spark.sql.Dataset[Streams.BandFlag], _: Long) =>
-          val ids = b.groupBy(col("doc_id"), col("n_bands"))
-            .agg(sum(when(col("fresh"), 1L).otherwise(0L)).as("n_fresh"))
-            .filter(col("n_fresh") === col("n_bands"))
-            .select(col("doc_id")).as[Long].collect()
+          val ids = Streams.keptIds(b).as[Long].collect()
           kept.synchronized { val _ = kept ++= ids }
           ()
       }.start()
@@ -674,10 +665,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("checkpointLocation", ckpt.toString)
         .foreachBatch {
           (b: org.apache.spark.sql.Dataset[Streams.BandFlag], _: Long) =>
-            val ids = b.groupBy(col("doc_id"), col("n_bands"))
-              .agg(sum(when(col("fresh"), 1L).otherwise(0L)).as("n_fresh"))
-              .filter(col("n_fresh") === col("n_bands"))
-              .select(col("doc_id")).as[Long].collect()
+            val ids = Streams.keptIds(b).as[Long].collect()
             kept.synchronized { val _ = kept ++= ids }
             ()
         }.start()
@@ -704,5 +692,61 @@ class StreamingSpec extends AnyFunSuite {
       case Some(v) => spark.conf.set(confKey, v)
       case None => spark.conf.unset(confKey)
     }
+  }
+
+  test("one-shot harness streams run on the fixed state-partition count and restore the session's shuffle partitions") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before != Streams.HarnessStatePartitions.toString,
+      "the session default must differ from the constant, or a leak would not show")
+    // progress and termination events arrive on the listener bus after
+    // awaitTermination returns; a run's events are complete once its
+    // QueryTerminatedEvent is in
+    val names = Set("sp_complete", "sp_append", "q_stream_neardup_run", "sp_failing")
+    val runNames = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
+    val stateShuffle = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val terminated = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (names(e.name)) { val _ = runNames.put(e.runId, e.name) }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val p = e.progress
+        if (names(p.name) && p.stateOperators.nonEmpty) {
+          val _ = stateShuffle.put(p.name, p.stateOperators(0).numShufflePartitions.toInt)
+        }
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        Option(runNames.get(e.runId)).foreach { n => val _ = terminated.put(n, true) }
+    }
+    def awaitEvents(name: String): Unit = {
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!terminated.containsKey(name) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(terminated.containsKey(name), s"no termination event for $name")
+    }
+    spark.streams.addListener(listener)
+    try {
+      Streams.hourlyAggAvailableNow(spark, dir, "sp_complete").collect()
+      assert(spark.conf.get(key) == before)
+      Streams.statefulTrailingAvailableNow(spark, dir, "sp_append").collect()
+      assert(spark.conf.get(key) == before)
+      Streams.nearDupDedupAvailableNow(spark, dir).collect()
+      assert(spark.conf.get(key) == before)
+      for (n <- Seq("sp_complete", "sp_append", "q_stream_neardup_run")) {
+        awaitEvents(n)
+        assert(stateShuffle.get(n) == Streams.HarnessStatePartitions,
+          s"$n ran on ${stateShuffle.get(n)} state partitions")
+      }
+      // a query that fails mid-run still restores the conf
+      val failing = Seq(("boom", sum(raise_error(concat(lit("quality check failed: "),
+        col("event_type"))).cast("long"))))
+      intercept[Exception] {
+        Streams.qualityMonitorAvailableNow(spark, dir, failing, queryName = "sp_failing")
+      }
+      awaitEvents("sp_failing")
+      assert(spark.conf.get(key) == before)
+    } finally spark.streams.removeListener(listener)
   }
 }
