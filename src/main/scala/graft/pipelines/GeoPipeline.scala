@@ -56,10 +56,20 @@ object GeoPipeline {
       .when(vol > 5, "yellow").otherwise("green")
 
   /** E3 filter: case-insensitive borough equality + calendar year;
-    * null/unparseable timestamps are skipped (never error).
+    * null/unparseable timestamps are skipped (never error; a null `ts`
+    * fails both bounds).
+    *
+    * The year is the half-open range [y-01-01 00:00, (y+1)-01-01 00:00)
+    * with both bounds built in the session time zone, so it selects
+    * exactly the rows `year(ts) === y` does. Unlike `year(ts)`, a bare
+    * comparison on `ts` against constants pushes down to the scan
+    * (`PushedFilters`), where a Parquet file with usable `ts` statistics
+    * can skip row groups.
     */
-  def filterFeatures(features: DataFrame, borough: String, yearN: Int): DataFrame =
+  def filterFeatures(features: DataFrame, borough: String, yearN: Int): DataFrame = {
+    def newYear(y: Int) = make_timestamp_ltz(lit(y), lit(1), lit(1), lit(0), lit(0), lit(0))
     features.filter(
       lower(col("Boro")) === lit(borough.toLowerCase) &&
-        col("ts").isNotNull && year(col("ts")) === lit(yearN))
+        col("ts") >= newYear(yearN) && col("ts") < newYear(yearN + 1))
+  }
 }

@@ -64,9 +64,10 @@ object Streams {
     * TIMESTAMP(MICROS) naive → TIMESTAMP_NTZ) — a hardcoded long
     * schema read µs-precision files as µs-valued "nanos" and shrank
     * every timestamp 1000×, collapsing event-time windows (caught by
-    * the oracle as a 3385-row aggregate dropping to 10). Probe the
-    * footer with a batch read (one driver-side metadata job at stream
-    * definition) and normalize to TimestampType through
+    * the oracle as a 3385-row aggregate dropping to 10). Take the
+    * footer's type from [[graft.sources.Tables.parquetSchema]] (one
+    * metadata job per file listing, shared with the batch scans) and
+    * normalize to TimestampType through
     * [[graft.sources.Tables.eventsWithTimestamp]], as the batch
     * [[graft.sources.Tables.events]] does.
     */
@@ -82,7 +83,7 @@ object Streams {
       // every timestamp 1000× (the exact corruption the probe exists to
       // prevent; see the scaladoc above).
       val tsType =
-        try spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+        try graft.sources.Tables.parquetSchema(spark, s"$dir/events.parquet")("ts").dataType
         catch {
           case scala.util.control.NonFatal(_) => TimestampNTZType
         }

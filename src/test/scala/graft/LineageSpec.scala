@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.TestSpark.withTempDir
 
 /** The reliable-checkpoint switch (`spark.graft.checkpointDir`): when
   * set, every internal eager materialization becomes a reliable
@@ -28,24 +27,22 @@ class LineageSpec extends AnyFunSuite {
 
   test("checkpointDir switch: CC values identical, files land in the dir") {
     val expected = ccLabels() // default local-checkpoint path
-    val dir = Files.createTempDirectory("graft-ckpt").toFile
-    try {
-      spark.conf.set(Lineage.ConfKey, dir.getAbsolutePath)
-      assert(ccLabels() == expected,
-        "reliable-checkpoint run must produce identical labels")
-      // the frontier loop materialized through the switch: the reliable
-      // checkpoint directory must now contain rdd checkpoint data
-      def countFiles(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles().map(countFiles).sum else 1
-      assert(countFiles(dir) > 0,
-        s"expected reliable checkpoint files under $dir")
-    } finally {
-      spark.conf.unset(Lineage.ConfKey)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
+    withTempDir("graft-ckpt") { tmp =>
+      val dir = tmp.toFile
+      try {
+        spark.conf.set(Lineage.ConfKey, dir.getAbsolutePath)
+        assert(ccLabels() == expected,
+          "reliable-checkpoint run must produce identical labels")
+        // the frontier loop materialized through the switch: the reliable
+        // checkpoint directory must now contain rdd checkpoint data
+        def countFiles(f: java.io.File): Int =
+          if (f.isDirectory) f.listFiles().map(countFiles).sum else 1
+        assert(countFiles(dir) > 0,
+          s"expected reliable checkpoint files under $dir")
+      } finally {
+        spark.conf.unset(Lineage.ConfKey)
+        org.apache.spark.CheckpointDirs.clear(spark.sparkContext)
       }
-      rm(dir)
     }
   }
 
@@ -53,19 +50,16 @@ class LineageSpec extends AnyFunSuite {
     val df = (1L to 100L).toDF("v").filter(col("v") % 2 === 0)
     val localSum = Lineage.materialize(df, StorageLevel.DISK_ONLY)
       .agg(sum("v")).head().getLong(0)
-    val dir = Files.createTempDirectory("graft-ckpt2").toFile
-    try {
-      spark.conf.set(Lineage.ConfKey, dir.getAbsolutePath)
-      val reliableSum = Lineage.materialize(df, StorageLevel.DISK_ONLY)
-        .agg(sum("v")).head().getLong(0)
-      assert(reliableSum == localSum)
-    } finally {
-      spark.conf.unset(Lineage.ConfKey)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
+    withTempDir("graft-ckpt2") { dir =>
+      try {
+        spark.conf.set(Lineage.ConfKey, dir.toFile.getAbsolutePath)
+        val reliableSum = Lineage.materialize(df, StorageLevel.DISK_ONLY)
+          .agg(sum("v")).head().getLong(0)
+        assert(reliableSum == localSum)
+      } finally {
+        spark.conf.unset(Lineage.ConfKey)
+        org.apache.spark.CheckpointDirs.clear(spark.sparkContext)
       }
-      rm(dir)
     }
   }
 }

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.metrics.Metrics
 import graft.ml.{Featurize, Importance, Models, SegmentedModel}
+import graft.TestSpark.withTempDir
 
 /** §2.8 ML operators: fit/predict pipelines, segmented dispatch,
   * importances, splits, save/load. Parity with the reference is
@@ -136,47 +137,53 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("S14 model save/load roundtrip predicts identically") {
-    val df = fixture.filter($"is_event" === 0)
-    val model = Models.ols(Seq("x1", "x2"), "y").fit(df)
-    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
-    Models.save(model, dir)
-    val loaded = Models.load(dir)
-    val orig = model.transform(df).agg(sum("prediction")).head().getDouble(0)
-    val re = loaded.transform(df).agg(sum("prediction")).head().getDouble(0)
-    assert(math.abs(orig - re) < 1e-6)
+    withTempDir("graft-model") { tmp =>
+      val df = fixture.filter($"is_event" === 0)
+      val model = Models.ols(Seq("x1", "x2"), "y").fit(df)
+      val dir = tmp.toString
+      Models.save(model, dir)
+      val loaded = Models.load(dir)
+      val orig = model.transform(df).agg(sum("prediction")).head().getDouble(0)
+      val re = loaded.transform(df).agg(sum("prediction")).head().getDouble(0)
+      assert(math.abs(orig - re) < 1e-6)
+    }
   }
 
   test("M4+S14: SegmentedModel save/load roundtrip predicts identically") {
-    // the second mask name needs JSON escaping in the saved metadata
-    Seq("is_event", "is \"event\" \\ flag").foreach { mask =>
-      val data = fixture.withColumnRenamed("is_event", mask)
-      val seg = SegmentedModel.fit(data, mask,
-        (f, p) => Models.ols(Seq("x1", "x2"), "y", featuresCol = f, predictionCol = p),
-        expm1Inverse = false)
-      val dir = java.nio.file.Files.createTempDirectory("graft-seg").toString
-      SegmentedModel.save(seg, dir)
-      val loaded = SegmentedModel.load(dir)
-      assert(loaded.maskCol == mask && !loaded.expm1Inverse)
-      val a = seg.transform(data).agg(sum("prediction")).head().getDouble(0)
-      val b = loaded.transform(data).agg(sum("prediction")).head().getDouble(0)
-      assert(math.abs(a - b) < 1e-9)
+    withTempDir("graft-seg") { tmp =>
+      // the second mask name needs JSON escaping in the saved metadata
+      Seq("is_event", "is \"event\" \\ flag").foreach { mask =>
+        val data = fixture.withColumnRenamed("is_event", mask)
+        val seg = SegmentedModel.fit(data, mask,
+          (f, p) => Models.ols(Seq("x1", "x2"), "y", featuresCol = f, predictionCol = p),
+          expm1Inverse = false)
+        val dir = tmp.toString
+        SegmentedModel.save(seg, dir)
+        val loaded = SegmentedModel.load(dir)
+        assert(loaded.maskCol == mask && !loaded.expm1Inverse)
+        val a = seg.transform(data).agg(sum("prediction")).head().getDouble(0)
+        val b = loaded.transform(data).agg(sum("prediction")).head().getDouble(0)
+        assert(math.abs(a - b) < 1e-9)
+      }
     }
   }
 
   test("M4+S14: SegmentedModel nests as a stage in a persisted MLlib Pipeline") {
-    val seg = SegmentedModel.fit(fixture, "is_event",
-      (f, p) => Models.ols(Seq("x1", "x2"), "y", featuresCol = f, predictionCol = p))
-    // A fitted Pipeline whose only stage is an already-fitted Transformer:
-    // save goes through SegmentedModel.write, load dispatches back through
-    // SegmentedModel.read via the metadata class name.
-    val pm = new org.apache.spark.ml.Pipeline().setStages(Array(seg)).fit(fixture)
-    val dir = java.nio.file.Files.createTempDirectory("graft-seg-pipe").toString
-    pm.write.overwrite().save(dir)
-    val loaded = org.apache.spark.ml.PipelineModel.load(dir)
-    assert(loaded.stages.head.isInstanceOf[SegmentedModel])
-    val a = pm.transform(fixture).agg(sum("prediction")).head().getDouble(0)
-    val b = loaded.transform(fixture).agg(sum("prediction")).head().getDouble(0)
-    assert(math.abs(a - b) < 1e-9)
+    withTempDir("graft-seg-pipe") { tmp =>
+      val seg = SegmentedModel.fit(fixture, "is_event",
+        (f, p) => Models.ols(Seq("x1", "x2"), "y", featuresCol = f, predictionCol = p))
+      // A fitted Pipeline whose only stage is an already-fitted Transformer:
+      // save goes through SegmentedModel.write, load dispatches back through
+      // SegmentedModel.read via the metadata class name.
+      val pm = new org.apache.spark.ml.Pipeline().setStages(Array(seg)).fit(fixture)
+      val dir = tmp.toString
+      pm.write.overwrite().save(dir)
+      val loaded = org.apache.spark.ml.PipelineModel.load(dir)
+      assert(loaded.stages.head.isInstanceOf[SegmentedModel])
+      val a = pm.transform(fixture).agg(sum("prediction")).head().getDouble(0)
+      val b = loaded.transform(fixture).agg(sum("prediction")).head().getDouble(0)
+      assert(math.abs(a - b) < 1e-9)
+    }
   }
 
   test("golden metrics: reference configs land in the published R2 bands on the seasonal fixture") {

@@ -321,6 +321,28 @@ class PipelinesSpec extends AnyFunSuite {
     } finally { feats.unpersist(); () }
   }
 
+  test("E3 filter: the year is [y-01-01 00:00, (y+1)-01-01 00:00) in the session time zone") {
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(key)
+    try Seq("UTC", "America/New_York").foreach { zone =>
+      spark.conf.set(key, zone)
+      // wall times, read as timestamps in the session zone when the plan runs
+      val feats = Seq(("Queens", "2024-01-01 00:00:00"), ("Queens", "2024-12-31 23:59:59.999999"),
+          ("queens", "2025-01-01 00:00:00"), ("QUEENS", "2023-12-31 23:59:59.999999"),
+          ("Queens", null), ("Bronx", "2024-06-01 00:00:00"))
+        .toDF("Boro", "t").select(col("Boro"), to_timestamp(col("t")).as("ts"))
+      def kept(y: Int) = GeoPipeline.filterFeatures(feats, "qUeEnS", y)
+        .select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")).as[String]
+        .collect().sorted.toSeq
+      assert(kept(2024) == Seq("2024-01-01 00:00:00.000000", "2024-12-31 23:59:59.999999"), zone)
+      assert(kept(2025) == Seq("2025-01-01 00:00:00.000000"), zone)
+      assert(kept(2023) == Seq("2023-12-31 23:59:59.999999"), zone)
+      // the same rows year(ts) selects in this zone
+      assert(kept(2024).size ==
+        feats.filter(lower(col("Boro")) === "queens" && year(col("ts")) === 2024).count(), zone)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("E3 volume colors match the reference thresholds") {
     val got = Seq(25.0, 15.0, 7.0, 2.0).toDF("v")
       .select(GeoPipeline.volumeColor(col("v")).as("c"))

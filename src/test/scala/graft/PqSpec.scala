@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
 import graft.operators.Similarity
+import graft.TestSpark.withTempDir
 
 /** Product-quantization kernels and the pqTopK pipeline: encode argmin
   * vs a hand model, ADC table/lookup-sum consistency, exactness when
@@ -177,65 +178,69 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("persisted index: build → search equals the inline ivfPqTopK row-for-row") {
-    val corpus = blobCorpus(nBlobs = 8, perBlob = 100, dim = 32, seed = 7)
-    val queries = corpus.filter(col("vec_id") < 10)
-    val path = java.nio.file.Files.createTempDirectory("ann_idx").toString
-    // same seed + same config → the stored quantizer is bit-identical to
-    // the inline fit, so the two search paths must agree exactly
-    Similarity.buildAnnIndex(corpus, "vec_id", "embedding", path,
-      nCells = 8, m = 8, ksub = 16)
-    val stored = Similarity.searchAnnIndex(spark, path, corpus, queries,
-      "vec_id", "embedding", 5, nProbe = 3, refine = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val inline = Similarity.ivfPqTopK(corpus, queries, "vec_id", "embedding",
-      5, nCells = 8, nProbe = 3, m = 8, ksub = 16, refine = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(stored == inline && stored.nonEmpty)
-    // the stored artifacts are bounded: quantizer state is
-    // cells + m·ksub rows, codes are one row per corpus vector
-    assert(spark.read.parquet(s"$path/coarse").count() == 8L)
-    assert(spark.read.parquet(s"$path/pq").count() == 8L * 16)
-    assert(spark.read.parquet(s"$path/codes").count() == corpus.count())
-    // codes land partitioned by coarse cell (the pruning structure)
-    assert(new java.io.File(s"$path/codes").listFiles()
-      .exists(_.getName.startsWith("cell=")))
+    withTempDir("ann_idx") { tmp =>
+      val corpus = blobCorpus(nBlobs = 8, perBlob = 100, dim = 32, seed = 7)
+      val queries = corpus.filter(col("vec_id") < 10)
+      val path = tmp.toString
+      // same seed + same config → the stored quantizer is bit-identical to
+      // the inline fit, so the two search paths must agree exactly
+      Similarity.buildAnnIndex(corpus, "vec_id", "embedding", path,
+        nCells = 8, m = 8, ksub = 16)
+      val stored = Similarity.searchAnnIndex(spark, path, corpus, queries,
+        "vec_id", "embedding", 5, nProbe = 3, refine = 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val inline = Similarity.ivfPqTopK(corpus, queries, "vec_id", "embedding",
+        5, nCells = 8, nProbe = 3, m = 8, ksub = 16, refine = 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(stored == inline && stored.nonEmpty)
+      // the stored artifacts are bounded: quantizer state is
+      // cells + m·ksub rows, codes are one row per corpus vector
+      assert(spark.read.parquet(s"$path/coarse").count() == 8L)
+      assert(spark.read.parquet(s"$path/pq").count() == 8L * 16)
+      assert(spark.read.parquet(s"$path/codes").count() == corpus.count())
+      // codes land partitioned by coarse cell (the pruning structure)
+      assert(new java.io.File(s"$path/codes").listFiles()
+        .exists(_.getName.startsWith("cell=")))
+    }
   }
 
   test("persisted index append: new vectors are searchable without re-fitting the quantizer") {
-    val corpus = blobCorpus(nBlobs = 8, perBlob = 100, dim = 32, seed = 11)
-    val half1 = corpus.filter(col("vec_id") % 2 === 0)
-    val half2 = corpus.filter(col("vec_id") % 2 === 1)
-    val path = java.nio.file.Files.createTempDirectory("ann_idx_app").toString
-    Similarity.buildAnnIndex(half1, "vec_id", "embedding", path,
-      nCells = 8, m = 8, ksub = 16)
-    def codeMap() = spark.read.parquet(s"$path/codes")
-      .collect().map(r => r.getLong(r.fieldIndex("neighbor_id")) ->
-        ((r.getSeq[Any](r.fieldIndex("codes")).toList,
-          r.getInt(r.fieldIndex("cell"))))).toMap
-    val before = codeMap()
-    Similarity.appendAnnIndex(spark, path, half2, "vec_id", "embedding")
-    // codes table now covers the full corpus, still cell-partitioned
-    assert(spark.read.parquet(s"$path/codes").count() == corpus.count())
-    // append is PURELY additive: every pre-existing (code, cell) row
-    // survives bit-identically — append never rewrites, re-cells, or
-    // re-codes the built half (concurrent readers depend on this)
-    val after = codeMap()
-    assert(before.keySet.subsetOf(after.keySet))
-    assert(before.forall { case (id, v) => after(id) == v },
-      "append mutated codes of previously-indexed vectors")
-    // appended vectors are fully integrated: with complete probing and a
-    // corpus-covering shortlist the stored-index search IS brute force,
-    // so it must equal bruteTopK over the WHOLE corpus — impossible if
-    // any appended code were missing or mis-celled
-    val queries = half2.filter(col("vec_id") < 20)
-    val got = Similarity.searchAnnIndex(spark, path, corpus, queries,
-        "vec_id", "embedding", 3, nProbe = 8, refine = 300)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val brute = Similarity.bruteTopK(corpus, queries, "vec_id", "embedding", 3)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got == brute && got.nonEmpty)
+    withTempDir("ann_idx_app") { tmp =>
+      val corpus = blobCorpus(nBlobs = 8, perBlob = 100, dim = 32, seed = 11)
+      val half1 = corpus.filter(col("vec_id") % 2 === 0)
+      val half2 = corpus.filter(col("vec_id") % 2 === 1)
+      val path = tmp.toString
+      Similarity.buildAnnIndex(half1, "vec_id", "embedding", path,
+        nCells = 8, m = 8, ksub = 16)
+      def codeMap() = spark.read.parquet(s"$path/codes")
+        .collect().map(r => r.getLong(r.fieldIndex("neighbor_id")) ->
+          ((r.getSeq[Any](r.fieldIndex("codes")).toList,
+            r.getInt(r.fieldIndex("cell"))))).toMap
+      val before = codeMap()
+      Similarity.appendAnnIndex(spark, path, half2, "vec_id", "embedding")
+      // codes table now covers the full corpus, still cell-partitioned
+      assert(spark.read.parquet(s"$path/codes").count() == corpus.count())
+      // append is PURELY additive: every pre-existing (code, cell) row
+      // survives bit-identically — append never rewrites, re-cells, or
+      // re-codes the built half (concurrent readers depend on this)
+      val after = codeMap()
+      assert(before.keySet.subsetOf(after.keySet))
+      assert(before.forall { case (id, v) => after(id) == v },
+        "append mutated codes of previously-indexed vectors")
+      // appended vectors are fully integrated: with complete probing and a
+      // corpus-covering shortlist the stored-index search IS brute force,
+      // so it must equal bruteTopK over the WHOLE corpus — impossible if
+      // any appended code were missing or mis-celled
+      val queries = half2.filter(col("vec_id") < 20)
+      val got = Similarity.searchAnnIndex(spark, path, corpus, queries,
+          "vec_id", "embedding", 3, nProbe = 8, refine = 300)
+        .select("query_id", "neighbor_id", "rank")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val brute = Similarity.bruteTopK(corpus, queries, "vec_id", "embedding", 3)
+        .select("query_id", "neighbor_id", "rank")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(got == brute && got.nonEmpty)
+    }
   }
 
   test("committed q_ann_pq config holds its recall bound on a fresh corpus") {

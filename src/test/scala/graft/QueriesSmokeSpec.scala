@@ -15,10 +15,21 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  /** Jobs of all the query tests below, building and running. */
+  private lazy val queryJobs = new TestSpark.JobSites
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name executes on sf0.001") {
-      fn(spark, dir).count() // must not throw; row count may be 0 for pair queries at tiny sf
+      // must not throw; row count may be 0 for pair queries at tiny sf
+      queryJobs.record(fn(spark, dir).count())
     }
+  }
+
+  test("building and running every query infers each table's schema at most once") {
+    // Parquet schema inference is the one job Tables.scala starts
+    val fromTables = queryJobs.close().count(_.contains("at Tables.scala:"))
+    val tables = new java.io.File(dir).list().count(_.endsWith(".parquet"))
+    assert(fromTables <= tables, s"$fromTables jobs called from Tables.scala for $tables tables")
   }
 
   test("every oracle key has a matching query") {
