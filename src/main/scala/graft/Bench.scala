@@ -79,21 +79,16 @@ object Bench {
     * [[PlanDump]]. `variant` is the SPARK_GRAFT_E1_VARIANTS name.
     */
   private[graft] case class E1Shape(lane: String, key: String,
-    variant: String, windowKeys: Seq[String], chunkSpanHours: Option[Long])
+    variant: String, windowKeys: Seq[String])
 
   /** `flagship_e1` keys the window by borough (reference semantics, 5
     * window partitions); `flagship_e1_segmented` by borough × SegmentID
-    * (thousands of window partitions); `flagship_e1_chunked` keeps the
-    * reference keying but evaluates it per daily chunk with
-    * bounded-history replication, so window parallelism is the chunk
-    * count. The chunked time includes the chunk-census validation pass
-    * and the second lazy execution of the join that shape requires.
+    * (thousands of window partitions).
     */
   private[graft] val e1Shapes = Seq(
-    E1Shape("flagship_e1", "e1", "plain", Seq("borough"), None),
+    E1Shape("flagship_e1", "e1", "plain", Seq("borough")),
     E1Shape("flagship_e1_segmented", "seg", "segmented",
-      Seq("borough", "SegmentID"), None),
-    E1Shape("flagship_e1_chunked", "chk", "chunked", Seq("borough"), Some(24L)))
+      Seq("borough", "SegmentID")))
 
   private val RowsPerHour = 40
 
@@ -104,11 +99,10 @@ object Bench {
     * q_ols_coeffs).
     */
   private[graft] def e1Aggregate(spark: SparkSession, hours: Int,
-      windowKeys: Seq[String], chunkSpanHours: Option[Long]): DataFrame = {
+      windowKeys: Seq[String]): DataFrame = {
     val traffic = pipelines.DomainFixtures.traffic(spark, hours, RowsPerHour)
     val weather = pipelines.DomainFixtures.weather(spark, hours)
-    pipelines.TrainingPipeline.featureTable(traffic, weather, windowKeys,
-        chunkSpanHours)
+    pipelines.TrainingPipeline.featureTable(traffic, weather, windowKeys)
       .groupBy("borough", "is_event")
       .agg(count(lit(1)).as("n"), avg("Vol").as("avg_vol"),
         avg("vol_roll_24").as("avg_roll_24"))
@@ -556,7 +550,7 @@ object Bench {
     // "median" is just the faster run, and round-over-round flagship
     // numbers swung ±35% on identical code (r3: 14.4 s, r4 pre-fix:
     // 19.3 s).
-    val e1Reps = sys.env.getOrElse("SPARK_GRAFT_E1_REPS", "5").toInt
+    val e1Reps = 5
     val spark = GraftSession.local()
 
     // Isolation between measurements: a few operators eagerly
@@ -651,17 +645,17 @@ object Bench {
     val e1Rows = sys.env.getOrElse("SPARK_GRAFT_E1_ROWS", "1700000").toLong
     val nHours = math.max(1L, e1Rows / RowsPerHour).toInt
     def runE1(s: E1Shape, hours: Int): Long =
-      e1Aggregate(spark, hours, s.windowKeys, s.chunkSpanHours)
+      e1Aggregate(spark, hours, s.windowKeys)
         .collect().map(_.getAs[Long]("n")).sum
     val skipped = Timed(-1.0, Nil, None, None)
-    // SPARK_GRAFT_E1_VARIANTS: comma subset of plain,segmented,chunked,
-    // geo,corpus for single-variant scale runs (unset → all; driver never
+    // SPARK_GRAFT_E1_VARIANTS: comma subset of plain,segmented,geo,
+    // corpus for single-variant scale runs (unset → all; driver never
     // sets it). The sf1 decade reps run 1-4 min each, so re-measuring
     // one variant must not pay for the others. SPARK_GRAFT_SKIP_E1
     // skips every bench-only row, the E3 geo build included.
     val e1Variants = sys.env.get("SPARK_GRAFT_E1_VARIANTS")
       .map(_.split(",").map(_.trim).toSet)
-      .getOrElse(Set("plain", "segmented", "chunked", "geo", "corpus"))
+      .getOrElse(Set("plain", "segmented", "geo", "corpus"))
     def wantE1(v: String) = !skipE1 && e1Variants.contains(v)
     // One bench-only row: timed when `run`, else the skipped marker; its
     // persisted blocks are released before the next row starts.
@@ -763,14 +757,14 @@ object Bench {
     // gates → exact dedup → MinHash-LSH + connected-components fuzzy
     // dedup → exact-substring span dedup → bloom decontamination →
     // sequence packing) end-to-end, the corpus counterpart of the E1/E3
-    // flagships. The sf documents table is amplified ×CORPUS_AMP with a
+    // flagships. The sf documents table is amplified ×corpusAmp with a
     // CONTROLLED duplicate structure — per base doc one exact copy and
     // (amp−2) near-dup variants — so the exact, fuzzy, and span stages
     // each see duplicate work at a known rate instead of whatever the
     // fixture happens to contain. Eval set: every 101st base doc, so
     // decontamination has real hits (the doc's own copies share its
     // 8-grams).
-    val corpusAmp = sys.env.getOrElse("SPARK_GRAFT_CORPUS_AMP", "4").toInt
+    val corpusAmp = 4
     def runCorpus(): Long = {
       val base = sources.Tables.documents(spark, sfDir, widen = true)
       val amplified = base

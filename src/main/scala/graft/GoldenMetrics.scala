@@ -9,6 +9,7 @@ import graft.metrics.Metrics
 import graft.ml.{Featurize, Models}
 import graft.operators.Relational
 import graft.windows.TrailingFeatures
+import graft.Lineage.LineageOps
 
 /** Model-quality certification against the reference's ONLY published
   * correctness baseline — the two golden test-R² values in BASELINE.md:
@@ -84,7 +85,7 @@ object GoldenMetrics {
     */
   def fit(spark: SparkSession, nHours: Int, rfTrees: Int = 100,
       gbtIter: Int = 200): (Double, Double, Int) = {
-    val feat = features(spark, nHours).localCheckpoint(true)
+    val feat = features(spark, nHours).graftCheckpoint()
     val Array(cutM) = feat.withColumn("__dm", unix_micros(col("date")))
       .stat.approxQuantile("__dm", Array(0.8), 0.001)
     val (train, test) = Relational.temporalSplitAt(feat, "date",

@@ -5,8 +5,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** Lineage-truncation policy for every eager materialization inside the
   * library (Dedup CC/pageRank frontier loops, the drift-matrix cell
-  * table, BPE merge rounds, fleissKappa's cell aggregate, the chunked
-  * TrainingPipeline, …).
+  * table, BPE merge rounds, fleissKappa's cell aggregate, the shared
+  * intermediates of several queries, …).
   *
   * Default: `localCheckpoint(eager = true)` — blocks live on executors,
   * zero external storage, the right call on local[*] and on clusters

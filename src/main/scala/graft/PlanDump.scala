@@ -28,7 +28,7 @@ object PlanDump {
     // evidence as the declared queries, at a 480-hour fixture (plan
     // SHAPE is scale-invariant; the generators are spark.range-based).
     val flagships = Bench.e1Shapes.map(s => s.lane -> (() =>
-      Bench.e1Aggregate(spark, 480, s.windowKeys, s.chunkSpanHours)))
+      Bench.e1Aggregate(spark, 480, s.windowKeys)))
     (flagships ++
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, f) =>
         n -> (() => f(spark, sfDir)) })

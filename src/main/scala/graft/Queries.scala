@@ -8,6 +8,7 @@ import graft.functions.{DateTimeKit, Hashing, Holidays}
 import graft.operators.{Dedup, Drift, Profiling, Relational, Similarity, Temporal, TextOps}
 import graft.sources.Tables
 import graft.windows.TrailingFeatures
+import graft.Lineage.LineageOps
 
 /** The named query inventory: one entry per operator from SURVEY.md §2
   * plus the large-scale data-pipeline operators (dedup / similarity /
@@ -273,29 +274,18 @@ object Queries {
                    lag(value, 24) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS value_lag_24
             FROM events ORDER BY event_id"""))
 
-  /** A3/A4 at scale: the SAME trailing features as q_window_lag /
-    * q_window_trailing_mean, evaluated CHUNKED
-    * ([[TrailingFeatures.withTrailingChunked]]) — weekly chunks, each
-    * carrying the previous chunk's last-24-row context, so window
-    * parallelism is #chunks instead of #distinct keys. The oracle is the
-    * plain window SQL: the chunked plan must hash-match the one-sort
-    * answer bit for bit, which is the whole correctness claim of
-    * bounded-history replication.
-    *
-    * PERF NOTE (inline justification for the bench): chunking pays a
-    * chunk-census pass + context replication to BUY window parallelism
-    * = #chunks. At sf0.1 with a handful of keys the plain window is
-    * already parallel enough, so this query benches slower than
-    * q_window_trailing_mean by design — it exists to prove the
-    * 100 TB configuration (thousands of chunks, no single-key sort
-    * ceiling) produces bit-identical output, not to win at 10 MB.
+  /** A3/A4 composed: the reference's trailing feature block
+    * ([[TrailingFeatures.withTrailing]] — lag 1, trailing-exclusive
+    * rolling means over 3 and 24 rows, all from ONE window spec) keyed
+    * by event_type. The oracle is the plain window SQL, so the composite
+    * E1 window function is checked end to end, not only its parts
+    * (q_window_lag, q_window_trailing_mean).
     */
-  val qWindowChunked = QDef(
+  val qTrailingFeatures = QDef(
     (s, d) => {
-      val week = floor(unix_micros(col("ts")) / (7L * 24L * 3600L * 1000000L))
-      TrailingFeatures.withTrailingChunked(t(s, d, "events"), "value",
+      TrailingFeatures.withTrailing(t(s, d, "events"), "value",
           partitionCols = Seq("event_type"), orderCols = Seq("ts", "event_id"),
-          chunkCol = week, lags = Seq(1), rolls = Seq(3, 24))
+          lags = Seq(1), rolls = Seq(3, 24))
         .select(col("event_id"), col("event_type"), col("value"),
           col("value_lag_1"),
           round(col("value_roll_3"), 6).as("value_roll_3"),
@@ -611,7 +601,7 @@ object Queries {
         .asBmpMedia(t(s, d, "documents"), "doc_id", "text")
         .as[graft.operators.Multimodal.MediaRow]
       val sig = graft.operators.Multimodal.imageDHash(media).toDF()
-        .localCheckpoint(true)
+        .graftCheckpoint()
       graft.operators.Dedup.hammingNearDupPairs(sig, "doc_id", "dhash",
           bits = 64, maxHamming = 3)
         .orderBy("id_a", "id_b")
@@ -693,7 +683,7 @@ object Queries {
       // ngramJaccardPairs). The checkpointed relation is compact:
       // (doc_id, term, tf) = one row per distinct term per doc.
       val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
+        .graftCheckpoint()
       val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val n = t(s, d, "documents").agg(count(lit(1)).as("n_docs"))
       val scored = tf.join(broadcast(dfT), "term").crossJoin(broadcast(n))
@@ -4761,7 +4751,7 @@ object Queries {
     (s, d) => {
       val docs = wideT(s, d, "documents")
       val vecs = TextOps.hashedVectors(docs, "text", "doc_id", dim = 64)
-        .localCheckpoint(true)
+        .graftCheckpoint()
       val init = Similarity.kmeansInitByMinId(vecs, "doc_id", "embedding", 8)
       val cents = Similarity.kmeansFit(vecs, "embedding", init, iters = 2)
       Similarity.kmeansAssign(vecs, "doc_id", "embedding", cents)
@@ -5900,7 +5890,7 @@ object Queries {
       val sk = keyed.agg(
           graft.functions.GraftFunctions.heavyHitters(col("item"), k).as("__sk"),
           count(lit(1)).as("n"))
-        .localCheckpoint(true) // tiny (1 row); feeds three consumers below
+        .graftCheckpoint() // tiny (1 row); feeds three consumers below
       val entries = sk.select(col("n"),
           explode(col("__sk")).as("e"))
         .select(col("n"), col("e.item").as("item"), col("e.est").as("est"))
@@ -6360,7 +6350,7 @@ object Queries {
       // |events|×depth to |users|×depth and the second full scan is gone
       // (was 2 scans + 24M md5s at sf0.1 → the 8 s driver-bench row).
       val exact = ev.groupBy("user_id").agg(count(lit(1)).as("n_exact"))
-        .localCheckpoint(true)
+        .graftCheckpoint()
       val sk = exact.agg(graft.functions.GraftFunctions
         .countMinWeighted(col("user_id"), col("n_exact"), width, depth).as("sk"))
       exact.crossJoin(broadcast(sk))
@@ -6620,7 +6610,7 @@ object Queries {
     "q_union_all" -> qUnionAll,
     "q_window_lag" -> qWindowLag,
     "q_window_trailing_mean" -> qWindowTrailingMean,
-    "q_window_chunked" -> qWindowChunked,
+    "q_trailing_features" -> qTrailingFeatures,
     "q_distinct_values" -> qDistinctValues,
     "q_corr" -> qCorr,
     "q_corr_matrix" -> qCorrMatrix,

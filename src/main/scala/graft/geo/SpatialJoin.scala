@@ -91,7 +91,12 @@ object SpatialJoin {
     nearest(left, leftId, right, rightId, x, y,
       autoCellSize(right, Seq(col(x)), Seq(col(y))))
 
-  /** Exact nearest neighbor of each left point among the right points.
+  /** Exact nearest neighbor of each left point among the right points:
+    * [[nearestEdge]] with every right point as a zero-length segment. Its
+    * supercover is exactly the point's 3×3 cell neighborhood, and
+    * [[pointSegDistSq]] of a zero-length segment is the point distance,
+    * so grid join, guard and brute residual are the point recipe.
+    * `dist_sq` is always double: the edge coordinates are cast to double.
     *
     * @param left     (leftId, x, y)
     * @param right    (rightId, x, y) — the small side
@@ -100,52 +105,9 @@ object SpatialJoin {
     */
   def nearest(left: DataFrame, leftId: String,
       right: DataFrame, rightId: String,
-      x: String, y: String, cellSize: Double): DataFrame = {
-    val cx = floor(col(x) / cellSize).cast("long")
-    val cy = floor(col(y) / cellSize).cast("long")
-
-    val l = left.select(col(leftId).as("__lid"),
-      col(x).as("__lx"), col(y).as("__ly"),
-      cx.as("__cx"), cy.as("__cy"))
-
-    val neighborhood = for { dx <- -1 to 1; dy <- -1 to 1 } yield (dx, dy)
-    val r = right.select(col(rightId).as("__rid"),
-        col(x).as("__rx"), col(y).as("__ry"), cx.as("__rcx"), cy.as("__rcy"))
-      .withColumn("__d", explode(array(neighborhood.map { case (dx, dy) =>
-        struct((col("__rcx") + dx).as("cx"), (col("__rcy") + dy).as("cy"))
-      }: _*)))
-      .select(col("__rid"), col("__rx"), col("__ry"),
-        col("__d.cx").as("__cx"), col("__d.cy").as("__cy"))
-
-    def best(cands: DataFrame): DataFrame = {
-      val dsq = (col("__lx") - col("__rx")) * (col("__lx") - col("__rx")) +
-        (col("__ly") - col("__ry")) * (col("__ly") - col("__ry"))
-      cands
-        .groupBy("__lid")
-        .agg(min(struct(dsq.as("d"), col("__rid").as("id"))).as("m"))
-        .select(col("__lid"), col("m.id").as("__rid"), col("m.d").as("__dsq"))
-    }
-
-    val gridBest = best(l.join(broadcast(r), Seq("__cx", "__cy")))
-
-    // Guard: only results with dist STRICTLY < cellSize are provably
-    // exact — a point at exactly cellSize from outside the 3×3
-    // neighborhood could tie the grid candidate, and the tie must be
-    // resolved by the brute residual's deterministic min, not by which
-    // candidate the grid happened to see.
-    val guarded = gridBest.filter(col("__dsq") < lit(cellSize * cellSize))
-
-    // Residual rows (guard failed or no candidate in the neighborhood):
-    // brute-force against the full right side. left_anti keeps this pass
-    // proportional to the residual, not the input.
-    val residual = l.join(guarded.select("__lid"), Seq("__lid"), "left_anti")
-    val bruteBest = best(residual.crossJoin(broadcast(
-      right.select(col(rightId).as("__rid"), col(x).as("__rx"), col(y).as("__ry")))))
-
-    guarded.unionByName(bruteBest)
-      .select(col("__lid").as(leftId), col("__rid").as("nearest_id"),
-        col("__dsq").as("dist_sq"))
-  }
+      x: String, y: String, cellSize: Double): DataFrame =
+    nearestEdge(left, leftId, right, rightId, x, y, x, y, x, y, cellSize)
+      .withColumnRenamed("nearest_edge", "nearest_id")
 
   /** Squared distance from point (px, py) to SEGMENT (ax, ay)–(bx, by):
     * the projection parameter t = ((P−A)·(B−A)) / |B−A|² clamped to
@@ -213,7 +175,7 @@ object SpatialJoin {
     * ON the edge geometry, not the closest endpoint. For a long road
     * segment the two answers differ.
     *
-    * Same grid recipe as [[nearest]], adapted to extended objects:
+    * The grid recipe of [[SpatialJoin]], adapted to extended objects:
     *  1. each edge is replicated into the grid cells its geometry
     *     actually crosses, EXPANDED by one cell ring (the
     *     3×3-neighborhood equivalent for a non-point object) via

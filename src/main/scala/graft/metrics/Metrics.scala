@@ -248,27 +248,6 @@ object Metrics {
         col("macro_f1"))
   }
 
-  /** Cohen's kappa — chance-corrected agreement between two categorical
-    * raters over the same items (Cohen 1960): `κ = (p_o − p_e)/(1 − p_e)`
-    * with `p_o` the observed agreement rate and
-    * `p_e = Σ_c p_a(c) · p_b(c)` the agreement expected if both raters
-    * drew independently from their own marginals. The labeled-training-
-    * data QA staple: raw agreement overstates reliability whenever the
-    * category mix is skewed, κ does not.
-    *
-    * Rows where either rating is null are excluded (an unrated item says
-    * nothing about agreement). Output is ONE row:
-    * (n, n_agree, po, pe, kappa); `kappa` is null when `p_e = 1` (both
-    * raters constant and identical — chance explains everything, the
-    * statistic is undefined).
-    *
-    * Scale shape: one scalar aggregate for (n, n_agree) plus two
-    * category-cardinality hash aggregates (map-side combine — each
-    * executor emits at most |categories| partial rows) joined on
-    * category for the `Σ n_a·n_b` term. Nothing materializes beyond the
-    * marginal tables; no window, no per-item shuffle beyond the two
-    * tiny aggs.
-    */
   /** Weighted Cohen's kappa (Cohen 1968) — the ordinal-label extension
     * of [[cohenKappa]]: disagreements are penalized by how FAR apart the
     * two ratings are, `κ_w = 1 − D_obs / D_exp` with
@@ -404,6 +383,27 @@ object Metrics {
       when(col("__de_num") > 0, lit(1.0) - dObs / dExp).as("alpha"))
   }
 
+  /** Cohen's kappa — chance-corrected agreement between two categorical
+    * raters over the same items (Cohen 1960): `κ = (p_o − p_e)/(1 − p_e)`
+    * with `p_o` the observed agreement rate and
+    * `p_e = Σ_c p_a(c) · p_b(c)` the agreement expected if both raters
+    * drew independently from their own marginals. The labeled-training-
+    * data QA staple: raw agreement overstates reliability whenever the
+    * category mix is skewed, κ does not.
+    *
+    * Rows where either rating is null are excluded (an unrated item says
+    * nothing about agreement). Output is ONE row:
+    * (n, n_agree, po, pe, kappa); `kappa` is null when `p_e = 1` (both
+    * raters constant and identical — chance explains everything, the
+    * statistic is undefined).
+    *
+    * Scale shape: one scalar aggregate for (n, n_agree) plus two
+    * category-cardinality hash aggregates (map-side combine — each
+    * executor emits at most |categories| partial rows) joined on
+    * category for the `Σ n_a·n_b` term. Nothing materializes beyond the
+    * marginal tables; no window, no per-item shuffle beyond the two
+    * tiny aggs.
+    */
   def cohenKappa(df: DataFrame, a: Column, b: Column): DataFrame = {
     val pairs = df.filter(a.isNotNull && b.isNotNull)
       .select(a.cast("string").as("__a"), b.cast("string").as("__b"))

@@ -34,23 +34,14 @@ object TrainingPipeline {
     *
     * `windowKeyCols` keys the lag/rolling windows. The reference keys on
     * borough alone (SegmentedModeling.py:238-247) — 5 partitions, which
-    * at 100× data means one borough is one task. Two scale
-    * configurations:
-    *  - `windowKeyCols = Seq("borough", "SegmentID")` — re-keys the
-    *    windows per road segment (thousands of partitions). Same
-    *    per-segment trailing semantics; parity with borough keying on a
-    *    single-segment fixture is spec-pinned.
-    *  - `chunkSpanHours = Some(h)` — keeps EXACT borough-keyed reference
-    *    semantics but evaluates the windows chunked
-    *    ([[TrailingFeatures.withTrailingChunked]]): each h-hour chunk
-    *    computes independently after receiving the previous chunk's
-    *    last-24-row context, so window parallelism = #chunks, not 5.
-    *    The joined frame stays lazy and executes twice: once under the
-    *    narrow tail/census projection, once through the main window.
+    * at 100× data means one borough is one task. The scale configuration
+    * is `windowKeyCols = Seq("borough", "SegmentID")`: it re-keys the
+    * windows per road segment (thousands of partitions), with the same
+    * per-segment trailing semantics; parity with borough keying on a
+    * single-segment fixture is spec-pinned.
     */
   def featureTable(traffic: DataFrame, weather: DataFrame,
-      windowKeyCols: Seq[String] = Seq("borough"),
-      chunkSpanHours: Option[Long] = None): DataFrame = {
+      windowKeyCols: Seq[String] = Seq("borough")): DataFrame = {
     // weather side: derive the join key components (reference
     // SegmentedModeling.py:206-209)
     val w = weather.select(
@@ -71,25 +62,9 @@ object TrainingPipeline {
     // rows, not rows already widened by ~10 derived columns (the scalar
     // features are map-only and commute with the window)
     val ordered = Seq("date", "RequestID") // deterministic tie-break (O1 fix)
-    val windowed = chunkSpanHours match {
-      case Some(h) =>
-        // No checkpoint of the joined frame: a full-width DISK_ONLY
-        // round-trip made the lane's wall time track machine IO latency
-        // (11.6 → 26 s across windows, VERDICT r18 #3), and at
-        // MEMORY_AND_DISK its blocks starved the upstream dropDuplicates
-        // aggregate of unified memory at sf1 on a 16 GB JVM
-        // (BENCH_e1_sf1_16g_fail.json). The second lazy execution of the
-        // join (broadcast weather over the dedup'd traffic shuffle) is
-        // cheaper.
-        TrailingFeatures.withTrailingChunked(joined,
-          "Vol", partitionCols = windowKeyCols, orderCols = ordered,
-          chunkCol = floor(unix_micros(col("date")) / (h * 3600L * 1000000L)),
-          lags = Seq(1), rolls = Seq(3, 24))
-      case None =>
-        TrailingFeatures.withTrailing(joined, "Vol",
-          partitionCols = windowKeyCols, orderCols = ordered,
-          lags = Seq(1), rolls = Seq(3, 24))
-    }
+    val windowed = TrailingFeatures.withTrailing(joined, "Vol",
+      partitionCols = windowKeyCols, orderCols = ordered,
+      lags = Seq(1), rolls = Seq(3, 24))
     // features (F9, J4, F13, F10)
     val cal = DateTimeKit.cyclicalFeatures(col("date"))
       .foldLeft(Holidays.withIsHoliday(windowed, "date", 2024, 2024)) {

@@ -11,7 +11,7 @@ import graft.TestSpark.withTempDir
   * set, every internal eager materialization becomes a reliable
   * `checkpoint()` to that directory instead of a `localCheckpoint` —
   * same values, durable truncation. Pinned here by re-running the CC
-  * fixture under the switch and comparing bit-for-bit.
+  * fixture and one query under the switch and comparing bit-for-bit.
   */
 class LineageSpec extends AnyFunSuite {
 
@@ -25,6 +25,9 @@ class LineageSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  private def countFiles(f: java.io.File): Int =
+    if (f.isDirectory) f.listFiles().map(countFiles).sum else 1
+
   test("checkpointDir switch: CC values identical, files land in the dir") {
     val expected = ccLabels() // default local-checkpoint path
     withTempDir("graft-ckpt") { tmp =>
@@ -35,8 +38,6 @@ class LineageSpec extends AnyFunSuite {
           "reliable-checkpoint run must produce identical labels")
         // the frontier loop materialized through the switch: the reliable
         // checkpoint directory must now contain rdd checkpoint data
-        def countFiles(f: java.io.File): Int =
-          if (f.isDirectory) f.listFiles().map(countFiles).sum else 1
         assert(countFiles(dir) > 0,
           s"expected reliable checkpoint files under $dir")
       } finally {
@@ -56,6 +57,24 @@ class LineageSpec extends AnyFunSuite {
         val reliableSum = Lineage.materialize(df, StorageLevel.DISK_ONLY)
           .agg(sum("v")).head().getLong(0)
         assert(reliableSum == localSum)
+      } finally {
+        spark.conf.unset(Lineage.ConfKey)
+        org.apache.spark.CheckpointDirs.clear(spark.sparkContext)
+      }
+    }
+  }
+
+  test("checkpointDir switch reaches a query's own materialization (q_heavy_hitters)") {
+    // the query's only eager materialization is its one-row sketch
+    val q = SparkEntry.queries("q_heavy_hitters")
+    def rows() = q(spark, "/root/testdata/sf0.001").collect().toSeq.map(_.toSeq)
+    val expected = rows()
+    withTempDir("graft-ckpt3") { tmp =>
+      val dir = tmp.toFile
+      try {
+        spark.conf.set(Lineage.ConfKey, dir.getAbsolutePath)
+        assert(rows() == expected, "reliable-checkpoint run must produce identical rows")
+        assert(countFiles(dir) > 0, s"expected reliable checkpoint files under $dir")
       } finally {
         spark.conf.unset(Lineage.ConfKey)
         org.apache.spark.CheckpointDirs.clear(spark.sparkContext)

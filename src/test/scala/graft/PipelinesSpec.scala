@@ -63,61 +63,6 @@ class PipelinesSpec extends AnyFunSuite {
     assert(a.except(b).count() == 0 && b.except(a).count() == 0)
   }
 
-  test("E1 chunked-window parity: daily chunks == plain borough window, bit-identical") {
-    // The chunked evaluation (bounded-history replication) must produce
-    // byte-identical features to the single-sort-per-borough window —
-    // including across chunk boundaries, where the first 24 rows of each
-    // chunk read replicated context.
-    val traffic = DomainFixtures.traffic(spark, 24 * 7)
-    val weather = DomainFixtures.weather(spark, 24 * 7)
-    val cols = Seq("RequestID", "borough", "date", "Vol",
-      "vol_lag_1", "vol_roll_3", "vol_roll_24")
-    val a = TrainingPipeline.featureTable(traffic, weather)
-      .select(cols.map(col): _*)
-    val b = TrainingPipeline.featureTable(traffic, weather,
-        chunkSpanHours = Some(24L))
-      .select(cols.map(col): _*)
-    assert(a.count() == b.count())
-    assert(a.except(b).count() == 0 && b.except(a).count() == 0)
-  }
-
-  test("chunked trailing: empty calendar gaps don't strand context; thin interior chunk rejected") {
-    import graft.windows.TrailingFeatures
-    // 3 bursts with a silent day between burst 2 and 3: context from the
-    // last populated chunk must reach the NEXT POPULATED chunk, not the
-    // empty calendar successor.
-    val rows = ((0 until 60).map(i => (1L, i.toLong)) ++           // day 0 (minutes 0-59)
-      (0 until 60).map(i => (1L, 1440L + i)) ++                    // day 1
-      (0 until 60).map(i => (1L, 4320L + i)))                      // day 3 (day 2 empty)
-      .zipWithIndex.map { case ((g, m), i) => (g, m, (i % 7).toDouble) }
-    val df = rows.toDF("g", "minute", "v")
-      .withColumn("ts", expr("timestampadd(MINUTE, minute, timestamp'2024-01-01 00:00:00')"))
-    val chunk = floor(unix_micros(col("ts")) / (24L * 3600L * 1000000L))
-    val plain = TrailingFeatures.withTrailing(df, "v", Seq("g"), Seq("ts"),
-      lags = Seq(1), rolls = Seq(3, 24))
-    // a ride-along column the narrow tail/census projection drops is
-    // null-padded on context rows only, never on the rows returned
-    val chunked = TrailingFeatures.withTrailingChunked(
-      df.withColumn("extra", col("minute") * 2), "v", Seq("g"), Seq("ts"),
-      chunk, lags = Seq(1), rolls = Seq(3, 24))
-    assert(chunked.filter(col("extra").isNull).count() == 0)
-    val chunkedCore = chunked.drop("extra")
-    assert(plain.except(chunkedCore).count() == 0 &&
-      chunkedCore.except(plain).count() == 0)
-    // a 10-row interior chunk can't carry 24 rows of history: validator throws
-    val thin = ((0 until 60).map(i => (1L, i.toLong)) ++
-      (0 until 10).map(i => (1L, 1440L + i)) ++
-      (0 until 60).map(i => (1L, 2880L + i)))
-      .zipWithIndex.map { case ((g, m), i) => (g, m, i.toDouble) }
-      .toDF("g", "minute", "v")
-      .withColumn("ts", expr("timestampadd(MINUTE, minute, timestamp'2024-01-01 00:00:00')"))
-    val err = intercept[IllegalArgumentException] {
-      TrailingFeatures.withTrailingChunked(thin, "v", Seq("g"), Seq("ts"),
-        chunk, lags = Seq(1), rolls = Seq(3, 24))
-    }
-    assert(err.getMessage.contains("interior chunk"))
-  }
-
   test("E1 run: segmented GBT trains and beats the trivial predictor") {
     val traffic = DomainFixtures.traffic(spark, nHours)
     val weather = DomainFixtures.weather(spark, nHours)
