@@ -551,6 +551,19 @@ object Bench {
     // numbers swung ±35% on identical code (r3: 14.4 s, r4 pre-fix:
     // 19.3 s).
     val e1Reps = 5
+    // SPARK_GRAFT_E1_VARIANTS: comma subset of plain,segmented,geo,
+    // corpus for single-variant scale runs (unset → all; driver never
+    // sets it). The sf1 decade reps run 1-4 min each, so re-measuring
+    // one variant must not pay for the others. An unknown name fails
+    // here, before any work, instead of silently dropping lanes.
+    val knownVariants = Seq("plain", "segmented", "geo", "corpus")
+    val e1Variants = sys.env.get("SPARK_GRAFT_E1_VARIANTS")
+      .map(_.split(",").map(_.trim).toSet)
+      .getOrElse(knownVariants.toSet)
+    val unknownVariants = e1Variants -- knownVariants
+    require(unknownVariants.isEmpty,
+      s"SPARK_GRAFT_E1_VARIANTS: unknown ${unknownVariants.toSeq.sorted.mkString(", ")}; " +
+        s"valid names: ${knownVariants.mkString(", ")}")
     val spark = GraftSession.local()
 
     // Isolation between measurements: a few operators eagerly
@@ -648,14 +661,8 @@ object Bench {
       e1Aggregate(spark, hours, s.windowKeys)
         .collect().map(_.getAs[Long]("n")).sum
     val skipped = Timed(-1.0, Nil, None, None)
-    // SPARK_GRAFT_E1_VARIANTS: comma subset of plain,segmented,geo,
-    // corpus for single-variant scale runs (unset → all; driver never
-    // sets it). The sf1 decade reps run 1-4 min each, so re-measuring
-    // one variant must not pay for the others. SPARK_GRAFT_SKIP_E1
-    // skips every bench-only row, the E3 geo build included.
-    val e1Variants = sys.env.get("SPARK_GRAFT_E1_VARIANTS")
-      .map(_.split(",").map(_.trim).toSet)
-      .getOrElse(Set("plain", "segmented", "geo", "corpus"))
+    // SPARK_GRAFT_SKIP_E1 skips every bench-only row, the E3 geo build
+    // included.
     def wantE1(v: String) = !skipE1 && e1Variants.contains(v)
     // One bench-only row: timed when `run`, else the skipped marker; its
     // persisted blocks are released before the next row starts.
@@ -710,10 +717,10 @@ object Bench {
     // q_geojson_lines) — WKT parse → EPSG:2263→4326 inverse LCC →
     // Point-feature JSON assembly reduced through the serve-side
     // volume→color histogram, plus the point_to_linestring half: snap
-    // every point to its nearest of 5,000 street segments (grid-cell
-    // join, broadcast edges) and assemble LineString features. Feature
-    // strings are forced through max(length(...)) so ColumnPruning
-    // cannot drop the JSON assembly under the count.
+    // every point to its nearest of 5,000 street segments (one map-side
+    // pass against the broadcast edge index) and assemble LineString
+    // features. Feature strings are forced through max(length(...)) so
+    // ColumnPruning cannot drop the JSON assembly under the count.
     def runGeo(): Long = {
       import graft.geo.{GeoOps, SpatialJoin}
       import pipelines.{DomainFixtures, GeoPipeline}

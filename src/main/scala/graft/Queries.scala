@@ -2677,8 +2677,8 @@ object Queries {
                    regexp_extract(k, '\(''([^'']*)'',\s*''([^'']*)'',\s*''([^'']*)''\)', 3) AS part_c
             FROM k ORDER BY n_nationkey"""))
 
-  /** J5: exact nearest-neighbor join via grid bucketing + 3×3 neighborhood
-    * + guarded brute-force residual; the oracle brute-forces all pairs.
+  /** J5: exact nearest-neighbor join via the broadcast grid index's ring
+    * search ([[graft.geo.SpatialJoin]]); the oracle brute-forces all pairs.
     */
   val qNearestNeighbor = QDef(
     (s, d) => {
@@ -2732,9 +2732,9 @@ object Queries {
 
   /** J5 full semantics: nearest EDGE (point-to-SEGMENT distance, clamped
     * projection) — the reference's `ox.distance.nearest_edges` snap
-    * (point_to_linestring.py:53-65). Grid join + exactness guard + brute
-    * residual; oracle is the brute-force point-to-segment argmin with
-    * bit-identical arithmetic.
+    * (point_to_linestring.py:53-65). One map-side pass of exact ring
+    * searches against the broadcast edge index; oracle is the brute-force
+    * point-to-segment argmin with bit-identical arithmetic.
     */
   val qNearestEdge = QDef(
     (s, d) => {

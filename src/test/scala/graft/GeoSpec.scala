@@ -13,6 +13,17 @@ class GeoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
   import spark.implicits._
 
+  /** Brute-force point-to-segment dist², the J5 reference. */
+  private def segDsq(px: Double, py: Double, ax: Double, ay: Double,
+      bx: Double, by: Double): Double = {
+    val dx = bx - ax; val dy = by - ay
+    val len2 = dx * dx + dy * dy
+    val t = if (len2 == 0) 0.0
+      else math.max(0.0, math.min(1.0, ((px - ax) * dx + (py - ay) * dy) / len2))
+    val qx = ax + t * dx; val qy = ay + t * dy
+    (px - qx) * (px - qx) + (py - qy) * (py - qy)
+  }
+
   test("F16: LCC 2SP forward matches the published EPSG Guidance Note 7-2 worked example") {
     // NAD27 / Texas South Central (Clarke 1866): the worked example in the
     // public EPSG guidance — φ=28°30'N, λ=96°W → E=2963503.91 ftUS,
@@ -107,7 +118,7 @@ class GeoSpec extends AnyFunSuite {
     val left = leftPts.toDF("id", "x", "y")
     val right = rightPts.toDF("id", "x", "y")
 
-    val got = SpatialJoin.nearest(left, "id", right, "id", "x", "y", cellSize = 100.0)
+    val got = SpatialJoin.nearest(left, "id", right, "id", "x", "y")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
 
     assert(got.size == leftPts.size)
@@ -123,35 +134,31 @@ class GeoSpec extends AnyFunSuite {
   test("J5: equidistant tie breaks to the lower right id") {
     val left = Seq((1L, 0.0, 0.0)).toDF("id", "x", "y")
     val right = Seq((7L, 10.0, 0.0), (3L, -10.0, 0.0)).toDF("id", "x", "y")
-    val r = SpatialJoin.nearest(left, "id", right, "id", "x", "y", 50.0).head()
+    val r = SpatialJoin.nearest(left, "id", right, "id", "x", "y").head()
     assert(r.getLong(1) == 3L)
   }
 
   test("J5: autoCellSize = extent/sqrt(n) for points, span-floored for edges") {
-    import org.apache.spark.sql.functions.col
+    // points are zero-length segments
+    def pts(ps: Seq[(Double, Double)]): Double = {
+      val (xs, ys) = (ps.map(_._1).toArray, ps.map(_._2).toArray)
+      SpatialJoin.autoCellSize(xs, ys, xs, ys)
+    }
     // 10×10 exact grid in [0,900]²: extent 900, n=100 → cell 90.
-    val grid = (for (i <- 0 to 9; j <- 0 to 9)
-      yield (i * 100.0, j * 100.0)).toDF("x", "y")
-    val c = SpatialJoin.autoCellSize(grid, Seq(col("x")), Seq(col("y")))
+    val c = pts(for (i <- 0 to 9; j <- 0 to 9) yield (i * 100.0, j * 100.0))
     assert(math.abs(c - 90.0) < 1e-9, s"points: got $c, want 90")
     // 4× the density in the same extent → half the cell.
-    val dense = (for (i <- 0 to 19; j <- 0 to 19)
-      yield (i * 900.0 / 19, j * 900.0 / 19)).toDF("x", "y")
-    val cd = SpatialJoin.autoCellSize(dense, Seq(col("x")), Seq(col("y")))
+    val cd = pts(for (i <- 0 to 19; j <- 0 to 19) yield (i * 900.0 / 19, j * 900.0 / 19))
     assert(math.abs(cd - 45.0) < 1e-9, s"dense points: got $cd, want 45")
     // Edges whose mean span dominates spacing: cell floors at span/4 so
-    // supercover replication stays O(10) cells/edge.
-    val edges = (0 until 100).map { i =>
-      (i % 10 * 100.0, i / 10 * 100.0, i % 10 * 100.0 + 800.0, i / 10 * 100.0)
-    }.toDF("ax", "ay", "bx", "by")
-    val ce = SpatialJoin.autoCellSize(edges,
-      Seq(col("ax"), col("bx")), Seq(col("ay"), col("by")))
+    // each edge stays listed under O(10) cells.
+    val ax = Array.tabulate(100)(i => i % 10 * 100.0)
+    val ay = Array.tabulate(100)(i => i / 10 * 100.0)
+    val ce = SpatialJoin.autoCellSize(ax, ay, ax.map(_ + 800.0), ay)
     assert(math.abs(ce - 200.0) < 1e-9, s"edges: got $ce, want span floor 800/4")
     // Degenerate inputs fall back to a positive constant, no crash.
-    val one = Seq((5.0, 5.0)).toDF("x", "y")
-    assert(SpatialJoin.autoCellSize(one, Seq(col("x")), Seq(col("y"))) == 1.0)
-    val none = one.filter(col("x") < 0)
-    assert(SpatialJoin.autoCellSize(none, Seq(col("x")), Seq(col("y"))) == 1.0)
+    assert(pts(Seq((5.0, 5.0))) == 1.0)
+    assert(pts(Nil) == 1.0)
   }
 
   test("J5: auto-cell overloads match brute force (points and edges)") {
@@ -175,15 +182,6 @@ class GeoSpec extends AnyFunSuite {
       val ax = rng.nextDouble() * 1000; val ay = rng.nextDouble() * 1000
       (i.toLong, ax, ay, ax + rng.nextDouble() * 400 - 200, ay + rng.nextDouble() * 400 - 200)
     }
-    def segDsq(px: Double, py: Double, ax: Double, ay: Double,
-        bx: Double, by: Double): Double = {
-      val dx = bx - ax; val dy = by - ay
-      val len2 = dx * dx + dy * dy
-      val t = if (len2 == 0) 0.0
-        else math.max(0.0, math.min(1.0, ((px - ax) * dx + (py - ay) * dy) / len2))
-      val qx = ax + t * dx; val qy = ay + t * dy
-      (px - qx) * (px - qx) + (py - qy) * (py - qy)
-    }
     val gotE = SpatialJoin.nearestEdge(leftPts.toDF("id", "x", "y"), "id",
         edges.toDF("eid", "ax", "ay", "bx", "by"), "eid",
         "x", "y", "ax", "ay", "bx", "by")
@@ -198,15 +196,6 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("J5 edges: nearest-EDGE join matches brute-force point-to-segment, incl. fallback") {
-    def segDsq(px: Double, py: Double, ax: Double, ay: Double,
-        bx: Double, by: Double): Double = {
-      val dx = bx - ax; val dy = by - ay
-      val len2 = dx * dx + dy * dy
-      val t = if (len2 == 0) 0.0
-        else math.max(0.0, math.min(1.0, ((px - ax) * dx + (py - ay) * dy) / len2))
-      val qx = ax + t * dx; val qy = ay + t * dy
-      (px - qx) * (px - qx) + (py - qy) * (py - qy)
-    }
     val rng = new scala.util.Random(7)
     // random segments incl. one zero-length degenerate; random points
     // incl. one far outside every expanded bbox (brute-residual path)
@@ -220,7 +209,7 @@ class GeoSpec extends AnyFunSuite {
     val left = pts.toDF("id", "x", "y")
     val e = edges.toDF("eid", "ax", "ay", "bx", "by")
     val got = SpatialJoin.nearestEdge(left, "id", e, "eid",
-        "x", "y", "ax", "ay", "bx", "by", cellSize = 100.0)
+        "x", "y", "ax", "ay", "bx", "by")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(got.size == pts.size)
     pts.foreach { case (pid, px, py) =>
@@ -233,23 +222,23 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("J5 edges: supercover replication is O(len/cell) on a long diagonal") {
-    // A 45° diagonal spanning 100×100 cells: the old bbox-rectangle
-    // replication emitted (100+3)² ≈ 10k copies; the supercover's
-    // per-column slab emits ~6 rows/column → linear in len/cell.
-    val e = Seq((1L, 0.0, 0.0, 1000.0, 1000.0)).toDF("eid", "ax", "ay", "bx", "by")
-      .select(col("eid").as("__eid"), col("ax").as("__ax"), col("ay").as("__ay"),
-        col("bx").as("__bx"), col("by").as("__by"))
-    val n = SpatialJoin.supercoverCells(e, 10.0).count()
+    // A 45° diagonal spanning 100×100 cells: a bbox-rectangle listing
+    // would hold 100² = 10k cells; the supercover's per-column slab
+    // lists ~3 rows/column → linear in len/cell.
+    val grid = graft.geo.EdgeGrid(0.0, 0.0, 10.0, 100, 100, slack = 1e-6)
+    val listed = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    grid.cells(0.0, 0.0, 1000.0, 1000.0)((i, j) => listed += ((i, j)))
+    val n = listed.size
     assert(n < 1000, s"supercover emitted $n cells — not linear in len/cell")
     assert(n > 100, s"supercover emitted only $n cells — must cover the segment")
-    // and every cell the segment passes through is present (+ring):
-    // sample the segment densely, its cell must be in the emitted set
-    val cells = SpatialJoin.supercoverCells(e, 10.0)
-      .select("__cx", "__cy").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cells = listed.toSet
+    assert(cells.size == n, "a cell listed twice")
+    // every cell the segment passes through is present: sample the
+    // segment densely, its cell must be in the emitted set
     (0 to 1000).foreach { i =>
       val t = i / 1000.0
-      val cell = (math.floor(t * 1000.0 / 10.0).toLong min 99L,
-        math.floor(t * 1000.0 / 10.0).toLong min 99L)
+      val cell = (math.floor(t * 1000.0 / 10.0).toInt min 99,
+        math.floor(t * 1000.0 / 10.0).toInt min 99)
       assert(cells.contains(cell), s"missing crossed cell $cell")
     }
   }
@@ -260,8 +249,107 @@ class GeoSpec extends AnyFunSuite {
     val left = Seq((1L, 100.0, 5.0)).toDF("id", "x", "y")
     val e = Seq((1L, 0.0, 0.0, 200.0, 0.0)).toDF("eid", "ax", "ay", "bx", "by")
     val r = SpatialJoin.nearestEdge(left, "id", e, "eid",
-      "x", "y", "ax", "ay", "bx", "by", cellSize = 50.0).head()
+      "x", "y", "ax", "ay", "bx", "by").head()
     assert(r.getLong(1) == 1L && math.abs(r.getDouble(2) - 25.0) < 1e-12)
+  }
+
+  test("J5 edges: a null-coordinate edge is never a candidate; a null point yields no row") {
+    // least/greatest skip nulls, so a null-coordinate edge could still be
+    // given cells; its null dist² must not win any point's snap
+    val left = Seq[(Long, Option[Double], Option[Double])](
+      (1L, Some(0.0), Some(0.0)), (2L, None, Some(5.0)), (3L, Some(1e6), Some(1e6)))
+      .toDF("id", "x", "y")
+    val e = Seq[(Long, Option[Double], Double, Double, Double)](
+      (10L, Some(1.0), 0.0, 2.0, 0.0), (5L, None, 0.0, 3.0, 3.0),
+      (7L, Some(100.0), 100.0, 200.0, 100.0)).toDF("eid", "ax", "ay", "bx", "by")
+    def snap(edges: org.apache.spark.sql.DataFrame) = SpatialJoin.nearestEdge(left, "id",
+        edges, "eid", "x", "y", "ax", "ay", "bx", "by")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val got = snap(e)
+    assert(got.keySet == Set(1L, 3L), s"rows: $got")
+    assert(got(1L) == ((10L, segDsq(0.0, 0.0, 1.0, 0.0, 2.0, 0.0))), s"point 1: ${got(1L)}")
+    assert(got(3L) == ((7L, segDsq(1e6, 1e6, 100.0, 100.0, 200.0, 100.0))), s"point 3: ${got(3L)}")
+    assert(snap(e.where(col("ax").isNull)).isEmpty, "all-null edge table")
+    assert(snap(e.limit(0)).isEmpty, "empty edge table")
+  }
+
+  test("J5 edges: a far outlier gets the brute answer, each edge measured at most once") {
+    val rng = new scala.util.Random(5)
+    val edges = (0 until 5000).map { i =>
+      val ax = rng.nextDouble() * 150000; val ay = rng.nextDouble() * 150000
+      (i.toLong, ax, ay, ax + rng.nextDouble() * 16000 - 8000, ay + rng.nextDouble() * 16000 - 8000)
+    }
+    val (px, py) = (1e12, -1e12)
+    val (wantD, wantId) = edges.map { case (eid, ax, ay, bx, by) =>
+      (segDsq(px, py, ax, ay, bx, by), eid) }.min
+    val r = SpatialJoin.nearestEdge(Seq((1L, px, py)).toDF("id", "x", "y"), "id",
+        edges.toDF("eid", "ax", "ay", "bx", "by"), "eid", "x", "y", "ax", "ay", "bx", "by")
+      .head()
+    assert(r.getLong(1) == wantId && r.getDouble(2) == wantD, s"got $r, want ($wantId, $wantD)")
+    // the kernel itself: rings up to the grid are skipped, rings across
+    // it measure each edge once
+    val index = new graft.geo.EdgeIndex(edges.map(e => e._1: Any).toArray,
+      edges.map(_._2).toArray, edges.map(_._3).toArray,
+      edges.map(_._4).toArray, edges.map(_._5).toArray)
+    val search = new index.Search
+    assert(index.ids(search.nearest(px, py)) == wantId)
+    assert(search.evaluated <= edges.size, s"${search.evaluated} distances for ${edges.size} edges")
+  }
+
+  test("J5 edges: rows sharing a left id get their joint minimum") {
+    val rng = new scala.util.Random(23)
+    val edges = (1 to 30).map { i =>
+      val ax = rng.nextDouble() * 1000; val ay = rng.nextDouble() * 1000
+      (i.toLong, ax, ay, ax + rng.nextDouble() * 200 - 100, ay + rng.nextDouble() * 200 - 100)
+    }
+    val pts = Seq((1L, 100.0, 120.0), (1L, 830.0, 710.0), (1L, 5000.0, -300.0),
+      (2L, 500.0, 480.0), (2L, 510.0, 470.0))
+    val got = SpatialJoin.nearestEdge(pts.toDF("id", "x", "y"), "id",
+        edges.toDF("eid", "ax", "ay", "bx", "by"), "eid", "x", "y", "ax", "ay", "bx", "by")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    assert(got.size == 2)
+    pts.groupBy(_._1).foreach { case (lid, rows) =>
+      val (d, eid) = (for ((_, px, py) <- rows; (eid, ax, ay, bx, by) <- edges)
+        yield (segDsq(px, py, ax, ay, bx, by), eid)).min
+      assert(got(lid) == ((eid, d)), s"left $lid: got ${got(lid)}, want ($eid, $d)")
+    }
+  }
+
+  test("J5 edges: dist_sq bits equal pointSegDistSq evaluated as a Column; ids keep their type") {
+    // String ids order differently from numbers ("e10" < "e9"); two
+    // edges share one geometry, so their tie follows string order. An
+    // edge with an infinite coordinate has no grid cell (its dist² is
+    // NaN, which sorts last); a point with one is measured against every
+    // edge (all dist² are +Inf, so the lowest id wins).
+    val rng = new scala.util.Random(31)
+    val edges = (1 to 80).map { i =>
+      val ax = rng.nextDouble() * 5000 - 2500; val ay = rng.nextDouble() * 5000 - 2500
+      (s"e$i", ax, ay, ax + rng.nextGaussian() * 300, ay + rng.nextGaussian() * 300)
+    } ++ Seq(("e9", 7.25, 7.5, 7.25, 7.5), ("e10", 7.25, 7.5, 7.25, 7.5), ("z0", 0.5, 0.5, 0.5, 0.5),
+      ("a-inf", Double.PositiveInfinity, 0.0, 1.0, 0.0))
+    val pts = (1 to 300).map(i =>
+      (i.toLong, rng.nextDouble() * 6000 - 3000, rng.nextDouble() * 6000 - 3000)) ++
+      Seq((1001L, 7.0, 7.0), (1002L, 0.5, 0.5), (1003L, -9e7, 4e8),
+        (1004L, Double.PositiveInfinity, 5.0))
+    val left = pts.toDF("id", "x", "y")
+    val e = edges.toDF("eid", "ax", "ay", "bx", "by")
+    val got = SpatialJoin.nearestEdge(left, "id", e, "eid", "x", "y", "ax", "ay", "bx", "by")
+      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
+    val want = left.crossJoin(e)
+      .select(col("id"), col("eid"), SpatialJoin.pointSegDistSq(col("x"), col("y"),
+        col("ax"), col("ay"), col("bx"), col("by")).as("d"))
+      .groupBy("id").agg(min(struct(col("d"), col("eid"))).as("m"))
+      .collect().map(r => r.getLong(0) -> (r.getStruct(1).getString(1), r.getStruct(1).getDouble(0)))
+      .toMap
+    assert(got.size == pts.size && want.size == pts.size)
+    assert(got(1001L)._1 == "e10", s"tie: ${got(1001L)}")
+    assert(got(1002L) == (("z0", 0.0)))
+    assert(got(1004L) == (("e1", Double.PositiveInfinity)), s"infinite point: ${got(1004L)}")
+    pts.foreach { case (id, _, _) =>
+      val ((ge, gd), (we, wd)) = (got(id), want(id))
+      assert(ge == we && java.lang.Double.doubleToRawLongBits(gd) ==
+        java.lang.Double.doubleToRawLongBits(wd), s"point $id: got ($ge, $gd), want ($we, $wd)")
+    }
   }
 
   test("F19b: LineString feature serializes type/coordinates/properties") {

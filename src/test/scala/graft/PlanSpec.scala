@@ -100,16 +100,11 @@ class PlanSpec extends AnyFunSuite {
     assert(gj.contains("Sort"), "sort pruned from q_geojson_features")
   }
 
-  test("spatial nearest: grid path is a broadcast hash join on the cell id; the only nested-loop is the broadcast brute residual") {
+  test("spatial nearest: one map-side pass over the points, no join in the plan") {
     Seq("q_nearest_neighbor", "q_nearest_edge").foreach { q =>
       val p = plan(q)
-      assert(p.contains("BroadcastHashJoin"),
-        s"$q: the guarded grid path must plan a broadcast hash join on (__cx,__cy):\n" + p.take(800))
-      assert(!p.contains("CartesianProduct"), s"$q: unbroadcast cartesian found")
-      val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).length
-      // residual brute pass + its anti-join selection both broadcast; a
-      // growing count would mean the guarded path fell off the hash join
-      assert(bnlj <= 2, s"$q: $bnlj nested-loop joins — the grid path degraded")
+      Seq("BroadcastHashJoin", "BroadcastNestedLoopJoin", "SortMergeJoin", "CartesianProduct")
+        .foreach(j => assert(!p.contains(j), s"$q plans a $j:\n" + p.take(800)))
     }
   }
 

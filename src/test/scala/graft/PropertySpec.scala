@@ -211,7 +211,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("J5 auto-cell nearest == brute argmin over random densities and extents") {
     // The exactness contract the adaptive grid must keep at ANY density:
-    // whatever cell autoCellSize picks, guarded-grid + brute-residual
+    // whatever cell autoCellSize picks, the index's ring search
     // equals the exhaustive argmin with the (dist², id) tie-break. Skews
     // extents and counts across trials so the chosen cell varies ~40×.
     import graft.geo.SpatialJoin
