@@ -819,25 +819,29 @@ object Bench {
     // fit + encode + partitioned-codes write, measured unconditionally
     // into a throwaway path every rep so the number is stable across
     // fresh-/tmp windows — never conflated with the search rows below
-    // or with the q_ann_ivfpq_* certification lanes.
-    val annIdx = "/tmp/graft_bench_ann_index"
+    // or with the q_ann_ivfpq_* certification lanes. The index lives in
+    // this run's own temp directory, deleted once the rows are done (also
+    // when one throws), so concurrent Bench runs never read each other's
+    // half-rewritten index.
+    val annIdx = java.nio.file.Files.createTempDirectory("graft_bench_ann_index")
     lazy val emb = sources.Tables.embeddings(spark, sfDir, widen = true)
 
     // The bench-only rows, in run order.
-    val benchOnly = e1Lanes ++ Seq(
+    val benchOnly = try e1Lanes ++ Seq(
       flagship("flagship_geo", "geo", "geo")(runGeo()),
       flagship("flagship_corpus", "corp", "corpus")(runCorpus()),
       row("bpe_train_local_1500", None, !skipE1)(timeAdaptive(reps, 2)(bpeTrain())),
       row("ann_index_build", None, !skipE1)(timeAdaptive(reps, 2) {
-        operators.Similarity.buildAnnIndex(emb, "vec_id", "embedding", annIdx,
+        operators.Similarity.buildAnnIndex(emb, "vec_id", "embedding", annIdx.toString,
           nCells = 16, m = 16, ksub = 64) // unconditional: bench must not reuse stale state
       }),
       row("ann_search_persisted", None, !skipE1)(timeAdaptive(reps, 2) {
-        operators.Similarity.searchAnnIndex(spark, annIdx, emb,
+        operators.Similarity.searchAnnIndex(spark, annIdx.toString, emb,
           emb.filter(col("vec_id") < 10), "vec_id", "embedding", 5,
           nProbe = 14, refine = 20)
           .write.format("noop").mode("overwrite").save()
       }))
+    finally org.apache.commons.io.FileUtils.deleteQuietly(annIdx.toFile): Unit
 
     // Pre-build the persisted-ANN certification lanes' keyed indexes
     // OUTSIDE every timed region (VERDICT r17, What's wrong #1): the

@@ -57,10 +57,8 @@ object GoldenMetrics {
     */
   def features(spark: SparkSession, nHours: Int): DataFrame = {
     val base = graft.pipelines.DomainFixtures.trafficSeasonal(spark, nHours)
-    val cal = DateTimeKit.cyclicalFeatures(col("date"))
-      .foldLeft(Holidays.withIsHoliday(base, "date", 2024, 2025)) {
-        case (d, (n, c)) => d.withColumn(n, c)
-      }
+    val cal = DateTimeKit.withCyclicalFeatures(
+      Holidays.withIsHoliday(base, "date", 2024, 2025), col("date"))
     val oneHot = Featurize.oneHot(cal, "borough",
       graft.pipelines.DomainFixtures.boroughs, "boro")
     TrailingFeatures.withTrailing(oneHot, "vol",

@@ -26,9 +26,11 @@ object PlanDump {
     census.append("query\texchanges\tjoins\tcodegen_spans\tscans\tpushed_filters\n")
     // Flagship lanes (bench-only, not in SparkEntry.queries): same plan
     // evidence as the declared queries, at a 480-hour fixture (plan
-    // SHAPE is scale-invariant; the generators are spark.range-based).
+    // SHAPE is scale-invariant; the generators are spark.range-based),
+    // and the `SparkEntry.entry` flagship query.
     val flagships = Bench.e1Shapes.map(s => s.lane -> (() =>
-      Bench.e1Aggregate(spark, 480, s.windowKeys)))
+      Bench.e1Aggregate(spark, 480, s.windowKeys))) :+
+      ("spark_entry" -> (() => SparkEntry.entry(spark)))
     (flagships ++
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, f) =>
         n -> (() => f(spark, sfDir)) })

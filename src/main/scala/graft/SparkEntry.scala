@@ -25,10 +25,8 @@ object SparkEntry {
     val hourly = ev.groupBy(col("h"))
       .agg(count(lit(1)).as("hour_n"), avg(col("value")).as("hour_avg"))
     val joined = ev.join(hourly, Seq("h"))
-    val withCal = DateTimeKit.cyclicalFeatures(col("ts"))
-      .foldLeft(Holidays.withIsHoliday(joined, "ts", 2024, 2024)) {
-        case (d, (n, c)) => d.withColumn(n, c)
-      }
+    val withCal = DateTimeKit.withCyclicalFeatures(
+      Holidays.withIsHoliday(joined, "ts", 2024, 2024), col("ts"))
     val feat = TrailingFeatures.withTrailing(withCal, "value",
       partitionCols = Seq("user_id"), orderCols = Seq("ts", "event_id"),
       lags = Seq(1, 24), rolls = Seq(3, 24))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Datetime + calendar-feature kit (SURVEY.md §2.6 F4–F14).
@@ -41,6 +41,12 @@ object DateTimeKit {
     Seq("hour_sin" -> hs, "hour_cos" -> hc, "wd_sin" -> ws, "wd_cos" -> wc,
       "month_sin" -> ms, "month_cos" -> mc)
   }
+
+  /** `df` with the six [[cyclicalFeatures]] of `ts` appended, in one
+    * projection.
+    */
+  def withCyclicalFeatures(df: DataFrame, ts: Column): DataFrame =
+    df.select(col("*") +: cyclicalFeatures(ts).map { case (n, c) => c.as(n) }: _*)
 
   /** F12: rush-hour bucket — 1 when 7<=h<=9 or 16<=h<=18 (reference
     * backend/random_forest.py:153 Python lambda; here a pure `when`

@@ -6,18 +6,19 @@ import java.time.temporal.TemporalAdjusters
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** US federal (+ NY state) holiday calendar, generated as a dimension
-  * table (SURVEY.md §2.3 J4, §4).
+/** US federal (+ NY state) holiday calendar (SURVEY.md §2.3 J4, §4).
   *
   * The reference calls the `holidays` PyPI package
   * (`date.isin(holidays.US(years=...))`, reference
   * traffic_volume_models/SegmentedModeling.py:234-236, and
   * `holidays.US(subdiv='NY')`, backend/features.py:26-29). Here the same
   * calendar rules are implemented in pure Scala from the public statutory
-  * definitions (5 U.S.C. §6103), and the dates become a *broadcast
-  * dimension table*: `is_holiday` is a left-semi/left join against it,
-  * never a per-row UDF — at 100 TB the calendar is a few KB while the fact
-  * side streams through a broadcast hash join.
+  * definitions (5 U.S.C. §6103). `is_holiday` tests `to_date(ts)` against
+  * the calendar's dates as a literal set (Catalyst's `InSet`, a hash-set
+  * probe per row): about a dozen dates a year ride inside the
+  * expression, so the flag needs no join, no broadcast and no job of its
+  * own, and no per-row UDF either. [[dimension]] is the same calendar as
+  * a table, for engines that join against it.
   */
 object Holidays {
 
@@ -76,17 +77,14 @@ object Holidays {
     rows.toDF("holiday_date", "holiday_name")
   }
 
-  /** Attach `is_holiday` (int 0/1) to `df` by joining `to_date(tsCol)`
-    * against the broadcast holiday dimension — the Spark-native form of
-    * the reference's `.apply(lambda x: x in us_holidays)` row loop.
+  /** Attach `is_holiday` (int 0/1): whether `to_date(tsCol)` is one of the
+    * federal holiday dates (observed shifts included) of
+    * [startYear, endYear] — the Spark-native form of the reference's
+    * `.apply(lambda x: x in us_holidays)` row loop. A null `tsCol` gives 0.
     */
   def withIsHoliday(df: DataFrame, tsCol: String, startYear: Int, endYear: Int): DataFrame = {
-    val spark = df.sparkSession
-    val dim = dimension(spark, startYear, endYear)
-      .select(col("holiday_date")).distinct()
-      .withColumn("__is_holiday_hit", lit(1))
-    df.join(broadcast(dim), to_date(col(tsCol)) === dim("holiday_date"), "left")
-      .withColumn("is_holiday", coalesce(col("__is_holiday_hit"), lit(0)))
-      .drop("holiday_date", "__is_holiday_hit")
+    val dates = (startYear to endYear).flatMap(federal).map(_._1).distinct
+    df.withColumn("is_holiday",
+      coalesce(to_date(col(tsCol)).isin(dates: _*).cast("int"), lit(0)))
   }
 }

@@ -18,10 +18,12 @@ import graft.windows.TrailingFeatures
   *   temporal 80/20 split → SegmentedModel(GBT normal / GBT event)
   *
   * Shuffle inventory (the 100 TB view): one shuffle at the fan-out join
-  * (keyed Yr,M,D,HH), one at the window partition (borough), one at the
-  * split's quantile scan. The global sort of the reference (O1) is
-  * subsumed by the window's per-partition ordering — no global sort
-  * stage at all.
+  * (keyed Yr,M,D,HH), one at the window partition (borough, into
+  * `spark.sql.shuffle.partitions` tasks, never coalesced), one at the
+  * split's quantile scan. The holiday flag tests a literal date set per
+  * row: no shuffle, no broadcast, no join. The global sort of the
+  * reference (O1) is subsumed by the window's per-partition ordering —
+  * no global sort stage at all.
   */
 object TrainingPipeline {
 
@@ -51,10 +53,10 @@ object TrainingPipeline {
       col("temperature_2m"), col("precipitation"), col("snowfall"),
       col("snow_depth"))
     // traffic side: dedup + safe numeric Vol + rename (raw_merge.py:13-24)
-    val t = traffic.dropDuplicates()
-      .withColumn("Vol", Relational.safeNumeric(col("Vol")))
-      .withColumnRenamed("Boro", "borough_t")
-      .select("RequestID", "Yr", "M", "D", "HH", "borough_t", "SegmentID", "Vol")
+    val t = traffic.dropDuplicates().select(
+      col("RequestID"), col("Yr"), col("M"), col("D"), col("HH"),
+      col("Boro").as("borough_t"), col("SegmentID"),
+      Relational.safeNumeric(col("Vol")).as("Vol"))
     // J2: the DELIBERATE fan-out join — borough absent from the key
     val joined = Relational.fanOutJoin(t, w, Seq("Yr", "M", "D", "HH"))
     // window features FIRST, scalar features after: the per-borough
@@ -65,20 +67,18 @@ object TrainingPipeline {
     val windowed = TrailingFeatures.withTrailing(joined, "Vol",
       partitionCols = windowKeyCols, orderCols = ordered,
       lags = Seq(1), rolls = Seq(3, 24))
-    // features (F9, J4, F13, F10)
-    val cal = DateTimeKit.cyclicalFeatures(col("date"))
-      .foldLeft(Holidays.withIsHoliday(windowed, "date", 2024, 2024)) {
-        case (d, (n, c)) => d.withColumn(n, c)
-      }
-    cal
-      .withColumn("heavy_snow", (col("snow_depth") > 5).cast("int"))
-      .withColumn("is_event",
-        (col("is_holiday") === 1 || coalesce(col("heavy_snow"), lit(0)) === 1).cast("int"))
-      .withColumnRenamed("Vol_lag_1", "vol_lag_1")
-      .withColumnRenamed("Vol_roll_3", "vol_roll_3")
-      .withColumnRenamed("Vol_roll_24", "vol_roll_24")
-      .withColumn("vol_log", log1p(col("Vol")))
-      .na.drop((featureCols :+ "vol_log").map(identity))
+    // features (F9, J4, F13, F10), one projection: every chained
+    // withColumn is a new DataFrame that Spark analyses eagerly
+    val heavySnow = (col("snow_depth") > 5).cast("int")
+    val scalar = DateTimeKit.cyclicalFeatures(col("date")).map { case (n, c) => c.as(n) } ++ Seq(
+      heavySnow.as("heavy_snow"),
+      (col("is_holiday") === 1 || coalesce(heavySnow, lit(0)) === 1).cast("int").as("is_event"),
+      log1p(col("Vol")).as("vol_log"))
+    Holidays.withIsHoliday(windowed, "date", 2024, 2024)
+      .withColumnsRenamed(Map("Vol_lag_1" -> "vol_lag_1", "Vol_roll_3" -> "vol_roll_3",
+        "Vol_roll_24" -> "vol_roll_24"))
+      .select(col("*") +: scalar: _*)
+      .na.drop(featureCols :+ "vol_log")
   }
 
   /** Fitted artifacts + holdout metrics of one full E1 run. */

@@ -332,6 +332,37 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges <= 4, s"unexpected shuffle count $exchanges:\n${p.take(500)}")
   }
 
+  test("E1 aggregate: one window over a pinned per-core repartition, no holiday join or local scan") {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val agg = Bench.e1Aggregate(spark, 24 * 7, Seq("borough"))
+    agg.collect()
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan: SparkPlan = agg.queryExecution.executedPlan
+    val windows = aqe.collect(plan) { case w: WindowExec => w }
+    assert(windows.size == 1, plan.toString)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the nearest exchange below the window is the repartition, read
+    // whole: AQE coalesced none of its partitions
+    val below = aqe.collectFirst(windows.head.child) { case e: ShuffleExchangeExec => e }
+    assert(below.exists(_.shuffleOrigin == REPARTITION_BY_NUM), plan.toString)
+    assert(below.get.outputPartitioning.numPartitions == partitions)
+    assert(windows.head.child.outputPartitioning.numPartitions == partitions, plan.toString)
+    assert(aqe.collect(plan) { case j: BaseJoinExec => j }.size == 1,
+      "only the fan-out join may remain:\n" + plan)
+    assert(aqe.collect(plan) { case l: LocalTableScanExec => l }.isEmpty,
+      "the holiday set must not be a local relation:\n" + plan)
+  }
+
+  test("E1 aggregate: building and collecting it runs 4 jobs") {
+    // The holiday dimension's distinct stage and broadcast made it 6.
+    val (_, sites) = TestSpark.jobSites(Bench.e1Aggregate(spark, 24 * 7, Seq("borough")).collect())
+    assert(sites.size == 4, sites.mkString("\n"))
+  }
+
   test("chunkTokens: map-only — zero exchanges, one generate") {
     val docs = graft.sources.Tables.documents(spark, dir)
     val p = graft.operators.TextOps.chunkTokens(docs, "doc_id",
