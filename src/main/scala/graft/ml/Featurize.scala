@@ -18,14 +18,13 @@ import graft.Lineage.LineageOps
   */
 object Featurize {
 
-  /** F15: one-hot columns `<prefix>_<value>` for each value; with
-    * `dropFirst` the alphabetically-first value is omitted (the
-    * reference's `drop_first=True` collinearity guard).
+  /** F15: one-hot columns `<prefix>_<value>` for each value but the
+    * alphabetically-first (the reference's `drop_first=True`
+    * collinearity guard).
     */
   def oneHot(df: DataFrame, colName: String, values: Seq[String],
-      prefix: String, dropFirst: Boolean = true): DataFrame = {
-    val kept = if (dropFirst) values.sorted.drop(1) else values.sorted
-    kept.foldLeft(df) { (d, v) =>
+      prefix: String): DataFrame = {
+    values.sorted.drop(1).foldLeft(df) { (d, v) =>
       d.withColumn(s"${prefix}_$v", (col(colName) === lit(v)).cast("int"))
     }
   }

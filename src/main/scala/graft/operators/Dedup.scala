@@ -671,8 +671,7 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int = 3, threshold: Double = 0.5,
-      maxShingleFreq: Option[Int] = Some(1000),
-      materializeIndex: Boolean = true): DataFrame = {
+      maxShingleFreq: Option[Int] = Some(1000)): DataFrame = {
     // Shingle identity is the rotate-XOR combine of per-token h60 values
     // (TextOps.shingleHashesFromTokenHashes): md5 once per TOKEN, then
     // integer ops per shingle — this path was md5-of-concat-per-shingle
@@ -696,8 +695,7 @@ object Dedup {
     // shingle per doc. At multi-executor scale prefer a reliable
     // `checkpoint(dir)` over localCheckpoint if executor loss matters —
     // lineage is truncated either way.
-    val shingled =
-      if (materializeIndex) shingledPlan.graftCheckpoint() else shingledPlan
+    val shingled = shingledPlan.graftCheckpoint()
     var inv = shingled
       .select(col(idCol), explode(col("sh")).as("sh_h"))
     maxShingleFreq.foreach { cap =>

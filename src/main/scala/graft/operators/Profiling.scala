@@ -70,10 +70,9 @@ object Profiling {
     * (one pass over the data per distinct column, map-side partials
     * throughout); output is columns-sized. For hundreds of columns at
     * 100 TB swap the exact distincts for `approx_count_distinct` — the
-    * shape is otherwise identical, which is why the knob exists.
+    * shape is otherwise identical.
     */
-  def profileTable(df: DataFrame, cols: Seq[String],
-      exactDistinct: Boolean = true): DataFrame = {
+  def profileTable(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "cols must be non-empty")
     require(cols.forall(df.columns.contains), "cols must exist in df")
     val numeric = df.schema.fields
@@ -87,11 +86,9 @@ object Profiling {
     def quoted(c: String) = col("`" + c.replace("`", "``") + "`")
     val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
       val src = quoted(c)
-      val nd = if (exactDistinct) countDistinct(src)
-        else approx_count_distinct(src)
       Seq(count(lit(1)).as(s"__n_$i"),
         count(lit(1)).minus(count(src)).as(s"__nn_$i"),
-        nd.as(s"__nd_$i")) ++
+        countDistinct(src).as(s"__nd_$i")) ++
         (if (numeric(c)) Seq(min(src).cast("double").as(s"__min_$i"),
             max(src).cast("double").as(s"__max_$i"),
             avg(src).as(s"__avg_$i"))

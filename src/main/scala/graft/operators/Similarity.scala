@@ -9,24 +9,26 @@ import graft.functions.Hashing
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
-  * Two tiers:
-  *  - [[bruteTopK]]: exact cosine top-k — the correctness baseline. A
-  *    broadcast of the (small) query set against the corpus; per-row dot
-  *    products via the codegen'd `graft_dot` expression (the
-  *    `zip_with`+`aggregate` fold in [[dot]] is the SQL-expressible
-  *    reference form — interpreted, kept for oracle parity checks).
-  *  - [[lshTopK]]: the scale path — random-hyperplane LSH. Each vector is
-  *    bucketed by the sign pattern of `nPlanes` fixed pseudo-random
-  *    hyperplanes; candidates are generated by an equi-join on the bucket
-  *    and only candidates get exact re-scoring. At 100 TB this replaces
-  *    the O(N·Q) scan with a key-partitioned join whose fan-in is the
-  *    bucket occupancy (tunable via nPlanes).
+  * Top-k families, one output contract (query_id, neighbor_id, rank,
+  * cosine): [[bruteTopK]] (exact, the baseline; [[quantizedTopK]] and
+  * [[hardNegatives]] reuse its shape), [[lshTopK]] (random-hyperplane
+  * buckets), [[ivfTopK]] (coarse Lloyd cells), [[pqTopK]] (PQ codes
+  * scanned by ADC), [[ivfPqTopK]] (cells + residual PQ codes) and the
+  * persisted IVF-PQ index ([[buildAnnIndex]], [[appendAnnIndex]],
+  * [[searchAnnIndex]]). Three pieces are shared, each kept once: the
+  * quantizer fit ([[fitIvfPq]] over [[localLloyd]]/[[pqCodebooks]]), the
+  * unit-normaliser [[unitNorm]] with the shortlist re-rank [[rerank]],
+  * and the ranking rule [[rankByCosine]].
   *
   * Hyperplane components are derived from the same md5-based h60 primitive
   * as everything else, so buckets are deterministic and the DuckDB oracle
   * can reproduce them from literal constants.
   */
 object Similarity {
+
+  /** Seed and sample-row cap of every quantizer fit. */
+  private val Seed = 42L
+  private val MaxFitSample = 65536
 
   /** Sequential-fold dot product of two double arrays (deterministic
     * accumulation order — matches a left-to-right SQL fold).
@@ -37,6 +39,18 @@ object Similarity {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  /** The cosine top-k rule: per `query_id`, cosine descending, ties to
+    * the lower `neighbor_id`; `extra` columns follow the four outputs. */
+  private def rankByCosine(scored: DataFrame, k: Int,
+      extra: Column*): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col("query_id"), col("neighbor_id"), col("rank"),
+        col("cosine")) ++ extra: _*)
+  }
 
   /** Exact cosine top-k: for each query vector (rows of `queries`), the k
     * nearest corpus rows by cosine, ties broken by corpus id. The query
@@ -55,14 +69,9 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("__cv"))
       .withColumn("__cn", sqrt(dotF(col("__cv"), col("__cv"))))
-    val scored = c.crossJoin(broadcast(q))
+    rankByCosine(c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dotF(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+      .withColumn("cosine", dotF(col("__qv"), col("__cv")) / (col("__qn") * col("__cn"))), k)
   }
 
   /** Deterministic pseudo-random hyperplanes: component d of plane p is
@@ -135,14 +144,9 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id", "__qv", "__cv")
       .dropDuplicates("query_id", "neighbor_id") // union over tables
-    val scored = candidates.withColumn("cosine",
+    rankByCosine(candidates.withColumn("cosine",
       dotF(col("__qv"), col("__cv")) /
-        (sqrt(dotF(col("__qv"), col("__qv"))) * sqrt(dotF(col("__cv"), col("__cv")))))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+        (sqrt(dotF(col("__qv"), col("__qv"))) * sqrt(dotF(col("__cv"), col("__cv"))))), k)
   }
 
   /** IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
@@ -163,22 +167,14 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCells: Int = 16, nProbe: Int = 4,
-      seed: Long = 42, fitSampleFraction: Double = 1.0,
-      maxFitSample: Int = 65536): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
+      fitSampleFraction: Double = 1.0): DataFrame = {
     val dotF = graft.functions.GraftFunctions.dotFast _
-
     val (assigned, probed) = ivfAssign(corpus, queries, idCol, vecCol,
-      nCells, nProbe, seed, fitSampleFraction, maxFitSample)
-    val scored = assigned.join(probed, Seq("__cell"))
+      nCells, nProbe, fitSampleFraction)
+    rankByCosine(assigned.join(probed, Seq("__cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", dotF(col("__qv"), col("__cv")) /
-        (sqrt(dotF(col("__qv"), col("__qv"))) * sqrt(dotF(col("__cv"), col("__cv")))))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+        (sqrt(dotF(col("__qv"), col("__qv"))) * sqrt(dotF(col("__cv"), col("__cv"))))), k)
   }
 
   /** Shared IVF candidate generation — the coarse-quantizer half of
@@ -189,7 +185,7 @@ object Similarity {
     *
     * Coarse-quantizer training is DRIVER-LOCAL over a bounded sample —
     * the standard IVF recipe (FAISS trains its quantizer the same way):
-    * the collect is O(min(sample, maxFitSample) × dim), never O(corpus),
+    * the collect is O(min(sample, MaxFitSample) × dim), never O(corpus),
     * and a local Lloyd's loop over ≤65k × dim doubles is microseconds-
     * to-milliseconds where a distributed fit pays multiple scheduler
     * round-trips per iteration. Few iterations on purpose: the quantizer
@@ -207,16 +203,13 @@ object Similarity {
     */
   private[graft] def ivfAssign(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, nCells: Int, nProbe: Int,
-      seed: Long, fitSampleFraction: Double, maxFitSample: Int)
-      : (DataFrame, DataFrame) = {
+      fitSampleFraction: Double): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val corpusVec = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("__cv"))
-    val fitRows = (if (fitSampleFraction < 1.0)
-        corpusVec.sample(fitSampleFraction, seed) else corpusVec)
-      .select(col("__cv")).limit(maxFitSample).collect()
-      .map(_.getSeq[Double](0).toArray)
-    val centroids = localLloyd(fitRows, nCells, iters = 5, seed)
+    val centroids = localLloyd(fitSample((if (fitSampleFraction < 1.0)
+      corpusVec.sample(fitSampleFraction, Seed) else corpusVec).select(col("__cv"))),
+      nCells, Seed)
     def cells(vec: Column): Column =
       graft.functions.GraftFunctions.centroidCells(vec, centroids.toSeq)
     val assigned =
@@ -239,10 +232,9 @@ object Similarity {
     */
   def ivfProbeCensus(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, nCells: Int = 16, nProbe: Int = 4,
-      seed: Long = 42, fitSampleFraction: Double = 1.0,
-      maxFitSample: Int = 65536): DataFrame = {
+      fitSampleFraction: Double = 1.0): DataFrame = {
     val (assigned, probed) = ivfAssign(corpus, queries, idCol, vecCol,
-      nCells, nProbe, seed, fitSampleFraction, maxFitSample)
+      nCells, nProbe, fitSampleFraction)
     val nCorpus = assigned.count()
     val nQueries = probed.select(col("query_id")).distinct().count()
     val cellSizes = assigned.groupBy("__cell")
@@ -256,35 +248,49 @@ object Similarity {
         lit(nProbe.toDouble / nCells).as("nominal_bound"))
   }
 
+  /** The bounded driver-local fit sample of a one-column vector frame. */
+  private def fitSample(vectors: DataFrame): Array[Array[Double]] = {
+    val fit = vectors.limit(MaxFitSample).collect()
+      .map(_.getSeq[Double](0).toArray)
+    require(fit.nonEmpty, "quantizer fit sample is empty")
+    fit
+  }
+
+  /** Index of the center nearest `v` (squared L2, ties to the lower). */
+  private def nearest(centers: Array[Array[Double]], v: Array[Double]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < centers.length) {
+      val ctr = centers(c)
+      var d = 0.0
+      var i = 0
+      while (i < v.length) { val t = v(i) - ctr(i); d += t * t; i += 1 }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
   /** Seeded Lloyd's k-means over an in-memory sample: random DISTINCT
     * points as initial centers (content-deduplicated first — a near-dup
     * corpus sample is full of identical vectors, and coincident initial
-    * centers would leave permanently dead cells), `iters` assign-average
+    * centers would leave permanently dead cells), five assign-average
     * rounds. Empty cells keep their previous center. Deterministic for a
     * fixed sample and seed.
     */
-  private def localLloyd(samples: Array[Array[Double]], k: Int, iters: Int,
+  private def localLloyd(samples: Array[Array[Double]], k: Int,
       seed: Long): Array[Array[Double]] = {
-    require(samples.nonEmpty, "quantizer fit sample is empty")
     val dim = samples.head.length
     val rnd = new scala.util.Random(seed)
     val distinct = samples.map(_.toVector).toVector.distinct
     val centers = rnd.shuffle(distinct).take(k).map(_.toArray).toArray
     val kEff = centers.length
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until 5) {
       val sums = Array.fill(kEff)(new Array[Double](dim))
       val counts = new Array[Long](kEff)
       samples.foreach { v =>
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < kEff) {
-          var d = 0.0
-          var i = 0
-          while (i < dim) { val t = v(i) - centers(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = nearest(centers, v)
         counts(best) += 1
         val s = sums(best)
         var i = 0
@@ -300,6 +306,89 @@ object Similarity {
       }
     }
     centers
+  }
+
+  /** PQ codebooks: subspace j's `ksub` centers fit (seed `seed0 + j`) on
+    * the j-th `dim/m` slice, in the subspace-major ksub-run layout. */
+  private def pqCodebooks(vectors: Array[Array[Double]], m: Int, ksub: Int,
+      seed0: Long): Seq[Array[Double]] = {
+    val dim = vectors.head.length
+    require(dim % m == 0, s"dim=$dim must be a multiple of m=$m")
+    val dsub = dim / m
+    (0 until m).flatMap { j =>
+      val subs = vectors.map(v =>
+        java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub))
+      val cents = localLloyd(subs, ksub, seed0 + j)
+      // localLloyd returns ≤ ksub centers when the sample has fewer
+      // distinct subvectors; pad by repeating the first center — the
+      // layout needs exactly ksub rows per subspace, and a duplicate
+      // center is never selected over its lower-index twin (strict-less
+      // argmin), so results are unchanged.
+      cents ++ Array.fill(ksub - cents.length)(cents.head)
+    }
+  }
+
+  /** The IVF-PQ quantizer fit of [[ivfPqTopK]] and [[buildAnnIndex]]
+    * over a unit-normalized corpus (`__v`): coarse cells, then codebooks
+    * on the residuals v − c(v). Returns (coarse, codebooks).
+    *
+    * RESIDUAL encoding (the actual IVFADC of Jégou/Douze/Schmid §III,
+    * round 13): the coarse quantizer strips the between-cell structure,
+    * so the residual is exactly the within-cell detail — on a clustered
+    * corpus raw-vector codes waste their entire resolution re-describing
+    * the cell center and leave the within-blob ranking to quantization
+    * noise (measured: recall@5 0.42 on 32 tight blobs at 100k rows;
+    * residual codes with HALF the code budget certify ≥ 0.9 in PqSpec).
+    * Residuals also have much lower variance than raw vectors, so a
+    * smaller m/ksub reaches the same recall — which shrinks the
+    * per-(query, cell) ADC table the candidate scan drags through cache.
+    */
+  private def fitIvfPq(c: DataFrame, nCells: Int, m: Int, ksub: Int)
+      : (Seq[Array[Double]], Seq[Array[Double]]) = {
+    val fit = fitSample(c.select(col("__v")))
+    val coarse = localLloyd(fit, nCells, Seed)
+    val residuals = fit.map { v =>
+      val ctr = coarse(nearest(coarse, v))
+      Array.tabulate(v.length)(i => v(i) - ctr(i))
+    }
+    (coarse.toSeq, pqCodebooks(residuals, m, ksub, Seed + 1000))
+  }
+
+  /** (outId, `__v` = v/‖v‖; zero vectors unchanged). */
+  private def unitNorm(df: DataFrame, idCol: String, vecCol: String,
+      outId: String): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val dotF = graft.functions.GraftFunctions.dotFast _
+    df.select(col(idCol).as(outId), col(vecCol).cast("array<double>").as("__v"))
+      .withColumn("__n", sqrt(dotF(col("__v"), col("__v"))))
+      .withColumn("__v", when(col("__n") > 0,
+        transform(col("__v"), x => x / col("__n"))).otherwise(col("__v")))
+      .drop("__n")
+  }
+
+  /** Per query, the `kAdc` nearest candidates by ADC as `__top`; the
+    * zero-padded payload makes TopKScored's tie rule the lower id. */
+  private def adcTop(candidates: DataFrame, ksub: Int, kAdc: Int): DataFrame =
+    candidates.filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("__adc", graft.functions.GraftFunctions.pqAdcSum(
+        col("__dtab"), col("__codes"), ksub))
+      .groupBy("query_id")
+      .agg(graft.functions.GraftFunctions.topK(-col("__adc"),
+        lpad(col("neighbor_id").cast("string"), 20, "0"), kAdc).as("__top"))
+
+  /** Exact re-rank of a (query_id, neighbor_id) shortlist: fetch full
+    * (unit) vectors for the queries·k·refine surviving ids only — the
+    * shortlist is tiny by construction, so it broadcasts and the
+    * corpus-side fetch is a map-side semi-probe, never a corpus shuffle.
+    */
+  private def rerank(shortlist: DataFrame, corpusUnit: DataFrame,
+      queriesUnit: DataFrame, k: Int): DataFrame = {
+    val dotF = graft.functions.GraftFunctions.dotFast _
+    val cv = corpusUnit.select(col("neighbor_id"), col("__v").as("__cv"))
+      .join(broadcast(shortlist), Seq("neighbor_id"))
+    rankByCosine(cv.join(broadcast(queriesUnit
+        .select(col("query_id"), col("__v").as("__qv"))), Seq("query_id"))
+      .withColumn("cosine", dotF(col("__qv"), col("__cv"))), k)
   }
 
   /** Product-quantization approximate top-k (Jégou/Douze/Schmid, TPAMI
@@ -326,10 +415,9 @@ object Similarity {
     *
     * `refine` > 1 enables the standard re-ranking stage (FAISS's
     * IndexRefineFlat): the ADC scan keeps a k·refine shortlist, full
-    * vectors are fetched for ONLY those rows (a broadcast semi-probe of
-    * the corpus — shortlist is queries·k·refine rows, never
-    * corpus-sized), and exact cosine re-ranks the shortlist to the
-    * final k. This is the production PQ shape: quantization error then
+    * vectors are fetched for ONLY those rows, and exact cosine re-ranks
+    * the shortlist to the final k ([[rerank]]). This is the
+    * production PQ shape: quantization error then
     * only costs recall when a true neighbor falls outside the ADC
     * shortlist, not whenever it mis-orders the top k. Measured recall@5
     * here (64-dim near-uniform synthetic embeddings — the hard,
@@ -340,78 +428,25 @@ object Similarity {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, m: Int = 8, ksub: Int = 16,
-      seed: Long = 42, maxFitSample: Int = 65536,
       refine: Int = 1): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val dotF = graft.functions.GraftFunctions.dotFast _
-    def unit(df: DataFrame, id: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as("__v"))
-        .withColumn("__n", sqrt(dotF(col("__v"), col("__v"))))
-        .withColumn("__v", when(col("__n") > 0,
-          transform(col("__v"), x => x / col("__n"))).otherwise(col("__v")))
-        .drop("__n")
-    val c = unit(corpus, "neighbor_id")
-    // Codebook fit is DRIVER-LOCAL over a bounded sample (the FAISS
-    // recipe): O(maxFitSample × dim) collected once per index build,
-    // never per query or per corpus row.
-    val fit = c.select(col("__v")).limit(maxFitSample).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(fit.nonEmpty, "PQ codebook fit sample is empty")
-    val dim = fit.head.length
-    require(dim % m == 0, s"dim=$dim must be a multiple of m=$m")
-    val dsub = dim / m
-    val codebooks: Seq[Array[Double]] = (0 until m).flatMap { j =>
-      val subs = fit.map(v => java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub))
-      val cents = localLloyd(subs, ksub, iters = 5, seed + j)
-      // localLloyd returns ≤ ksub centers when the sample has fewer
-      // distinct subvectors; pad by repeating the first center — the
-      // layout needs exactly ksub rows per subspace, and a duplicate
-      // center is never selected over its lower-index twin (strict-less
-      // argmin), so results are unchanged.
-      cents ++ Array.fill(ksub - cents.length)(cents.head)
-    }
+    require(refine >= 1, "refine must be >= 1")
+    val c = unitNorm(corpus, idCol, vecCol, "neighbor_id")
+    val qUnit = unitNorm(queries, idCol, vecCol, "query_id")
+    val codebooks = pqCodebooks(fitSample(c.select(col("__v"))), m, ksub, Seed)
     val coded = c.withColumn("__codes",
       graft.functions.GraftFunctions.pqEncode(col("__v"), codebooks, m))
       .select(col("neighbor_id"), col("__codes"))
-    val q = unit(queries, "query_id").withColumn("__dtab",
+    val q = qUnit.withColumn("__dtab",
       graft.functions.GraftFunctions.pqAdcTable(col("__v"), codebooks, m))
       .select(col("query_id"), col("__dtab"))
-    // Zero-padded payload so TopKScored's lexicographic tie rule equals
-    // the numeric "lowest neighbor_id" rule of bruteTopK.
-    require(refine >= 1, "refine must be >= 1")
-    val kAdc = k * refine
-    val topk = coded.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("__adc", graft.functions.GraftFunctions.pqAdcSum(
-        col("__dtab"), col("__codes"), ksub))
-      .groupBy("query_id")
-      .agg(graft.functions.GraftFunctions.topK(-col("__adc"),
-        lpad(col("neighbor_id").cast("string"), 20, "0"), kAdc).as("__top"))
-    val adcRanked = topk.select(col("query_id"), posexplode(col("__top")))
+    val adcRanked = adcTop(coded.crossJoin(broadcast(q)), ksub, k * refine)
+      .select(col("query_id"), posexplode(col("__top")))
       .select(col("query_id"),
         col("col.payload").cast("long").as("neighbor_id"),
         (col("pos") + 1).as("rank"),
         (-col("col.score")).as("adc_dist"))
     if (refine == 1) adcRanked
-    else {
-      // exact re-rank of the shortlist: fetch full (unit) vectors for
-      // the queries·k·refine surviving ids only — the shortlist is tiny
-      // by construction, so it broadcasts and the corpus-side fetch is
-      // a map-side semi-probe, never a corpus shuffle
-      val shortlist = adcRanked.select("query_id", "neighbor_id")
-      val cv = c.select(col("neighbor_id"), col("__v").as("__cv"))
-        .join(broadcast(shortlist), Seq("neighbor_id"))
-      val rescored = cv.join(broadcast(unit(queries, "query_id")
-          .select(col("query_id"), col("__v").as("__qv"))), Seq("query_id"))
-        // vectors are unit-normalized, so the dot IS the cosine
-        .withColumn("cosine", dotF(col("__qv"), col("__cv")))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      rescored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
-    }
+    else rerank(adcRanked.select("query_id", "neighbor_id"), c, qUnit, k)
   }
 
   /** IVF-PQ: the composed 100 TB ANN shape — IVF coarse cells make the
@@ -419,12 +454,10 @@ object Similarity {
     * Voronoi cells, ~nProbe·N/nCells candidates instead of N) and PQ
     * codes make each candidate CHEAP (m table lookups on m-int codes
     * instead of a d-float dot), with the exact re-rank of the k·refine
-    * shortlist bounding the recall cost of quantization. This is
-    * FAISS's IndexIVFPQ in its `by_residual=false` configuration: one
-    * GLOBAL codebook set rather than per-cell residual codebooks —
-    * residual encoding is the known quality upgrade at equal scan cost
-    * but needs a per-(query, cell) distance table; the refine stage
-    * recovers the difference here (certified in q_ann_ivfpq).
+    * shortlist bounding the recall cost of quantization. Codes are
+    * residual codes (IVFADC, see [[fitIvfPq]]); the refine stage
+    * recovers the rest of the quantization error (certified in
+    * q_ann_ivfpq).
     *
     * Plan shape: everything the two parents already proved — map-only
     * cell assignment + PQ encoding (constant-size codegen kernels with
@@ -434,66 +467,21 @@ object Similarity {
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCells: Int = 16, nProbe: Int = 4,
-      m: Int = 8, ksub: Int = 16, seed: Long = 42,
-      maxFitSample: Int = 65536, refine: Int = 10): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val dotF = graft.functions.GraftFunctions.dotFast _
+      m: Int = 8, ksub: Int = 16, refine: Int = 10): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
-    def unit(df: DataFrame, id: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as("__v"))
-        .withColumn("__n", sqrt(dotF(col("__v"), col("__v"))))
-        .withColumn("__v", when(col("__n") > 0,
-          transform(col("__v"), x => x / col("__n"))).otherwise(col("__v")))
-        .drop("__n")
-    val c = unit(corpus, "neighbor_id")
-    val fit = c.select(col("__v")).limit(maxFitSample).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(fit.nonEmpty, "IVF-PQ fit sample is empty")
-    val dim = fit.head.length
-    require(dim % m == 0, s"dim=$dim must be a multiple of m=$m")
-    val dsub = dim / m
-    val coarse = localLloyd(fit, nCells, iters = 5, seed).toSeq
-    // RESIDUAL encoding (the actual IVFADC of Jégou/Douze/Schmid §III,
-    // round 13): PQ codebooks are trained on, and codes/ADC tables built
-    // from, the residual v − c(v) rather than the raw vector. The coarse
-    // quantizer strips the between-cell structure, so the residual is
-    // exactly the within-cell detail — on a clustered corpus raw-vector
-    // codes waste their entire resolution re-describing the cell center
-    // and leave the within-blob ranking to quantization noise (measured:
-    // recall@5 0.42 on 32 tight blobs at 100k rows; residual codes with
-    // HALF the code budget certify ≥ 0.9 in PqSpec). Residuals also have
-    // much lower variance than raw vectors, so a smaller m/ksub reaches
-    // the same recall — which shrinks the per-(query, cell) ADC table
-    // the candidate scan drags through cache.
-    val kEff = coarse.length
-    def cellOfLocal(v: Array[Double]): Int = {
-      var best = 0
-      var bestD = Double.MaxValue
-      var cI = 0
-      while (cI < kEff) {
-        var d = 0.0
-        var i = 0
-        val ctr = coarse(cI)
-        while (i < dim) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = cI }
-        cI += 1
-      }
-      best
-    }
-    val fitRes = fit.map { v =>
-      val ctr = coarse(cellOfLocal(v))
-      Array.tabulate(dim)(i => v(i) - ctr(i))
-    }
-    val codebooks: Seq[Array[Double]] = (0 until m).flatMap { j =>
-      val subs = fitRes.map(v =>
-        java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub))
-      val cents = localLloyd(subs, ksub, iters = 5, seed + 1000 + j)
-      cents ++ Array.fill(ksub - cents.length)(cents.head)
-    }
+    val c = unitNorm(corpus, idCol, vecCol, "neighbor_id")
+    val (coarse, codebooks) = fitIvfPq(c, nCells, m, ksub)
     ivfPqSearchWith(coarse, codebooks, m, ksub, ivfPqEncode(c, coarse, codebooks, m),
-      c, unit(queries, "query_id"), k, nProbe, refine)
+      c, unitNorm(queries, idCol, vecCol, "query_id"), k, nProbe, refine)
   }
+
+  /** `__res` = `__v` − the center of its `__cell`. The center is a column
+    * FIRST: a zip_with lambda re-evaluates non-attribute subtrees per
+    * element. */
+  private def withResidual(df: DataFrame, coarse: Seq[Array[Double]]): DataFrame =
+    df.withColumn("__ctr",
+        element_at(typedlit(coarse.map(_.toSeq)), col("__cell").cast("int") + 1))
+      .withColumn("__res", zip_with(col("__v"), col("__ctr"), (a, b) => a - b))
 
   /** Residual-encode a unit-normalized corpus (`neighbor_id`, `__v`)
     * against a fitted IVF-PQ quantizer: assign the nearest coarse cell,
@@ -502,13 +490,8 @@ object Similarity {
     */
   private def ivfPqEncode(corpusUnit: DataFrame, coarse: Seq[Array[Double]],
       codebooks: Seq[Array[Double]], m: Int): DataFrame = {
-    val centerLit = typedlit(coarse.map(_.toSeq))
-    corpusUnit
-      .withColumn("__cell", element_at(
-        graft.functions.GraftFunctions.centroidCells(col("__v"), coarse), 1))
-      .withColumn("__ctr",
-        element_at(centerLit, col("__cell").cast("int") + 1))
-      .withColumn("__res", zip_with(col("__v"), col("__ctr"), (a, b) => a - b))
+    withResidual(corpusUnit.withColumn("__cell", element_at(
+        graft.functions.GraftFunctions.centroidCells(col("__v"), coarse), 1)), coarse)
       .withColumn("__codes",
         graft.functions.GraftFunctions.pqEncode(col("__res"), codebooks, m))
       .select(col("neighbor_id"), col("__cell"), col("__codes"))
@@ -525,60 +508,35 @@ object Similarity {
       codebooks: Seq[Array[Double]], m: Int, ksub: Int, coded: DataFrame,
       corpusUnit: DataFrame, queriesUnit: DataFrame,
       k: Int, nProbe: Int, refine: Int): DataFrame = {
-    val dotF = graft.functions.GraftFunctions.dotFast _
-    val centerLit = typedlit(coarse.map(_.toSeq))
     // the query's ADC table is PER PROBED CELL (its residual is relative
     // to that cell's center) — built after the explode, nProbe tables
-    // per query, each m·ksub doubles. Center materialized into a column
-    // FIRST: a zip_with lambda re-evaluates non-attribute subtrees per
-    // element (verify-skill pitfall).
-    val q = queriesUnit
-      .withColumn("__cell", explode(slice(
+    // per query, each m·ksub doubles.
+    val q = withResidual(queriesUnit.withColumn("__cell", explode(slice(
         graft.functions.GraftFunctions.centroidCells(col("__v"), coarse),
-        1, nProbe)))
-      .withColumn("__ctr",
-        element_at(centerLit, col("__cell").cast("int") + 1))
-      .withColumn("__res", zip_with(col("__v"), col("__ctr"), (a, b) => a - b))
+        1, nProbe))), coarse)
       .withColumn("__dtab",
         graft.functions.GraftFunctions.pqAdcTable(col("__res"), codebooks, m))
       .select(col("query_id"), col("__cell"), col("__dtab"))
-    val kAdc = k * refine
-    val shortlist = coded.join(broadcast(q), Seq("__cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("__adc", graft.functions.GraftFunctions.pqAdcSum(
-        col("__dtab"), col("__codes"), ksub))
-      .groupBy("query_id")
-      .agg(graft.functions.GraftFunctions.topK(-col("__adc"),
-        lpad(col("neighbor_id").cast("string"), 20, "0"), kAdc).as("__top"))
+    val shortlist = adcTop(coded.join(broadcast(q), Seq("__cell")), ksub, k * refine)
       .select(col("query_id"), explode(col("__top")).as("e"))
       .select(col("query_id"), col("e.payload").cast("long").as("neighbor_id"))
-    val cv = corpusUnit.select(col("neighbor_id"), col("__v").as("__cv"))
-      .join(broadcast(shortlist), Seq("neighbor_id"))
-    val rescored = cv.join(broadcast(queriesUnit
-        .select(col("query_id"), col("__v").as("__qv"))), Seq("query_id"))
-      .withColumn("cosine", dotF(col("__qv"), col("__cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+    rerank(shortlist, corpusUnit, queriesUnit, k)
   }
 
-  private def unitNorm(df: DataFrame, idCol: String, vecCol: String,
-      outId: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val dotF = graft.functions.GraftFunctions.dotFast _
-    df.select(col(idCol).as(outId), col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("__n", sqrt(dotF(col("__v"), col("__v"))))
-      .withColumn("__v", when(col("__n") > 0,
-        transform(col("__v"), x => x / col("__n"))).otherwise(col("__v")))
-      .drop("__n")
+  /** Fails the task on a `__v` whose length is not the index's `dim`
+    * (the kernels would read missing elements as 0), inside the caller's
+    * own projection, so no Spark job is added. */
+  private def requireDim(df: DataFrame, dim: Int): DataFrame = {
+    val len = array_size(col("__v"))
+    df.withColumn("__v", when(len =!= dim, raise_error(concat(
+        lit("vector length "), len.cast("string"),
+        lit(s" does not match the index dim $dim"))))
+      .otherwise(col("__v")))
   }
 
   /** Build and PERSIST an IVF-PQ (residual/IVFADC) index: fit the
-    * coarse quantizer + per-subspace codebooks on a bounded sample
-    * (driver-local, the FAISS recipe), residual-encode the corpus, and
-    * write four parquet artifacts under `path`:
+    * quantizer ([[fitIvfPq]], as [[ivfPqTopK]] does), residual-encode
+    * the corpus, and write four parquet artifacts under `path`:
     *
     *  - `meta` — one row (dim, m, ksub, n_cells); written LAST as the
     *    build-complete marker (rebuild checks key on it);
@@ -600,40 +558,11 @@ object Similarity {
     * of quantizer state, m bytes-ish per corpus row of codes.
     */
   def buildAnnIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, nCells: Int = 16, m: Int = 8, ksub: Int = 16,
-      seed: Long = 42, maxFitSample: Int = 65536): Unit = {
+      path: String, nCells: Int = 16, m: Int = 8, ksub: Int = 16): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val c = unitNorm(corpus, idCol, vecCol, "neighbor_id")
-    val fit = c.select(col("__v")).limit(maxFitSample).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(fit.nonEmpty, "ANN index fit sample is empty")
-    val dim = fit.head.length
-    require(dim % m == 0, s"dim=$dim must be a multiple of m=$m")
-    val dsub = dim / m
-    val coarse = localLloyd(fit, nCells, iters = 5, seed).toSeq
-    val kEff = coarse.length
-    def cellOfLocal(v: Array[Double]): Int = {
-      var best = 0; var bestD = Double.MaxValue; var cI = 0
-      while (cI < kEff) {
-        var dAcc = 0.0; var i = 0; val ctr = coarse(cI)
-        while (i < dim) { val t = v(i) - ctr(i); dAcc += t * t; i += 1 }
-        if (dAcc < bestD) { bestD = dAcc; best = cI }
-        cI += 1
-      }
-      best
-    }
-    val fitRes = fit.map { v =>
-      val ctr = coarse(cellOfLocal(v))
-      Array.tabulate(dim)(i => v(i) - ctr(i))
-    }
-    val codebooks: Seq[Array[Double]] = (0 until m).flatMap { j =>
-      val subs = fitRes.map(v =>
-        java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub))
-      val cents = localLloyd(subs, ksub, iters = 5, seed + 1000 + j)
-      cents ++ Array.fill(ksub - cents.length)(cents.head)
-    }
+    val (coarse, codebooks) = fitIvfPq(c, nCells, m, ksub)
     coarse.zipWithIndex.map { case (ctr, i) => (i, ctr.toSeq) }
       .toDF("cell_id", "center")
       .write.mode("overwrite").parquet(s"$path/coarse")
@@ -647,7 +576,7 @@ object Similarity {
     // meta is the build-complete marker: written LAST, so an interrupted
     // build leaves no meta and callers keying existence on it rebuild
     // instead of serving a partially-committed codes table.
-    Seq((dim, m, ksub, coarse.length)).toDF("dim", "m", "ksub", "n_cells")
+    Seq((coarse.head.length, m, ksub, coarse.length)).toDF("dim", "m", "ksub", "n_cells")
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
@@ -659,13 +588,13 @@ object Similarity {
     * the new codes into the cell-partitioned codes table. Map-only over
     * the new rows; the stored quantizer is untouched, so concurrent
     * [[searchAnnIndex]] readers see either the old or the extended
-    * corpus, never a half-written quantizer.
+    * corpus, never a half-written quantizer. New rows must have the
+    * index's dim ([[requireDim]]).
     */
   def appendAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newRows: DataFrame, idCol: String, vecCol: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val (m, _, coarse, codebooks) = loadAnnIndex(spark, path)
-    ivfPqEncode(unitNorm(newRows, idCol, vecCol, "neighbor_id"),
+    val (dim, m, _, coarse, codebooks) = loadAnnIndex(spark, path)
+    ivfPqEncode(requireDim(unitNorm(newRows, idCol, vecCol, "neighbor_id"), dim),
         coarse, codebooks, m)
       .select(col("neighbor_id"), col("__codes").as("codes"),
         col("__cell").cast("int").as("cell"))
@@ -673,21 +602,20 @@ object Similarity {
   }
 
   /** Load a [[buildAnnIndex]] quantizer driver-side:
-    * (m, ksub, coarse centers by cell_id, PQ codebooks in subspace-major
-    * ksub-run layout). Bounded state — never corpus-sized.
+    * (dim, m, ksub, coarse centers by cell_id, PQ codebooks in
+    * subspace-major ksub-run layout). Bounded state — never corpus-sized.
     */
-  def loadAnnIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int, Seq[Array[Double]], Seq[Array[Double]]) = {
+  def loadAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String)
+      : (Int, Int, Int, Seq[Array[Double]], Seq[Array[Double]]) = {
     val meta = spark.read.parquet(s"$path/meta").head()
-    val m = meta.getAs[Int]("m")
-    val ksub = meta.getAs[Int]("ksub")
     val coarse = spark.read.parquet(s"$path/coarse")
       .orderBy("cell_id").collect()
       .map(_.getSeq[Double](1).toArray).toSeq
     val codebooks = spark.read.parquet(s"$path/pq")
       .orderBy("subspace", "code").collect()
       .map(_.getSeq[Double](2).toArray).toSeq
-    (m, ksub, coarse, codebooks)
+    (meta.getAs[Int]("dim"), meta.getAs[Int]("m"), meta.getAs[Int]("ksub"),
+      coarse, codebooks)
   }
 
   /** ANN search against a PERSISTED [[buildAnnIndex]] index: load the
@@ -695,13 +623,13 @@ object Similarity {
     * code table (cell partition pruning — the nProbe/nCells I/O shape),
     * exact-re-rank the shortlist against `corpus` (the raw vector table
     * the serving layer keeps anyway; codes alone can't re-rank).
-    * Same output contract as [[ivfPqTopK]].
+    * Same output contract as [[ivfPqTopK]]; queries must have the
+    * index's dim ([[requireDim]]).
     */
   def searchAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int = 4, refine: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val (m, ksub, coarse, codebooks) = loadAnnIndex(spark, path)
+    val (dim, m, ksub, coarse, codebooks) = loadAnnIndex(spark, path)
     // STATIC partition pruning, not DPP-by-heuristic: the probed cell
     // union is computable up front from the serving-sized query set and
     // the driver-resident coarse quantizer (one tiny job — queries × k
@@ -718,7 +646,7 @@ object Similarity {
     // non-deterministic source (sampled/streamed queries) could
     // otherwise probe one cell set and search another, silently
     // dropping candidates (ADVICE r15).
-    val normQ = unitNorm(queries, idCol, vecCol, "query_id")
+    val normQ = requireDim(unitNorm(queries, idCol, vecCol, "query_id"), dim)
       .graftCheckpoint()
     val probed = normQ
       .select(explode(slice(
@@ -1059,17 +987,12 @@ object Similarity {
     val q = withClusterAssignment(normed(queries, idCol, vecCol), centroids)
       .select(col(idCol).as("query_id"), col("__v").as("__qv"),
         col("__n").as("__qn"), col("cluster").as("__qcl"))
-    val scored = c.crossJoin(broadcast(q))
+    rankByCosine(c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id")
         && col("__ncl") =!= col("__qcl"))
       .withColumn("cosine",
-        dotF(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("cosine"), col("__ncl").as("neighbor_cluster"))
+        dotF(col("__qv"), col("__cv")) / (col("__qn") * col("__cn"))),
+      k, col("__ncl").as("neighbor_cluster"))
   }
 
   /** Symmetric int8 scalar quantization of an embedding column — the

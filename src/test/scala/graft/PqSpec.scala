@@ -204,6 +204,34 @@ class PqSpec extends AnyFunSuite {
     }
   }
 
+  test("persisted index: an append or a query of the wrong length fails, naming both lengths") {
+    withTempDir("ann_idx_dim") { tmp =>
+      val rnd = new scala.util.Random(5)
+      def vecs(ids: Range, dim: Int) = ids.map(i =>
+        (i.toLong, Seq.fill(dim)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
+      val corpus = vecs(0 until 200, 64)
+      val path = tmp.toString
+      Similarity.buildAnnIndex(corpus, "vec_id", "embedding", path,
+        nCells = 4, m = 8, ksub = 8)
+      val short = vecs(200 until 220, 32)
+      def failsNamingBothLengths(body: => Any): Unit = {
+        val e = intercept[Exception](body)
+        val msg = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+        assert(msg.contains("vector length 32") && msg.contains("dim 64"), msg)
+      }
+      failsNamingBothLengths(
+        Similarity.appendAnnIndex(spark, path, short, "vec_id", "embedding"))
+      assert(spark.read.parquet(s"$path/codes").count() == 200L)
+      failsNamingBothLengths(Similarity.searchAnnIndex(spark, path, corpus,
+        short, "vec_id", "embedding", 3).collect())
+      // rows of the index's length still append
+      Similarity.appendAnnIndex(spark, path, vecs(300 until 310, 64),
+        "vec_id", "embedding")
+      assert(spark.read.parquet(s"$path/codes").count() == 210L)
+    }
+  }
+
   test("persisted index append: new vectors are searchable without re-fitting the quantizer") {
     withTempDir("ann_idx_app") { tmp =>
       val corpus = blobCorpus(nBlobs = 8, perBlob = 100, dim = 32, seed = 11)

@@ -160,6 +160,47 @@ class SimilaritySpec extends AnyFunSuite {
     assert(assigned3 == assigned)
   }
 
+  test("tie rule: equal corpus vectors rank the lower neighbor_id first in every top-k operator") {
+    // query 0 = e0; ids 12 and 9 hold the same vector t = (0.6, 0.8, 0…),
+    // the query's two nearest neighbours (every other row has cosine
+    // < 0.3 to e0). 12 comes first in the input and sorts first as a
+    // string, so only the numeric id rule puts 9 at rank 1. t sits in
+    // the other cluster of the two centroids below, so hardNegatives
+    // ranks it too.
+    val rnd = new scala.util.Random(3)
+    val t = Seq(0.6, 0.8) ++ Seq.fill(6)(0.0)
+    val others = (1L to 40L).filterNot(Set(9L, 12L)).map(i =>
+      (i, Seq(rnd.nextDouble() * 0.3) ++ Seq.fill(7)(rnd.nextDouble() * 2 - 1)))
+    val corpus = ((0L, 1.0 +: Seq.fill(7)(0.0)) +: (12L, t) +: (9L, t) +: others)
+      .toDF("vec_id", "embedding")
+    val queries = corpus.filter(col("vec_id") === 0L)
+    val cents = Seq(0 -> (1.0 +: Seq.fill(7)(0.0)).toArray, 1 -> t.toArray)
+    TestSpark.withTempDir("ann_tie") { tmp =>
+      Similarity.buildAnnIndex(corpus, "vec_id", "embedding", tmp.toString,
+        nCells = 4, m = 4, ksub = 4)
+      val operators = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "bruteTopK" -> (() => Similarity.bruteTopK(corpus, queries, "vec_id", "embedding", 2)),
+        "lshTopK" -> (() => Similarity.lshTopK(corpus, queries, "vec_id", "embedding", 2,
+          nPlanes = 1, dim = 8, nTables = 32)),
+        "quantizedTopK" -> (() => Similarity.quantizedTopK(corpus, queries, "vec_id", "embedding", 2)),
+        "ivfTopK" -> (() => Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", 2,
+          nCells = 4, nProbe = 4)),
+        "pqTopK" -> (() => Similarity.pqTopK(corpus, queries, "vec_id", "embedding", 2,
+          m = 4, ksub = 4, refine = 20)),
+        "ivfPqTopK" -> (() => Similarity.ivfPqTopK(corpus, queries, "vec_id", "embedding", 2,
+          nCells = 4, nProbe = 4, m = 4, ksub = 4, refine = 20)),
+        "searchAnnIndex" -> (() => Similarity.searchAnnIndex(spark, tmp.toString, corpus,
+          queries, "vec_id", "embedding", 2, nProbe = 4, refine = 20)),
+        "hardNegatives" -> (() => Similarity.hardNegatives(corpus, queries, "vec_id",
+          "embedding", 2, cents)))
+      for ((name, run) <- operators) {
+        val got = run().select("query_id", "neighbor_id", "rank").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._3).toSeq
+        assert(got == Seq((0L, 9L, 1), (0L, 12L, 2)), name)
+      }
+    }
+  }
+
   test("recallAtK: exact fraction, bound edge, and corpus-derived counts") {
     val exact = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L))
       .toDF("query_id", "neighbor_id")

@@ -7,7 +7,8 @@ For each query dir under verifyOutDir: load the Spark parquet result,
 run the matching oracle SQL from oracle_sql.json in DuckDB (tables
 registered as views over <sfDir>/*.parquet), sort columns by name, sort
 rows, and compare cell values (exact for ints/strings, tiny epsilon for
-floats, µs-truncated for timestamps).
+floats, µs-truncated for timestamps). An oracle_sql.json key with no
+result dir fails too: Verify writes no dir for a query that threw.
 """
 import json, math, sys, glob, os
 import duckdb
@@ -60,6 +61,8 @@ def main(sf_dir, out_dir):
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     n_pass = n_fail = n_noora = 0
+    for name in sorted(set(oracle) - set(names)):
+        print(f"FAIL {name}: no spark output"); n_fail += 1
     for name in names:
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         if not files:
