@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Codegen'd dot product of two `array<double>` columns.
   *
@@ -59,169 +60,81 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** SparkSessionExtensions entry point: enables graft's custom
-  * expressions in ANY session via
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * (or a session builder's `withExtensions(new GraftExtensions)`), so
-  * `SELECT graft_dot(a, b)` works from plain SQL with no code change.
+/** SparkSessionExtensions entry point: puts [[GraftFunctions.catalogue]]
+  * in a session's function registry when the session is built, so
+  * `SELECT graft_dot(a, b)` works from plain SQL, in that session and in
+  * each `newSession()` of it. [[graft.GraftSession.local]] builds every
+  * graft session with `withExtensions(new GraftExtensions)`; any other
+  * session can take `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
+  *
+  * It injects no optimizer rule. [[graft.plans.SortThroughProject]]
+  * reaches a session only through its `install`, which puts it in the
+  * `extraOptimizations` batch: the rule's re-prune step is written for
+  * that batch, which runs after ColumnPruning. An injected rule would run
+  * in the operator-optimization batch, a second placement of one rule.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.dotFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.centroidArgmaxFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.centroidCellsFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.bottomKFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.heavyHittersFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.countMinFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.bpeMergeFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.topKFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.gramTopRunFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.lshBucketsFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.hashedVectorFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.pqEncodeFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.pqAdcTableFunctionDescriptor)
-    ext.injectFunction(GraftFunctions.pqAdcSumFunctionDescriptor)
-    ext.injectOptimizerRule(_ => graft.plans.SortThroughProject)
-  }
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.catalogue.foreach(ext.injectFunction)
 }
 
-/** Session registration for graft's custom expressions. */
+/** graft's custom Catalyst functions and their Column helpers. Each
+  * helper calls its function by name, so the session must hold the
+  * catalogue: a session graft builds has it from the start, and every
+  * operator that uses a helper calls [[register]] for other sessions.
+  */
 object GraftFunctions {
 
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+  private type Builder = Seq[Expression] => Expression
 
-  /** (name, info, builder) descriptor used by both the extensions
-    * injection and the imperative registry path.
-    */
-  val dotFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-    (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1)))
-
-  val centroidArgmaxFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_centroid_argmax"),
-    new ExpressionInfo(classOf[CentroidArgmax].getName, "graft_centroid_argmax"),
-    (exprs: Seq[Expression]) => CentroidArgmax(exprs.head, exprs(1), exprs(2)))
-
-  val centroidCellsFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_centroid_cells"),
-    new ExpressionInfo(classOf[CentroidCellsByDist].getName, "graft_centroid_cells"),
-    (exprs: Seq[Expression]) => CentroidCellsByDist(exprs.head, exprs(1)))
-
-  val bottomKFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bottom_k"),
-    new ExpressionInfo(classOf[BottomK].getName, "graft_bottom_k"),
-    BottomK.fromExprs _)
-
-  val heavyHittersFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_heavy_hitters"),
-    new ExpressionInfo(classOf[HeavyHitters].getName, "graft_heavy_hitters"),
-    HeavyHitters.fromExprs _)
-
-  val countMinFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_count_min"),
-    new ExpressionInfo(classOf[CountMinSketch].getName, "graft_count_min"),
-    CountMinSketch.fromExprs _)
-
-  val bpeMergeFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_bpe_merge"),
-    new ExpressionInfo(classOf[BpeMergePair].getName, "graft_bpe_merge"),
-    (exprs: Seq[Expression]) => BpeMergePair(exprs.head, exprs(1), exprs(2)))
-
-  val topKFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_top_k"),
-    new ExpressionInfo(classOf[TopKScored].getName, "graft_top_k"),
-    TopKScored.fromExprs _)
-
-  val gramTopRunFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_gram_top_run"),
-    new ExpressionInfo(classOf[GramTopRun].getName, "graft_gram_top_run"),
-    (exprs: Seq[Expression]) => GramTopRun(exprs.head, exprs(1)))
-
-  val lshBucketsFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_lsh_buckets"),
-    new ExpressionInfo(classOf[LshBuckets].getName, "graft_lsh_buckets"),
-    (exprs: Seq[Expression]) => LshBuckets(exprs.head, exprs(1), exprs(2)))
-
-  val hashedVectorFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hashed_vector"),
-    new ExpressionInfo(classOf[HashedVector].getName, "graft_hashed_vector"),
-    (exprs: Seq[Expression]) => HashedVector(exprs.head, exprs(1)))
-
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.sql.types.IntegerType
+  private def fn(name: String, cls: Class[_])(build: Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
   private def litInt(e: Expression, usage: String): Int = e match {
     case Literal(i: Int, IntegerType) => i
     case _ => throw new IllegalArgumentException(usage)
   }
 
-  val pqEncodeFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_pq_encode"),
-    new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-    (exprs: Seq[Expression]) => PqEncode(exprs.head, exprs(1),
-      litInt(exprs(2), "usage: graft_pq_encode(vec, codebooks, <literal int m>)")))
+  /** The one list of graft's functions, as (name, info, builder):
+    * [[GraftExtensions]] injects it and [[register]] registers it.
+    */
+  val catalogue: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("graft_dot", classOf[DotProduct])(e => DotProduct(e.head, e(1))),
+    fn("graft_centroid_argmax", classOf[CentroidArgmax])(
+      e => CentroidArgmax(e.head, e(1), e(2))),
+    fn("graft_centroid_cells", classOf[CentroidCellsByDist])(
+      e => CentroidCellsByDist(e.head, e(1))),
+    fn("graft_bottom_k", classOf[BottomK])(BottomK.fromExprs),
+    fn("graft_heavy_hitters", classOf[HeavyHitters])(HeavyHitters.fromExprs),
+    fn("graft_count_min", classOf[CountMinSketch])(CountMinSketch.fromExprs),
+    fn("graft_bpe_merge", classOf[BpeMergePair])(e => BpeMergePair(e.head, e(1), e(2))),
+    fn("graft_top_k", classOf[TopKScored])(TopKScored.fromExprs),
+    fn("graft_gram_top_run", classOf[GramTopRun])(e => GramTopRun(e.head, e(1))),
+    fn("graft_lsh_buckets", classOf[LshBuckets])(e => LshBuckets(e.head, e(1), e(2))),
+    fn("graft_hashed_vector", classOf[HashedVector])(e => HashedVector(e.head, e(1))),
+    fn("graft_pq_encode", classOf[PqEncode])(e => PqEncode(e.head, e(1),
+      litInt(e(2), "usage: graft_pq_encode(vec, codebooks, <literal int m>)"))),
+    fn("graft_pq_adc_table", classOf[PqAdcTable])(e => PqAdcTable(e.head, e(1),
+      litInt(e(2), "usage: graft_pq_adc_table(vec, codebooks, <literal int m>)"))),
+    fn("graft_pq_adc_sum", classOf[PqAdcSum])(e => PqAdcSum(e.head, e(1),
+      litInt(e(2), "usage: graft_pq_adc_sum(dtab, codes, <literal int ksub>)"))))
 
-  val pqAdcTableFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_pq_adc_table"),
-    new ExpressionInfo(classOf[PqAdcTable].getName, "graft_pq_adc_table"),
-    (exprs: Seq[Expression]) => PqAdcTable(exprs.head, exprs(1),
-      litInt(exprs(2), "usage: graft_pq_adc_table(vec, codebooks, <literal int m>)")))
-
-  val pqAdcSumFunctionDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_pq_adc_sum"),
-    new ExpressionInfo(classOf[PqAdcSum].getName, "graft_pq_adc_sum"),
-    (exprs: Seq[Expression]) => PqAdcSum(exprs.head, exprs(1),
-      litInt(exprs(2), "usage: graft_pq_adc_sum(dtab, codes, <literal int ksub>)")))
-
-  /** Idempotently register graft's functions in the session's registry
-    * (the supported path for wiring custom Catalyst expressions into the
-    * Column API without touching Spark internals).
+  /** Register the catalogue functions the session does not hold yet. On a
+    * session that has them (built with [[GraftExtensions]], or registered
+    * before) it writes nothing to the registry and logs nothing.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_centroid_argmax",
-      exprs => CentroidArgmax(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_centroid_cells",
-      exprs => CentroidCellsByDist(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bottom_k", BottomK.fromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters", HeavyHitters.fromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_count_min", CountMinSketch.fromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_merge",
-      exprs => BpeMergePair(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_k", TopKScored.fromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_top_run",
-      exprs => GramTopRun(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_buckets",
-      exprs => LshBuckets(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hashed_vector",
-      exprs => HashedVector(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode", pqEncodeFunctionDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_adc_table", pqAdcTableFunctionDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_adc_sum", pqAdcSumFunctionDescriptor._3, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    catalogue.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 
-  /** Codegen'd dot product (requires [[register]] on the session). */
+  /** Codegen'd dot product. */
   def dotFast(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** Codegen'd max-cosine centroid assignment (requires [[register]]);
-    * centroids sorted by id so ties resolve to the lowest id — see
-    * [[CentroidArgmax]].
+  /** Codegen'd max-cosine centroid assignment; centroids sorted by id
+    * so ties resolve to the lowest id — see [[CentroidArgmax]].
     */
   def centroidArgmax(vec: Column, centroids: Seq[(Int, Array[Double])]): Column = {
     val sorted = centroids.sortBy(_._1)
@@ -231,26 +144,24 @@ object GraftFunctions {
   }
 
   /** All IVF cell ids (0-based matrix row) sorted by squared-distance
-    * score ascending, ties to the lower cell (requires [[register]]) —
-    * see [[CentroidCellsByDist]].
+    * score ascending, ties to the lower cell — see [[CentroidCellsByDist]].
     */
   def centroidCells(vec: Column, centroids: Seq[Array[Double]]): Column =
     call_function("graft_centroid_cells", vec,
       org.apache.spark.sql.functions.typedlit(centroids.map(_.toSeq)))
 
-  /** KMV bottom-k sketch aggregate (requires [[register]]). */
+  /** KMV bottom-k sketch aggregate. */
   def bottomK(c: Column, k: Int): Column =
     call_function("graft_bottom_k", c, org.apache.spark.sql.functions.lit(k))
 
-  /** Misra-Gries heavy-hitters sketch aggregate, k counters (requires
-    * [[register]]) — see [[HeavyHitters]].
+  /** Misra-Gries heavy-hitters sketch aggregate, k counters — see
+    * [[HeavyHitters]].
     */
   def heavyHitters(c: Column, k: Int): Column =
     call_function("graft_heavy_hitters", c, org.apache.spark.sql.functions.lit(k))
 
   /** Count-min sketch aggregate, width×depth counters as one flat array
-    * (requires [[register]]) — see [[CountMinSketch]]. Point-query with
-    * [[countMinQuery]].
+    * — see [[CountMinSketch]]. Point-query with [[countMinQuery]].
     */
   def countMin(c: Column, width: Int, depth: Int): Column =
     call_function("graft_count_min", c,
@@ -266,8 +177,8 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(width),
       org.apache.spark.sql.functions.lit(depth))
 
-  /** One greedy BPE merge application over a symbol array (requires
-    * [[register]]) — see [[BpeMergePair]].
+  /** One greedy BPE merge application over a symbol array — see
+    * [[BpeMergePair]].
     */
   def bpeMerge(symbols: Column, l: String, r: String): Column =
     call_function("graft_bpe_merge", symbols,
@@ -288,15 +199,15 @@ object GraftFunctions {
     if (cells.length == 1) cells.head else least(cells: _*)
   }
 
-  /** Grouped top-k by score, O(k) buffer + map-side partials (requires
-    * [[register]]). Returns sorted array<struct<score, payload>>.
+  /** Grouped top-k by score, O(k) buffer + map-side partials. Returns
+    * sorted array<struct<score, payload>>.
     */
   def topK(score: Column, payload: Column, k: Int): Column =
     call_function("graft_top_k", score, payload,
       org.apache.spark.sql.functions.lit(k))
 
-  /** All multi-table sign-LSH bucket ids, one long per table (requires
-    * [[register]]) — see [[LshBuckets]]. `planes` is the concatenated
+  /** All multi-table sign-LSH bucket ids, one long per table — see
+    * [[LshBuckets]]. `planes` is the concatenated
     * plane bank: table t's planes are rows t·nPlanes .. t·nPlanes+nPlanes−1.
     */
   def lshBuckets(vec: Column, planes: Seq[Array[Double]], nPlanes: Int): Column =
@@ -304,21 +215,19 @@ object GraftFunctions {
       org.apache.spark.sql.functions.typedlit(planes.map(_.toSeq)),
       org.apache.spark.sql.functions.lit(nPlanes))
 
-  /** Signed feature-hashing accumulator over a token-hash array
-    * (requires [[register]]) — see [[HashedVector]].
+  /** Signed feature-hashing accumulator over a token-hash array — see
+    * [[HashedVector]].
     */
   def hashedVector(tokenHashes: Column, dim: Int): Column =
     call_function("graft_hashed_vector", tokenHashes,
       org.apache.spark.sql.functions.lit(dim))
 
-  /** Modal word-n-gram count over a token array (requires [[register]])
-    * — see [[GramTopRun]].
-    */
+  /** Modal word-n-gram count over a token array — see [[GramTopRun]]. */
   def gramTopRun(toks: Column, n: Int): Column =
     call_function("graft_gram_top_run", toks,
       org.apache.spark.sql.functions.lit(n))
 
-  /** PQ code array, m subspaces (requires [[register]]) — see [[PqEncode]].
+  /** PQ code array, m subspaces — see [[PqEncode]].
     * `codebooks` is the m·ksub-row matrix, subspace-major.
     */
   def pqEncode(vec: Column, codebooks: Seq[Array[Double]], m: Int): Column =
@@ -326,15 +235,13 @@ object GraftFunctions {
       org.apache.spark.sql.functions.typedlit(codebooks.map(_.toSeq)),
       org.apache.spark.sql.functions.lit(m))
 
-  /** Per-query ADC distance table (requires [[register]]) — see
-    * [[PqAdcTable]].
-    */
+  /** Per-query ADC distance table — see [[PqAdcTable]]. */
   def pqAdcTable(vec: Column, codebooks: Seq[Array[Double]], m: Int): Column =
     call_function("graft_pq_adc_table", vec,
       org.apache.spark.sql.functions.typedlit(codebooks.map(_.toSeq)),
       org.apache.spark.sql.functions.lit(m))
 
-  /** ADC lookup-sum score (requires [[register]]) — see [[PqAdcSum]]. */
+  /** ADC lookup-sum score — see [[PqAdcSum]]. */
   def pqAdcSum(dtab: Column, codes: Column, ksub: Int): Column =
     call_function("graft_pq_adc_sum", dtab, codes,
       org.apache.spark.sql.functions.lit(ksub))

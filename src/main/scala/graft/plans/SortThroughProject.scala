@@ -143,8 +143,7 @@ object SortThroughProject extends Rule[LogicalPlan] {
 
   /** Idempotently add this rule to an existing session's optimizer (the
     * extraOptimizations batch runs after pruning, so the swapped plan is
-    * final). New sessions can instead use
-    * `spark.sql.extensions=graft.functions.GraftExtensions`.
+    * final). This is the rule's only way into a session.
     */
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(SortThroughProject))
